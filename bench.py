@@ -15,9 +15,11 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import pathlib
 import re
 import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -44,9 +46,10 @@ from quick_and_easy_vectordb_spark.session import get_spark  # noqa: E402
 #     grow linearly, never quadratically;
 #   * events shift event_id and user_id per copy (per-user series and
 #     per-key state stay constant; K times more users).
-# The staged dir is rebuilt (mode=overwrite) on EVERY bench run from
-# the $SPARK_GRAFT_SF_DIR parquet inputs — nothing precomputed
-# survives across invocations. Reported under a separate "tier" key;
+# Every bench run stages into its own fresh temp dir from the
+# $SPARK_GRAFT_SF_DIR parquet inputs and removes it when the tier
+# ends — nothing precomputed survives across invocations, and
+# concurrent runs never share a dir. Reported under a separate "tier" key;
 # the headline value/queries are computed exactly as before.
 # ---------------------------------------------------------------------------
 
@@ -68,13 +71,13 @@ _SHIFT = 10_000_000_000  # key shift per copy — far above any base key
 
 
 def stage_tier_dir(spark, sf_dir: str, k: int) -> str:
+    """Stage ``k`` key-shifted copies of the inputs into a fresh temp
+    directory and return its path; the caller removes it."""
     from pyspark.sql import functions as F
 
     from quick_and_easy_vectordb_spark.sources.catalog import load_table
 
-    out = f"/tmp/qev_bench_tier_x{k}"
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    out = tempfile.mkdtemp(prefix=f"qev_bench_tier_x{k}_")
 
     def shifted(name: str, keys: dict[str, int], extra=None):
         base = load_table(spark, sf_dir, name)
@@ -106,20 +109,25 @@ def stage_tier_dir(spark, sf_dir: str, k: int) -> str:
     def shift_label(df, i):
         return df.withColumn("label", F.col("label") + F.lit(i * 100))
 
-    shifted("lineitem", {"l_orderkey": 1, "l_partkey": 2, "l_suppkey": 3})
-    shifted("orders", {"o_orderkey": 1, "o_custkey": 4})
-    shifted("customer", {"c_custkey": 4})
-    shifted("supplier", {"s_suppkey": 3})
-    shifted("part", {"p_partkey": 2})
-    # dims stay single-copy (nationkey/regionkey are unshifted on the
-    # fact side, so one copy serves every shifted copy's joins)
-    for dim in ("nation", "region"):
-        load_table(spark, sf_dir, dim).write.mode("overwrite").parquet(
-            os.path.join(out, f"{dim}.parquet")
-        )
-    shifted("documents", {"doc_id": 5}, extra=tag_text)
-    shifted("embeddings", {"vec_id": 6}, extra=shift_label)
-    shifted("events", {"event_id": 7, "user_id": 8})
+    try:
+        shifted("lineitem", {"l_orderkey": 1, "l_partkey": 2, "l_suppkey": 3})
+        shifted("orders", {"o_orderkey": 1, "o_custkey": 4})
+        shifted("customer", {"c_custkey": 4})
+        shifted("supplier", {"s_suppkey": 3})
+        shifted("part", {"p_partkey": 2})
+        # dims stay single-copy (nationkey/regionkey are unshifted on the
+        # fact side, so one copy serves every shifted copy's joins)
+        for dim in ("nation", "region"):
+            load_table(spark, sf_dir, dim).write.mode("overwrite").parquet(
+                os.path.join(out, f"{dim}.parquet")
+            )
+        shifted("documents", {"doc_id": 5}, extra=tag_text)
+        shifted("embeddings", {"vec_id": 6}, extra=shift_label)
+        shifted("events", {"event_id": 7, "user_id": 8})
+    except BaseException:
+        # a failed or interrupted staging run leaves no copy behind
+        shutil.rmtree(out, ignore_errors=True)
+        raise
     return out
 
 
@@ -347,23 +355,25 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 — tier is additive only
             tier_errors["__stage__"] = f"{type(e).__name__}: {e}"[:500]
         else:
-            for name in TIER_QUERIES:
-                if name not in bench_queries or name in errors:
-                    continue
-                if time.perf_counter() - t_start > tier_budget:
-                    tier_skipped.append(name)
-                    continue
-                try:
-                    runs, _, _ = time_query(
-                        bench_queries[name], 2, per_repeat_wait,
-                        data_dir=tier_dir,
-                    )
-                except Exception as e:  # noqa: BLE001
-                    tier_errors[name] = f"{type(e).__name__}: {e}"[:500]
-                    continue
-                tier[name] = round(min(runs), 4)
-                tier_runs[name] = [round(r, 4) for r in runs]
-            shutil.rmtree(tier_dir, ignore_errors=True)
+            try:
+                for name in TIER_QUERIES:
+                    if name not in bench_queries or name in errors:
+                        continue
+                    if time.perf_counter() - t_start > tier_budget:
+                        tier_skipped.append(name)
+                        continue
+                    try:
+                        runs, _, _ = time_query(
+                            bench_queries[name], 2, per_repeat_wait,
+                            data_dir=tier_dir,
+                        )
+                    except Exception as e:  # noqa: BLE001
+                        tier_errors[name] = f"{type(e).__name__}: {e}"[:500]
+                        continue
+                    tier[name] = round(min(runs), 4)
+                    tier_runs[name] = [round(r, 4) for r in runs]
+            finally:
+                shutil.rmtree(tier_dir, ignore_errors=True)
 
     calib_post = run_calib()
     calib_1t_s = round(min(calib_pre[0], calib_post[0]), 4)
@@ -431,7 +441,7 @@ def main() -> None:
                 # content hash of this file (VERDICT r14 item 8) so
                 # harness changes are machine-checkable across rounds
                 "bench_sha": hashlib.sha256(
-                    open(os.path.abspath(__file__), "rb").read()
+                    pathlib.Path(__file__).resolve().read_bytes()
                 ).hexdigest()[:16],
                 "calib_1t_s": calib_1t_s,
                 "calib_32t_s": calib_32t_s,

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from quick_and_easy_vectordb_spark.functions.text import normalized_text, word_shingles
 from quick_and_easy_vectordb_spark.functions.vector import cosine_similarity
-from quick_and_easy_vectordb_spark.operators.util import carry_splits, ensure_parallelism
+from quick_and_easy_vectordb_spark.operators.util import ensure_parallelism
 
 __all__ = [
     "exact_dedup",
@@ -79,7 +79,7 @@ def shingle_table(
     downstream uses every core regardless of input split count.
     """
     return ensure_parallelism(
-        carry_splits(df, df.select(F.col(id_col).alias("id"), F.col(text_col)))
+        df.select(F.col(id_col).alias("id"), F.col(text_col))
     ).select("id", F.explode(word_shingles(text_col, shingle_words)).alias("shingle"))
 
 

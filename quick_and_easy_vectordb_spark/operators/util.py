@@ -4,15 +4,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 # Treat absurd plan-stat estimates (missing stats degrade to multi-PB
 # placeholders) as unknown rather than requesting millions of partitions.
 _STATS_UNKNOWN_BYTES = 1 << 50
-
-# ensure_parallelism fallback memo: semanticHash -> scan partition
-# count (perf-only; see the comment inside ensure_parallelism).
-_PARTN_MEMO: dict[int, int] = {}
 
 
 def scaled_shuffle_partitions(
@@ -50,21 +46,60 @@ def scaled_shuffle_partitions(
     return n if n > default else None
 
 
-def carry_splits(src: DataFrame, derived: DataFrame) -> DataFrame:
-    """Propagate the catalog's scan-split estimate from ``src`` onto a
-    NARROW derivation of it (select/filter/withColumn — transforms that
-    cannot change the scan's partition count), so a following
-    ``ensure_parallelism`` keeps the RDD-free fast path. Returns
-    ``derived``."""
-    n = getattr(src, "_qev_scan_splits", None)
-    if n is not None:
-        derived._qev_scan_splits = n
-    return derived
+def _size_conf(v: str) -> int:
+    """Parse a Spark byte-size conf value ('134217728b', '128m',
+    '1g', ...) into bytes."""
+    v = v.strip().lower()
+    for suf, m in (("pb", 1 << 50), ("tb", 1 << 40), ("gb", 1 << 30),
+                   ("mb", 1 << 20), ("kb", 1 << 10), ("p", 1 << 50),
+                   ("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20),
+                   ("k", 1 << 10), ("b", 1)):
+        if v.endswith(suf):
+            return int(float(v[: -len(suf)]) * m)
+    return int(v)
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def _scan_splits(spark: SparkSession, size: int) -> int:
+    """Scan partition count of a file source of ``size`` bytes — Spark's
+    own split formula (FilePartition.maxSplitBytes), evaluated in pure
+    Python against the session's current conf. Non-decreasing in
+    ``size``."""
+    max_split = _size_conf(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
+    )
+    open_cost = _size_conf(
+        spark.conf.get("spark.sql.files.openCostInBytes", "4194304b")
+    )
+    core_bytes = (size + open_cost) // max(
+        spark.sparkContext.defaultParallelism, 1
+    )
+    split = min(max_split, max(open_cost, core_bytes))
+    return max(1, -(-size // split))
+
+
+def plan_scan_splits(df: DataFrame) -> int:
+    """Scan partition count of ``df``'s widest file-scan leaf: the split
+    formula applied to the largest ``LogicalRelation`` leaf of the
+    optimized plan (the formula is non-decreasing in size, so that leaf
+    is the widest). A plan with no file-scan leaf counts as one split.
+
+    Plan-time only — no RDD conversion, no job. The leaves survive any
+    select/filter/join on top of the scan, so every derived frame gets
+    the same answer as the scan itself. A union counts its widest scan,
+    not the sum of its inputs' partitions: a single-split scan unioned
+    with a few generated rows is still one split of real work."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
+    size = 0
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            size = max(size, int(leaf.stats().sizeInBytes()))
+    return _scan_splits(df.sparkSession, size) if size else 1
+
+
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition a DataFrame up to the cluster's default
-    parallelism if it currently has fewer partitions.
+    parallelism if its scan has fewer splits (``plan_scan_splits``).
 
     Why: a small parquet table arrives as a single input split, so a
     CPU-heavy projection chain (md5 shingling, signature computation)
@@ -73,32 +108,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     (never repartitions downward); on small inputs it buys full CPU
     fan-out for one tiny shuffle of the input rows.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
-    # Fast path (round-15): load_table stamps its analytic split-count
-    # estimate on the DataFrame (catalog._scan_splits — Spark's own
-    # file-split formula, pure Python; carry_splits propagates it over
-    # narrow derivations). Falling back to df.rdd costs a plan-time RDD
-    # conversion (~30 ms/call measured on this sandbox's py4j) — real
-    # serial driver time at ~60 call sites (guide §1.2). For fallback
-    # sites the count is memoized per semanticHash: repeat plan builds
-    # (bench repeats, sweep re-runs) skip the conversion. Stale or
-    # hash-colliding memo entries can only flip the repartition
-    # DECISION — never rows — and the memo is bounded.
-    current = getattr(df, "_qev_scan_splits", None)
-    if current is None:
-        key = None
-        try:
-            key = df.semanticHash()
-        except Exception:  # noqa: BLE001 — memo is best-effort
-            pass
-        current = _PARTN_MEMO.get(key) if key is not None else None
-        if current is None:
-            current = df.rdd.getNumPartitions()
-            if key is not None:
-                if len(_PARTN_MEMO) >= 512:
-                    _PARTN_MEMO.clear()
-                _PARTN_MEMO[key] = current
-    if current < target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if plan_scan_splits(df) < target:
         return df.repartition(target)
     return df

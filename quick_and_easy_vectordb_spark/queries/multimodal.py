@@ -22,7 +22,7 @@ from quick_and_easy_vectordb_spark.operators.multimodal import (
     with_binary_payload,
     sample_frames,
 )
-from quick_and_easy_vectordb_spark.operators.util import carry_splits, ensure_parallelism
+from quick_and_easy_vectordb_spark.operators.util import ensure_parallelism
 from quick_and_easy_vectordb_spark.queries.registry import query
 from quick_and_easy_vectordb_spark.sources.catalog import load_table
 
@@ -35,14 +35,14 @@ def _scan_docs(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
     a small table arrives as ONE input split, which would serialize
     the decode work on one core no matter how many exist. At 100 TB
     the scan has thousands of splits and ``ensure_parallelism`` is a
-    no-op; on a single-split table it buys full fan-out for one tiny
-    round-robin exchange of the pruned id/text columns — the heavy
-    payload bytes are synthesized AFTER the exchange, so nothing
-    data-sized crosses the wire (round-14 measurement: the mjpeg
-    decode ran 1-partition/1-core, 3.9 s isolated, pure Python CPU
-    ~0.85 ms/doc x 5000 docs; scattered it is bounded by CPU/32)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return ensure_parallelism(carry_splits(docs, docs.select(*cols)))
+    no-op. It reads the split count off the plan's scan leaf, so
+    pruning first costs nothing: the round-robin exchange moves only
+    the pruned id/text columns, and the heavy payload bytes are
+    synthesized AFTER it, so nothing data-sized crosses the wire
+    (round-14 measurement: the mjpeg decode ran 1-partition/1-core,
+    3.9 s isolated, pure Python CPU ~0.85 ms/doc x 5000 docs;
+    scattered it is bounded by CPU/32)."""
+    return ensure_parallelism(load_table(spark, sf_dir, "documents").select(*cols))
 
 
 @query(

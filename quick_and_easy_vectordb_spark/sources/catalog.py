@@ -41,38 +41,18 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _SCAN_META: dict[tuple, tuple] = {}
 
 
-def _size_conf(v: str) -> int:
-    """Parse a Spark byte-size conf value ('134217728b', '128m',
-    '1g', ...) into bytes."""
-    v = v.strip().lower()
-    for suf, m in (("pb", 1 << 50), ("tb", 1 << 40), ("gb", 1 << 30),
-                   ("mb", 1 << 20), ("kb", 1 << 10), ("p", 1 << 50),
-                   ("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20),
-                   ("k", 1 << 10), ("b", 1)):
-        if v.endswith(suf):
-            return int(float(v[: -len(suf)]) * m)
-    return int(v)
-
-
-def _scan_splits(spark: SparkSession, size: int) -> int:
-    """Estimated scan partition count for a single parquet file of
-    ``size`` bytes — Spark's own split formula (FilePartition), reused
-    here so ``ensure_parallelism`` can decide to fan out WITHOUT a
-    plan-time RDD conversion (df.rdd.getNumPartitions measured ~30 ms
-    per call on this sandbox's py4j; the formula is pure Python).
-    ±1 partition of packing nuance is irrelevant to the decision:
-    small files estimate 1, big files estimate >= cores."""
-    max_split = _size_conf(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
+def _infer_meta(spark: SparkSession, path: str, name: str) -> tuple:
+    """(schema, ts_is_long, ntz_cols) of the parquet at ``path``."""
+    schema = spark.read.parquet(path).schema
+    ts_is_long = name == "events" and isinstance(
+        schema["ts"].dataType, T.LongType
     )
-    open_cost = _size_conf(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4194304b")
+    ntz_cols = tuple(
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, T.TimestampNTZType)
     )
-    core_bytes = (size + open_cost) // max(
-        spark.sparkContext.defaultParallelism, 1
-    )
-    split = min(max_split, max(open_cost, core_bytes))
-    return max(1, -(-size // split))
+    return schema, ts_is_long, ntz_cols
 
 
 def _scan_meta(spark: SparkSession, path: str, name: str) -> tuple:
@@ -80,16 +60,7 @@ def _scan_meta(spark: SparkSession, path: str, name: str) -> tuple:
     key = (path, st.st_mtime_ns, st.st_size)
     hit = _SCAN_META.get(key)
     if hit is None:
-        schema = spark.read.parquet(path).schema
-        ts_is_long = name == "events" and isinstance(
-            schema["ts"].dataType, T.LongType
-        )
-        ntz_cols = tuple(
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, T.TimestampNTZType)
-        )
-        hit = (schema, ts_is_long, ntz_cols, _scan_splits(spark, st.st_size))
+        hit = _infer_meta(spark, path, name)
         if len(_SCAN_META) >= 512:  # bound (ADVICE r14): keyed on file
             _SCAN_META.clear()      # identity, rewrites accumulate
         _SCAN_META[key] = hit
@@ -120,23 +91,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if not os.path.isfile(path):
+    if os.path.isfile(path):
+        schema, ts_is_long, ntz_cols = _scan_meta(spark, path, name)
+    else:
         # directory-shaped tables (not produced by the fixture
         # generator, but possible for caller-supplied dirs): no stable
         # single-file identity to key the metadata cache on — take the
         # uncached inference path.
-        schema = spark.read.parquet(path).schema
-        ts_is_long = name == "events" and isinstance(
-            schema["ts"].dataType, T.LongType
-        )
-        ntz_cols = tuple(
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, T.TimestampNTZType)
-        )
-        splits = None
-    else:
-        schema, ts_is_long, ntz_cols, splits = _scan_meta(spark, path, name)
+        schema, ts_is_long, ntz_cols = _infer_meta(spark, path, name)
     df = spark.read.schema(schema).parquet(path)
     if ts_is_long:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -149,10 +111,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # whole engine independent of the writer's isAdjustedToUTC choice.
     for c in ntz_cols:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if splits is not None:
-        # plan-time hint for operators/util.py:ensure_parallelism —
-        # saves a ~30 ms df.rdd round trip per call (round-15)
-        df._qev_scan_splits = splits
     return df
 
 

@@ -2,11 +2,12 @@
 
 Each test pins an equivalence the round-15 rewrites rely on:
 
-- catalog._scan_splits (the analytic split-count estimate that lets
-  ensure_parallelism skip a plan-time RDD conversion) must agree with
-  Spark's actual scan partitioning for every fixture table;
-- ensure_parallelism must honor the stamped estimate (fan out a
-  single-split scan, leave an already-parallel one alone);
+- util.plan_scan_splits (the split count ensure_parallelism derives
+  from the plan's file-scan leaves, with no RDD conversion) must agree
+  with Spark's actual scan partitioning for every fixture table and
+  for frames derived from a scan;
+- ensure_parallelism must fan out a single-split scan and leave an
+  already-parallel one alone;
 - text_fingerprint's min-md5 FOLD must equal the round-14
   array_min(transform(char_shingles)) formulation on every edge case;
 - mm_blob_labeling's per-image union-find must reproduce the
@@ -26,8 +27,8 @@ from quick_and_easy_vectordb_spark.functions.text import (
     normalized_text,
 )
 from quick_and_easy_vectordb_spark.operators.util import (
-    carry_splits,
     ensure_parallelism,
+    plan_scan_splits,
 )
 from quick_and_easy_vectordb_spark.sources.catalog import (
     TABLES,
@@ -37,33 +38,43 @@ from quick_and_easy_vectordb_spark.sources.catalog import (
 SF_DIR = "/root/testdata/sf0.01"
 
 
-def test_scan_splits_estimate_matches_actual(spark):
+def test_plan_scan_splits_matches_actual(spark):
     import os
 
     for name in TABLES:
         if not os.path.isfile(os.path.join(SF_DIR, f"{name}.parquet")):
             continue
         df = load_table(spark, SF_DIR, name)
-        est = getattr(df, "_qev_scan_splits", None)
-        assert est is not None, f"{name}: no split estimate stamped"
-        assert est == df.rdd.getNumPartitions(), name
+        assert plan_scan_splits(df) == df.rdd.getNumPartitions(), name
+    li = load_table(spark, SF_DIR, "lineitem")
+    part = load_table(spark, SF_DIR, "part")
+    derived = {
+        "filter": li.filter(F.col("l_quantity") > 10),
+        "select": li.select("l_orderkey", "l_partkey"),
+        "broadcast join": li.join(
+            F.broadcast(part), li.l_partkey == part.p_partkey
+        ),
+    }
+    for shape, df in derived.items():
+        assert plan_scan_splits(df) == df.rdd.getNumPartitions(), shape
 
 
-def test_ensure_parallelism_honors_stamp(spark):
-    df = load_table(spark, SF_DIR, "documents")
+def test_ensure_parallelism_follows_plan_splits(spark):
     target = spark.sparkContext.defaultParallelism
-    out = ensure_parallelism(df)
-    if getattr(df, "_qev_scan_splits") < target:
-        assert out.rdd.getNumPartitions() == target
-    # carry_splits propagates over a narrow derivation
-    derived = carry_splits(df, df.select("doc_id"))
-    assert getattr(derived, "_qev_scan_splits") == getattr(
-        df, "_qev_scan_splits"
-    )
-    # a stamped already-parallel frame is returned untouched
-    wide = df.select("doc_id")
-    wide._qev_scan_splits = target + 7
-    assert ensure_parallelism(wide) is wide
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id")
+    assert plan_scan_splits(docs) == 1
+    assert ensure_parallelism(docs).rdd.getNumPartitions() == target
+    # an already-parallel scan is returned untouched; shrinking the
+    # split size widens lineitem, so the count must follow the conf
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "64k")
+        li = load_table(spark, SF_DIR, "lineitem")
+        assert plan_scan_splits(li) == li.rdd.getNumPartitions() >= target
+        assert ensure_parallelism(li) is li
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_fingerprint_fold_equals_array_min_formulation(spark):

@@ -57,13 +57,9 @@ def profile(spark, name: str, runs: int) -> None:
         df = qd.fn(spark, SF_DIR)
         df.write.mode("overwrite").format("noop").save()
         walls.append(time.perf_counter() - t0)
-    # the query fn ran its stream to completion; grab the most recent
-    # terminated query's progress from the session's stream manager
-    last = None
-    for q in spark.streams.active:  # availableNow queries are done
-        last = q
-    # terminated queries aren't in .active — use the listener-free
-    # fallback: qd.fn keeps no handle, so re-run once and capture
+    # the query fn ran its stream to completion and keeps no handle,
+    # and terminated queries aren't in spark.streams.active: re-run
+    # once and capture the query as it is awaited
     spark.catalog.clearCache()
     holder = {}
     orig_await = None
