@@ -16,6 +16,14 @@ compile into whole-stage-codegen'd ``transform``/``zip_with``/
 ``aggregate`` expressions — no Python in the hot path, no UDF
 serialization, fully columnar under Parquet + Tungsten.
 
+Plan-build cost: pass operands as column names and float sequences,
+not Column objects. A name or a sequence lets each scorer build its
+whole expression from ONE SQL string (one py4j call); a Column operand
+makes it compose the tree with Column operators instead, roughly 10
+py4j calls per lambda (cosine builds seven to ten lambdas). A literal
+sequence is inlined with exact binary64 values, so both forms score
+bitwise identically.
+
 Scale note: per-row O(d) arithmetic inside codegen is embarrassingly
 parallel and shuffle-free; at 100 TB the only cost that matters is the
 scan itself, which is why callers must select only the vector + key
@@ -25,6 +33,7 @@ out of queries that don't score).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -41,17 +50,25 @@ __all__ = [
 ]
 
 
+def _double_sql(x: float) -> str:
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
 def vector_literal_sql(values: Sequence[float]) -> str:
     """The SQL text of a constant ``array<double>``. Literals go
     through CAST('<repr>' AS DOUBLE): repr() is shortest-roundtrip, so
     the parse reproduces the exact binary64 values (the same rule
     operators/ann.py lsh_signature documents — a bare SQL decimal
     literal would parse as DECIMAL and re-round)."""
-    return (
-        "array("
-        + ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in values)
-        + ")"
-    )
+    return "array(" + ", ".join(_double_sql(v) for v in values) + ")"
+
+
+def dot_product_sql(a: str, b: str) -> str:
+    """The SQL text of ⟨a,b⟩ for two operands given as SQL text (a
+    quoted column name, :func:`vector_literal_sql`, ...). The one
+    definition of the fold: :func:`dot_product` parses it, and
+    operators/ann.py lsh_signature concatenates it into CASE terms."""
+    return _DOT_SQL.format(a, b)
 
 
 def vector_literal(values: Sequence[float]) -> Column:
@@ -63,6 +80,10 @@ def vector_literal(values: Sequence[float]) -> Column:
     trips (~2.7 ms each on this class of sandbox, measured round 14)
     for the identical literal array."""
     return F.expr(vector_literal_sql(values))
+
+
+def _is_literal(x) -> bool:
+    return isinstance(x, Sequence) and not isinstance(x, str)
 
 
 def _sql_operand(x) -> str | None:
@@ -79,7 +100,7 @@ def _sql_operand(x) -> str | None:
         # resolve differently from F.col(name); quoting pins column
         # semantics while keeping the single-parse path.
         return f"`{x}`"
-    if isinstance(x, Sequence) and not isinstance(x, str):
+    if _is_literal(x):
         return vector_literal_sql(x)
     return None
 
@@ -112,21 +133,35 @@ _NORM_SQL = (
 )
 
 
+def _as_column(x: Column | str | Sequence[float]) -> Column:
+    if isinstance(x, Column):
+        return x
+    return F.col(x) if isinstance(x, str) else vector_literal(x)
+
+
+def _literal_norm(values: Sequence[float]) -> float:
+    """‖values‖₂ folded in Python exactly as the SQL fold does it:
+    left to right, ``acc + v*v`` from 0.0, then a correctly rounded
+    sqrt, so it is bitwise the value Spark would compute per row."""
+    acc = 0.0
+    for v in values:
+        acc = acc + float(v) * float(v)
+    return math.sqrt(acc)
+
+
 def dot_product(a: Column | str, b: Column | str | Sequence[float]) -> Column:
     """Raw inner product ⟨a,b⟩ — the reference's similarity
-    (/root/reference/app.py:45). ``zip_with`` multiplies element-wise,
+    (reference app.py:45). ``zip_with`` multiplies element-wise,
     ``aggregate`` folds left-to-right with a double accumulator, which
     fixes a deterministic summation order (important for oracle-exact
-    comparisons). Name/literal operands take a single-parse SQL path
-    (one py4j call instead of ~10 + lambdas — round-14 plan-build
-    optimization); Column operands compose the identical expression."""
+    comparisons). Pass column names and float sequences: they take the
+    single-parse SQL path, one py4j call for the whole expression. A
+    Column operand composes the identical expression from Column
+    operators, roughly 10 py4j calls per lambda."""
     sa, sb = _sql_operand(a), _sql_operand(b)
     if sa is not None and sb is not None:
-        return F.expr(_DOT_SQL.format(sa, sb))
-    a = F.col(a) if isinstance(a, str) else a
-    b = vector_literal(b) if not isinstance(b, (Column, str)) else (
-        F.col(b) if isinstance(b, str) else b
-    )
+        return F.expr(dot_product_sql(sa, sb))
+    a, b = _as_column(a), _as_column(b)
     return F.aggregate(
         F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
         F.lit(0.0),
@@ -139,7 +174,7 @@ def l2_norm(a: Column | str) -> Column:
     sa = _sql_operand(a)
     if sa is not None:
         return F.expr(_NORM_SQL.format(sa))
-    a = F.col(a) if isinstance(a, str) else a
+    a = _as_column(a)
     return F.sqrt(
         F.aggregate(_as_double(a), F.lit(0.0), lambda acc, v: acc + v * v)
     )
@@ -154,10 +189,7 @@ def l2_distance(a: Column | str, b: Column | str | Sequence[float]) -> Column:
             + _AS_DOUBLE_SQL.format(sa) + ", " + _AS_DOUBLE_SQL.format(sb)
             + ", (x, y) -> (x - y) * (x - y)), 0.0D, (acc, v) -> acc + v))"
         )
-    a = F.col(a) if isinstance(a, str) else a
-    b = vector_literal(b) if not isinstance(b, (Column, str)) else (
-        F.col(b) if isinstance(b, str) else b
-    )
+    a, b = _as_column(a), _as_column(b)
     return F.sqrt(
         F.aggregate(
             F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y)),
@@ -167,22 +199,68 @@ def l2_distance(a: Column | str, b: Column | str | Sequence[float]) -> Column:
     )
 
 
+# Lambda variables binding each operand's sum of squares in the cosine
+# finish lambdas; the operands' SQL text sits inside those lambdas, so
+# the names must not be ones a column could plausibly carry.
+_COS_SUMSQ = ("__qev_cos_a2", "__qev_cos_b2")
+
+
 def cosine_similarity(a: Column | str, b: Column | str | Sequence[float]) -> Column:
-    """cos(a,b) = ⟨a,b⟩ / (‖a‖·‖b‖). NULL when either norm is 0."""
+    """cos(a,b) = ⟨a,b⟩ / (‖a‖·‖b‖). NULL when ‖a‖·‖b‖ is 0.
+
+    Each norm is computed once per row: the sum of squares is folded
+    by ``aggregate`` and the score is that fold's finish lambda,
+    ``CASE WHEN ‖a‖·‖b‖ != 0 THEN ⟨a,b⟩ / (‖a‖·‖b‖) END`` (Spark
+    shares no subexpression across CASE branches, so writing the norms
+    inline would fold each twice). A literal sequence's norm is folded
+    once per call, in Python, with the same operations and order, and
+    inlined as a constant: a literal query costs two folds per row,
+    the dot and the row's norm. Scores are bitwise those of the inline
+    formula. Pass column names and float sequences: they take the
+    single-parse SQL path, one py4j call for the whole expression. A
+    Column operand composes the identical expression from Column
+    operators, roughly 10 py4j calls per lambda (seven to ten here)."""
     sa, sb = _sql_operand(a), _sql_operand(b)
     if sa is not None and sb is not None:
-        dot = _DOT_SQL.format(sa, sb)
-        na, nb = _NORM_SQL.format(sa), _NORM_SQL.format(sb)
-        return F.expr(
-            f"CASE WHEN ({na} * {nb}) != 0.0D "
-            f"THEN {dot} / ({na} * {nb}) END"
+
+        def with_norm_sql(x, sx: str, var: str, finish) -> str:
+            if _is_literal(x):
+                return finish(_double_sql(_literal_norm(x)))
+            return (
+                f"aggregate({_AS_DOUBLE_SQL.format(sx)}, 0.0D, "
+                f"(acc, v) -> acc + v * v, {var} -> {finish(f'sqrt({var})')})"
+            )
+
+        def score_sql(na: str, nb: str) -> str:
+            denom = f"({na} * {nb})"
+            return (
+                f"CASE WHEN {denom} != 0.0D "
+                f"THEN {dot_product_sql(sa, sb)} / {denom} END"
+            )
+
+        va, vb = _COS_SUMSQ
+        expr = with_norm_sql(
+            a, sa, va,
+            lambda na: with_norm_sql(b, sb, vb, lambda nb: score_sql(na, nb)),
         )
-    a = F.col(a) if isinstance(a, str) else a
-    b = vector_literal(b) if not isinstance(b, (Column, str)) else (
-        F.col(b) if isinstance(b, str) else b
-    )
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom != 0.0, dot_product(a, b) / denom)
+        return F.expr(expr)
+
+    def score(na: Column, nb: Column) -> Column:
+        denom = na * nb
+        return F.when(denom != 0.0, dot_product(a, b) / denom)
+
+    def with_norm(x, finish):
+        """``finish(‖x‖)``, with a column's norm bound by its fold."""
+        if _is_literal(x):
+            return finish(F.lit(_literal_norm(x)))
+        return F.aggregate(
+            _as_double(_as_column(x)),
+            F.lit(0.0),
+            lambda acc, v: acc + v * v,
+            lambda s2: finish(F.sqrt(s2)),
+        )
+
+    return with_norm(a, lambda na: with_norm(b, lambda nb: score(na, nb)))
 
 
 def parse_vector(col: Column | str) -> Column:

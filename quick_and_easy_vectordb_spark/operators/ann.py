@@ -29,7 +29,9 @@ from pyspark.sql import functions as F
 
 from quick_and_easy_vectordb_spark.functions.vector import (
     dot_product,
+    dot_product_sql,
     vector_literal,
+    vector_literal_sql,
 )
 
 __all__ = [
@@ -92,24 +94,14 @@ def lsh_signature(vec_col: Column | str, num_planes: int, dim: int) -> Column:
         return F.concat(*bits)
     if dim > 32:
         # Wide vectors: the same zip_with/aggregate fold the Column
-        # path builds, but assembled as ONE SQL string (round-14: the
-        # Column assembly costs ~P·10 py4j round trips at ~2.7 ms each
-        # on this sandbox). Bitwise identical — identical expression.
-        from quick_and_easy_vectordb_spark.functions.vector import (
-            vector_literal_sql,
-        )
-
-        def fold_dot(j: int) -> str:
-            lit = vector_literal_sql(hyperplane(j, dim))
-            return (
-                f"aggregate(zip_with(transform({vec_col}, x -> "
-                f"CAST(x AS DOUBLE)), transform({lit}, x -> "
-                f"CAST(x AS DOUBLE)), (x, y) -> x * y), 0.0D, "
-                f"(acc, v) -> acc + v)"
-            )
-
+        # path builds, but assembled as ONE SQL string (the Column
+        # assembly costs ~P·10 py4j round trips). Bitwise identical —
+        # identical expression.
+        col = f"`{vec_col}`"
         bits = [
-            f"(CASE WHEN ({fold_dot(j)}) >= 0 THEN '1' ELSE '0' END)"
+            "(CASE WHEN ("
+            + dot_product_sql(col, vector_literal_sql(hyperplane(j, dim)))
+            + ") >= 0 THEN '1' ELSE '0' END)"
             for j in range(num_planes)
         ]
         return F.expr("CONCAT(" + ", ".join(bits) + ")")

@@ -18,6 +18,14 @@ by ascending id. The reference's pandas quicksort is unstable so its
 tie order is nondeterministic (SURVEY.md §1.4.3 / app.py:48); a
 deterministic rule is required for reproducible results and
 oracle-hash comparison.
+
+Plan build is the request's driver-side cost, so every scorer here is
+called with the vector column's NAME and the query as a plain float
+LIST: the scorers then parse one SQL string per expression (one py4j
+call, whatever the metric or dimension), where Column operands would
+assemble the lambdas one py4j call at a time (roughly 10 per lambda).
+A name that is not a plain identifier falls back to ``F.col`` inside
+the scorer.
 """
 
 from __future__ import annotations
@@ -31,7 +39,6 @@ from quick_and_easy_vectordb_spark.functions.vector import (
     cosine_similarity,
     dot_product,
     l2_distance,
-    vector_literal,
 )
 
 __all__ = [
@@ -61,8 +68,7 @@ def score(
     """Project a similarity/distance score of every row against a
     literal query vector. Returns (scored_df, descending?)."""
     scorer, desc = _METRICS[metric]
-    q = vector_literal(query_vector)
-    return df.withColumn(score_col, scorer(F.col(vector_col), q)), desc
+    return df.withColumn(score_col, scorer(vector_col, list(query_vector))), desc
 
 
 def top_k(
@@ -140,7 +146,7 @@ def batch_knn(
     """
     scorer, desc = _METRICS[metric]
     joined = corpus.crossJoin(F.broadcast(queries))
-    scored = joined.withColumn(score_col, scorer(F.col(corpus_vec), F.col(query_vec)))
+    scored = joined.withColumn(score_col, scorer(corpus_vec, query_vec))
     order = [
         F.desc(score_col) if desc else F.asc(score_col),
         F.asc(corpus_id),
@@ -270,7 +276,7 @@ def lsh_batch_knn(
         score_expr, desc = _fl2(corpus_vec, query_vec), False
     else:
         scorer, desc = _METRICS[metric]
-        score_expr = scorer(F.col(corpus_vec), F.col(query_vec))
+        score_expr = scorer(corpus_vec, query_vec)
     # Project to (query_id, corpus_id, score) BEFORE the dedup shuffle:
     # candidate rows otherwise carry both embedding arrays through the
     # exchange, a ~10× width penalty measured as a spill storm at 30×

@@ -1089,7 +1089,7 @@ def ann_kmeans_iterated(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds = 3
     m = None
     for r in range(1, rounds + 1):
-        d = [l2_distance(F.col("e"), vector_literal(cent[k])) for k in range(_KM_K)]
+        d = [l2_distance("e", cent[k]) for k in range(_KM_K)]
         cluster = (
             F.when((d[0] <= d[1]) & (d[0] <= d[2]) & (d[0] <= d[3]), 0)
             .when((d[1] <= d[2]) & (d[1] <= d[3]), 1)
@@ -1954,8 +1954,7 @@ def ann_kmeans_pp_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     chosen = [(0, first.vec_id, first.m, list(first.embedding))]
     for step in range(1, _KPP_K):
         dists = [
-            l2_distance(F.col("embedding"), vector_literal(v))
-            for (_, _, _, v) in chosen
+            l2_distance("embedding", v) for (_, _, _, v) in chosen
         ]
         mind = dists[0] if len(dists) == 1 else F.least(*dists)
         nxt = (

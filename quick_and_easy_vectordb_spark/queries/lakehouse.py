@@ -432,7 +432,7 @@ def vdb_ivf_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("label").cast("int").alias("label"),
             "vec_id",
-            l2_distance(F.col("embedding"), q).alias("l2_dist"),
+            l2_distance("embedding", QUERY_VEC).alias("l2_dist"),
         )
         .orderBy("l2_dist", "vec_id")
         .limit(5)
@@ -714,9 +714,7 @@ def vdb_stream_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         store.select(
             "vec_id",
-            dot_product(F.col("embedding"), vector_literal(QUERY_VEC)).alias(
-                "score"
-            ),
+            dot_product("embedding", QUERY_VEC).alias("score"),
         )
         .crossJoin(F.broadcast(n_total))
         .orderBy(F.col("score").desc(), "vec_id")

@@ -50,8 +50,7 @@ def _topk(
     spark: SparkSession, sf_dir: str, scorer, k: int, descending: bool
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
-    scored = emb.select("vec_id", scorer(F.col("embedding"), q).alias("similarity"))
+    scored = emb.select("vec_id", scorer("embedding", QUERY_VEC).alias("similarity"))
     order = [
         F.desc("similarity") if descending else F.asc("similarity"),
         F.asc("vec_id"),
@@ -812,7 +811,7 @@ def vdb_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select(
             "vec_id",
             "embedding",
-            cosine_similarity(F.col("embedding"), vector_literal(QUERY_VEC)).alias("qsim"),
+            cosine_similarity("embedding", QUERY_VEC).alias("qsim"),
         )
         .orderBy(F.desc("qsim"), F.asc("vec_id"))
         .limit(20)
@@ -920,7 +919,7 @@ def vdb_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pre.select(
             "vec_id",
-            cosine_similarity(F.col("embedding"), vector_literal(QUERY_VEC)).alias("cosine"),
+            cosine_similarity("embedding", QUERY_VEC).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(5)
@@ -945,7 +944,7 @@ def vdb_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the threshold comparison is on the per-row fold cosine that
     is bitwise identical across engines."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cos = cosine_similarity(F.col("embedding"), vector_literal(QUERY_VEC))
+    cos = cosine_similarity("embedding", QUERY_VEC)
     return emb.select("vec_id", cos.alias("cosine")).filter(F.col("cosine") >= 0.2)
 
 

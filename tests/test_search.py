@@ -176,3 +176,65 @@ def test_mmr_rerank_large_k_plan_bounded(spark):
     # scan, not 20 nested unions (which would show ~20 Union nodes)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Union") <= 6
+
+
+def _py4j_commands(spark, fn) -> int:
+    """Gateway commands sent while ``fn()`` runs, not counting the GC
+    detaches (``m\\nd\\n``) that Python's collector sends on its own."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counting_send(command, *args, **kwargs):
+        nonlocal n
+        if not command.startswith("m\nd\n"):
+            n += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting_send
+    try:
+        fn()
+    finally:
+        del client.send_command  # drop the instance override
+    return n
+
+
+def test_top_k_plan_build_py4j_budget(spark, tmp_path):
+    """Regression guard for one SQL parse per scorer: building an exact
+    top-k request over a fresh scan costs the same number of py4j
+    commands for every metric and every dimension, and fewer than 80.
+    A scorer handed Column operands assembles its lambdas one command
+    at a time, which shows up here as a count that depends on the
+    metric (cosine has six lambdas, dot four)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quick_and_easy_vectordb_spark.sources.catalog import load_table
+
+    counts = {}
+    for dim in (8, 64):
+        rng = np.random.default_rng(dim)
+        vecs = rng.standard_normal((50, dim)).astype(np.float32)
+        d = tmp_path / f"d{dim}"
+        d.mkdir()
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(np.arange(50, dtype=np.int64)),
+                "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
+                "label": pa.array(np.zeros(50, dtype=np.int32)),
+            }),
+            str(d / "embeddings.parquet"),
+        )
+        q = rng.standard_normal(dim).tolist()
+        for metric in ("dot", "l2", "cosine"):
+
+            def build():
+                top_k_by_dot(load_table(spark, str(d), "embeddings"), q,
+                             vector_col="embedding", id_col="vec_id",
+                             metric=metric)
+
+            build()  # warm the scan-metadata cache
+            counts[(dim, metric)] = _py4j_commands(spark, build)
+    assert len(set(counts.values())) == 1, counts
+    assert next(iter(counts.values())) < 80, counts

@@ -15,6 +15,7 @@ from quick_and_easy_vectordb_spark.functions.vector import (
     l2_norm,
     parse_vector,
     vector_literal,
+    vector_literal_sql,
     vector_to_csv,
 )
 from tests.conftest import QUERY4
@@ -75,3 +76,132 @@ def test_cosine_matches_math(chunks):
     c = scores(chunks, cosine_similarity("vector_embedding", vector_literal(QUERY4)))
     qn = math.sqrt(sum(x * x for x in QUERY4))
     assert abs(c[3] - (0.75 / (math.sqrt(0.5) * qn))) < 1e-12
+
+
+# Adversarial rows: NULL array, NULL element, empty array, dimension
+# mismatch, all-zero vector, NaN and ±inf components, an overflowing
+# norm, and finite rows whose float32 copies differ from the doubles.
+_INF, _NAN = float("inf"), float("nan")
+_ADVERSARIAL = [
+    (1, None),
+    (2, [1.0, None, 2.0, 0.5]),
+    (3, []),
+    (4, [1.0, 2.0]),
+    (5, [0.0, 0.0, 0.0, 0.0]),
+    (6, [_NAN, 1.0, 0.0, 2.0]),
+    (7, [_INF, 1.0, 0.0, 0.0]),
+    (8, [-_INF, _INF, 0.0, 1.0]),
+    (9, [1e200, 1e200, 0.0, 0.0]),
+    (10, [0.1, 0.2, 0.3, 0.4]),
+    (11, [3.0, -4.0, 1e-3, 7.25]),
+]
+_QUERIES = [
+    [1.0, 0.5, 0.25, 0.0],
+    [0.72, 0.93, 0.81, 0.14],  # norm's last bit depends on fold order
+    [0.0, 0.0, 0.0, 0.0],  # zero query
+    [0.5, _NAN, 1.0, 0.0],
+    [_INF, 0.0, -1.0, 0.0],
+    [0.1, 0.7, -0.2],  # dimension mismatch against every 4-wide row
+]
+
+
+def _parent_cosine_sql(a: str, b: str) -> str:
+    """The cosine formula before each norm was folded once per row:
+    both norms written inline in both CASE branches."""
+
+    def d(x):
+        return f"transform({x}, x -> CAST(x AS DOUBLE))"
+
+    dot = (
+        f"aggregate(zip_with({d(a)}, {d(b)}, (x, y) -> x * y), 0.0D, "
+        "(acc, v) -> acc + v)"
+    )
+    na, nb = (
+        f"sqrt(aggregate({d(x)}, 0.0D, (acc, v) -> acc + v * v))" for x in (a, b)
+    )
+    return f"CASE WHEN ({na} * {nb}) != 0.0D THEN {dot} / ({na} * {nb}) END"
+
+
+def _bits(v):
+    # float.hex is exact, and every NaN prints as 'nan', so NaN == NaN
+    return None if v is None else float.hex(v)
+
+
+def _assert_all_equal(rows, names):
+    for r in rows:
+        got = {n: _bits(r[n]) for n in names}
+        assert len(set(got.values())) == 1, (r["id"], got)
+
+
+def test_scorer_paths_bitwise_equal(spark):
+    """The single-parse SQL path (names and float sequences) and the
+    Column path of every scorer return bitwise-equal values on
+    adversarial rows, and cosine equals the inline two-norm formula."""
+    df = spark.createDataFrame(_ADVERSARIAL, "id int, vd array<double>").withColumn(
+        "vf", F.col("vd").cast("array<float>")
+    )
+    scorers = {"dot": dot_product, "l2": l2_distance, "cos": cosine_similarity}
+    for q in _QUERIES:
+        cols, groups = [], []
+        for vec in ("vd", "vf"):
+            for m, fn in scorers.items():
+                names = [f"{m}_{vec}_sql", f"{m}_{vec}_col"]
+                cols += [
+                    fn(vec, q).alias(names[0]),
+                    fn(F.col(vec), vector_literal(q)).alias(names[1]),
+                ]
+                if m == "cos":
+                    names.append(f"cos_{vec}_inline")
+                    cols.append(
+                        F.expr(
+                            _parent_cosine_sql(f"`{vec}`", vector_literal_sql(q))
+                        ).alias(names[2])
+                    )
+                groups.append(names)
+        rows = df.select("id", *cols).collect()
+        for names in groups:
+            _assert_all_equal(rows, names)
+    # Column operands on both sides: float32 rows against double rows,
+    # each row against every query.
+    pairs = df.crossJoin(
+        spark.createDataFrame([(q,) for q in _QUERIES], "qd array<double>")
+    )
+    cols, groups = [], []
+    for a, b in (("vd", "qd"), ("vf", "qd"), ("vf", "vd")):
+        for m, fn in scorers.items():
+            names = [f"{m}_{a}_{b}_sql", f"{m}_{a}_{b}_col"]
+            cols += [
+                fn(a, b).alias(names[0]),
+                fn(F.col(a), F.col(b)).alias(names[1]),
+            ]
+            if m == "cos":
+                names.append(f"cos_{a}_{b}_inline")
+                cols.append(
+                    F.expr(_parent_cosine_sql(f"`{a}`", f"`{b}`")).alias(names[2])
+                )
+            groups.append(names)
+    rows = pairs.select("id", *cols).collect()
+    assert len(rows) == len(_ADVERSARIAL) * len(_QUERIES)
+    for names in groups:
+        _assert_all_equal(rows, names)
+
+
+def test_invalid_vector_scores_today(spark):
+    """Pins today's invalid-vector behaviour: a NULL array, a NULL
+    element, an empty array and a dimension mismatch score NULL; a NaN
+    component scores NaN; cosine of a zero vector is NULL."""
+    df = spark.createDataFrame(_ADVERSARIAL, "id int, vd array<double>")
+    q = _QUERIES[0]
+    rows = {
+        r.id: r
+        for r in df.select(
+            "id",
+            dot_product("vd", q).alias("dot"),
+            l2_distance("vd", q).alias("l2"),
+            cosine_similarity("vd", q).alias("cos"),
+        ).collect()
+    }
+    for i in (1, 2, 3, 4):
+        assert (rows[i].dot, rows[i].l2, rows[i].cos) == (None, None, None)
+    assert all(math.isnan(getattr(rows[6], m)) for m in ("dot", "l2", "cos"))
+    assert rows[5].cos is None and rows[5].dot == 0.0
