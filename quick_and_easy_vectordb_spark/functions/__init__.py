@@ -12,6 +12,7 @@ from quick_and_easy_vectordb_spark.functions.vector import (  # noqa: F401
     l2_distance,
     l2_norm,
     parse_vector,
+    squared_l2_distance,
     vector_literal,
     vector_to_csv,
 )

@@ -10,6 +10,13 @@ Re-expresses the reference's numpy kernels as JVM-side expressions:
   NULL instead of being silently truncated
 - cosine / L2      — the standard variants the reference lacks
 
+This is the only module that writes a vector fold. Every dot product,
+norm and (squared) L2 distance in the package is built here: the
+scorers, the LSH signature's per-plane terms (:func:`dot_product_sql`),
+the LSH kNN's pre-join norms, and the query surface's k-means and
+coreset distances. The fold's shape and summation order, which the
+DuckDB oracle mirrors bit for bit, is therefore defined once.
+
 All functions operate on ``array<double>`` (or ``array<float>``, which
 Spark happily feeds into double arithmetic via the lambda casts) and
 compile into whole-stage-codegen'd ``transform``/``zip_with``/
@@ -43,6 +50,7 @@ __all__ = [
     "vector_literal",
     "dot_product",
     "l2_norm",
+    "squared_l2_distance",
     "l2_distance",
     "cosine_similarity",
     "parse_vector",
@@ -57,8 +65,7 @@ def _double_sql(x: float) -> str:
 def vector_literal_sql(values: Sequence[float]) -> str:
     """The SQL text of a constant ``array<double>``. Literals go
     through CAST('<repr>' AS DOUBLE): repr() is shortest-roundtrip, so
-    the parse reproduces the exact binary64 values (the same rule
-    operators/ann.py lsh_signature documents — a bare SQL decimal
+    the parse reproduces the exact binary64 values (a bare SQL decimal
     literal would parse as DECIMAL and re-round)."""
     return "array(" + ", ".join(_double_sql(v) for v in values) + ")"
 
@@ -69,6 +76,22 @@ def dot_product_sql(a: str, b: str) -> str:
     definition of the fold: :func:`dot_product` parses it, and
     operators/ann.py lsh_signature concatenates it into CASE terms."""
     return _DOT_SQL.format(a, b)
+
+
+def decimal_squared_l2_sql(a: str, b: str) -> str:
+    """The SQL text of ‖a−b‖₂² summed exactly: each squared difference
+    is rounded once to DECIMAL(30,10) and the fold adds in
+    DECIMAL(38,10), so the total matches the oracle's
+    ``SUM(CAST(diff2 AS DECIMAL(30,10)))`` whatever its order. Spark
+    types (38,10)+(30,10) as (38,9); the lossless cast keeps the
+    accumulator type fixed at (38,10). operators/ann.py pq_encode
+    assigns codewords with it."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        f"(a, b) -> CAST((a - b) * (a - b) AS DECIMAL(30,10))), "
+        f"CAST(0 AS DECIMAL(38,10)), "
+        f"(acc, x) -> CAST(acc + x AS DECIMAL(38,10)))"
+    )
 
 
 def vector_literal(values: Sequence[float]) -> Column:
@@ -88,12 +111,9 @@ def _is_literal(x) -> bool:
 
 def _sql_operand(x) -> str | None:
     """SQL text for an operand the single-parse fast path can accept:
-    a plain column name, a float sequence (inlined literal array), or
-    an explicit SQL fragment wrapped in ``SqlFrag``. Anything else
-    (an arbitrary Column object) returns None and takes the
-    Column-composition path."""
-    if isinstance(x, SqlFrag):
-        return x.sql
+    a plain column name or a float sequence (inlined literal array).
+    Anything else (an arbitrary Column object) returns None and takes
+    the Column-composition path."""
     if isinstance(x, str) and x.isidentifier():
         # Backtick-quoted (ADVICE r14): a bare name that collides with
         # a SQL keyword or niladic function (current_date, ...) would
@@ -103,16 +123,6 @@ def _sql_operand(x) -> str | None:
     if _is_literal(x):
         return vector_literal_sql(x)
     return None
-
-
-class SqlFrag:
-    """Marker for a trusted SQL expression fragment passed to the
-    vector functions' fast path (e.g. ``SqlFrag("bk.vec")``)."""
-
-    __slots__ = ("sql",)
-
-    def __init__(self, sql: str) -> None:
-        self.sql = sql
 
 
 def _as_double(col: Column) -> Column:
@@ -130,6 +140,11 @@ _DOT_SQL = (
 _NORM_SQL = (
     "sqrt(aggregate(" + _AS_DOUBLE_SQL.format("{0}")
     + ", 0.0D, (acc, v) -> acc + v * v))"
+)
+_SQ_L2_SQL = (
+    "aggregate(zip_with(" + _AS_DOUBLE_SQL.format("{0}") + ", "
+    + _AS_DOUBLE_SQL.format("{1}")
+    + ", (x, y) -> (x - y) * (x - y)), 0.0D, (acc, v) -> acc + v)"
 )
 
 
@@ -169,8 +184,9 @@ def dot_product(a: Column | str, b: Column | str | Sequence[float]) -> Column:
     )
 
 
-def l2_norm(a: Column | str) -> Column:
-    """Euclidean norm ‖a‖₂."""
+def l2_norm(a: Column | str | Sequence[float]) -> Column:
+    """Euclidean norm ‖a‖₂: ``sqrt`` of the fold ``acc + v*v`` from
+    0.0, bitwise ``sqrt(dot_product(a, a))``."""
     sa = _sql_operand(a)
     if sa is not None:
         return F.expr(_NORM_SQL.format(sa))
@@ -180,23 +196,30 @@ def l2_norm(a: Column | str) -> Column:
     )
 
 
-def l2_distance(a: Column | str, b: Column | str | Sequence[float]) -> Column:
-    """Euclidean distance ‖a−b‖₂."""
+def squared_l2_distance(
+    a: Column | str | Sequence[float], b: Column | str | Sequence[float]
+) -> Column:
+    """Squared Euclidean distance ‖a−b‖₂²: ``zip_with`` squares the
+    element-wise differences, ``aggregate`` folds them left to right
+    from 0.0. :func:`l2_distance` is the ``sqrt`` of this fold."""
     sa, sb = _sql_operand(a), _sql_operand(b)
     if sa is not None and sb is not None:
-        return F.expr(
-            "sqrt(aggregate(zip_with("
-            + _AS_DOUBLE_SQL.format(sa) + ", " + _AS_DOUBLE_SQL.format(sb)
-            + ", (x, y) -> (x - y) * (x - y)), 0.0D, (acc, v) -> acc + v))"
-        )
+        return F.expr(_SQ_L2_SQL.format(sa, sb))
     a, b = _as_column(a), _as_column(b)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+    return F.aggregate(
+        F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
     )
+
+
+def l2_distance(a: Column | str, b: Column | str | Sequence[float]) -> Column:
+    """Euclidean distance ‖a−b‖₂, ``sqrt`` of
+    :func:`squared_l2_distance`."""
+    sa, sb = _sql_operand(a), _sql_operand(b)
+    if sa is not None and sb is not None:
+        return F.expr(f"sqrt({_SQ_L2_SQL.format(sa, sb)})")
+    return F.sqrt(squared_l2_distance(a, b))
 
 
 # Lambda variables binding each operand's sum of squares in the cosine

@@ -28,9 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from quick_and_easy_vectordb_spark.functions.vector import (
-    dot_product,
+    decimal_squared_l2_sql,
     dot_product_sql,
-    vector_literal,
     vector_literal_sql,
 )
 
@@ -66,62 +65,32 @@ def hyperplane(j: int, dim: int) -> list[float]:
     return out
 
 
-def lsh_signature(vec_col: Column | str, num_planes: int, dim: int) -> Column:
+def lsh_signature(vec_col: str, num_planes: int, dim: int) -> Column:
     """Sign-bit bucket string of a vector column: bit j = 1 iff
     ⟨v, H_j⟩ ≥ 0. One projection, no shuffle, no UDF.
 
-    Expression strategy, chosen by measurement (5M-row microbench):
-    for small static ``dim`` each plane's dot product is expanded to a
-    FLAT arithmetic expression (element_at products summed
-    left-to-right) built as one SQL string; for wide vectors the
-    zip_with/aggregate fold over the primitive array wins (~4× at
-    dim 64 — Spark 4 evaluates array lambdas efficiently; it's the
-    64 independent null-checked element_at calls that don't codegen
-    well). Both forms are bitwise identical: same left-to-right
-    order, and the fold's 0.0+x₀ seed equals x₀."""
-    # The flat-SQL path interpolates the name into an expression string;
-    # anything beyond a plain identifier (backticks, dots, spaces) could
-    # break or inject into the parse, so those names take the Column path.
-    is_plain_name = isinstance(vec_col, str) and vec_col.isidentifier()
-    if not is_plain_name:
-        vec_col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-        bits = [
-            F.when(
-                dot_product(vec_col, vector_literal(hyperplane(j, dim))) >= 0, "1"
-            ).otherwise("0")
-            for j in range(num_planes)
-        ]
-        return F.concat(*bits)
-    if dim > 32:
-        # Wide vectors: the same zip_with/aggregate fold the Column
-        # path builds, but assembled as ONE SQL string (the Column
-        # assembly costs ~P·10 py4j round trips). Bitwise identical —
-        # identical expression.
-        col = f"`{vec_col}`"
-        bits = [
-            "(CASE WHEN ("
-            + dot_product_sql(col, vector_literal_sql(hyperplane(j, dim)))
-            + ") >= 0 THEN '1' ELSE '0' END)"
-            for j in range(num_planes)
-        ]
-        return F.expr("CONCAT(" + ", ".join(bits) + ")")
+    One strategy for every ``dim``: bit j is a CASE over
+    functions/vector.py's dot-product fold of the row against H_j (an
+    exact literal array), and the P bits are concatenated in ONE SQL
+    string, parsed by one py4j call. The fold sums left to right from
+    0.0, the order :func:`python_lsh_signature` uses. A row whose
+    length is not ``dim``, a NULL array or a NULL element folds to
+    NULL on every plane, so its signature is all ``0`` bits.
 
-    # Named column: assemble ONE SQL string and parse it in a single
-    # F.expr call — building the same tree with Column operators costs
-    # ~P·dim·4 py4j round trips (seconds of driver latency per plan).
-    # Literals go through CAST('<repr>' AS DOUBLE): repr() is
-    # shortest-roundtrip, so the parse reproduces the exact values in
-    # every format (including scientific notation).
-    bit_terms = []
-    for j in range(num_planes):
-        h = hyperplane(j, dim)
-        dot = " + ".join(
-            f"CAST(element_at(`{vec_col}`, {i + 1}) AS DOUBLE)"
-            f" * CAST('{h[i]!r}' AS DOUBLE)"
-            for i in range(dim)
+    ``vec_col`` must be a plain column name: it is interpolated into
+    the SQL string, so anything else raises ``ValueError``."""
+    if not (isinstance(vec_col, str) and vec_col.isidentifier()):
+        raise ValueError(
+            f"lsh_signature needs a plain column name, got {vec_col!r}"
         )
-        bit_terms.append(f"(CASE WHEN ({dot}) >= 0 THEN '1' ELSE '0' END)")
-    return F.expr("CONCAT(" + ", ".join(bit_terms) + ")")
+    col = f"`{vec_col}`"
+    bits = [
+        "(CASE WHEN ("
+        + dot_product_sql(col, vector_literal_sql(hyperplane(j, dim)))
+        + ") >= 0 THEN '1' ELSE '0' END)"
+        for j in range(num_planes)
+    ]
+    return F.expr("CONCAT(" + ", ".join(bits) + ")")
 
 
 def python_lsh_signature(vec: Sequence[float], num_planes: int) -> str:
@@ -294,14 +263,7 @@ def pq_encode(
     def cell_sql(m: int, k: int) -> str:
         entry = f"filter(cbl, e -> e.m = {m} AND e.k = {k})"
         sub = f"slice({vec_col}, {m * sub_dim + 1}, {sub_dim})"
-        # Spark types (38,10)+(30,10) as (38,9); the lossless cast
-        # keeps the fold's accumulator type fixed at (38,10)
-        fold = (
-            f"aggregate(zip_with({sub}, element_at({entry}, 1).cv, "
-            f"(a, b) -> CAST((a - b) * (a - b) AS DECIMAL(30,10))), "
-            f"CAST(0 AS DECIMAL(38,10)), "
-            f"(acc, x) -> CAST(acc + x AS DECIMAL(38,10)))"
-        )
+        fold = decimal_squared_l2_sql(sub, f"element_at({entry}, 1).cv")
         return f"CASE WHEN size({entry}) > 0 THEN {fold} END"
 
     def argmin_sql(m: int) -> str:

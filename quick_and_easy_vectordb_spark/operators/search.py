@@ -39,6 +39,7 @@ from quick_and_easy_vectordb_spark.functions.vector import (
     cosine_similarity,
     dot_product,
     l2_distance,
+    l2_norm,
 )
 
 __all__ = [
@@ -207,31 +208,6 @@ def lsh_batch_knn(
     """
     from quick_and_easy_vectordb_spark.operators.ann import lsh_signature
 
-    # Score-expression strategy, chosen by measurement (see
-    # lsh_signature): flat element_at SQL strings win for small static
-    # dim (one F.expr parse — Column-operator assembly costs ~dim·4
-    # py4j round trips of driver latency); the zip_with/aggregate fold
-    # wins ~4× for wide vectors. Bitwise identical either way
-    # (left-to-right order, 0.0+x==x).
-    def _el(col: str, i: int) -> str:
-        return f"CAST(element_at(`{col}`, {i}) AS DOUBLE)"
-
-    def _fdot(a: str, b: str) -> Column:
-        if dim > 32:
-            return dot_product(a, b)
-        return F.expr(
-            " + ".join(f"{_el(a, i)} * {_el(b, i)}" for i in range(1, dim + 1))
-        )
-
-    def _fl2(a: str, b: str) -> Column:
-        if dim > 32:
-            return l2_distance(a, b)
-        terms = " + ".join(
-            f"({_el(a, i)} - {_el(b, i)}) * ({_el(a, i)} - {_el(b, i)})"
-            for i in range(1, dim + 1)
-        )
-        return F.expr(f"SQRT({terms})")
-
     c = corpus.withColumn(
         "__bucket", lsh_signature(corpus_vec, num_planes, dim)
     )
@@ -256,26 +232,21 @@ def lsh_batch_knn(
                 )
             )
     qp = q2.withColumn("__bucket", F.explode(F.array(*probes)))
+    scorer, desc = _METRICS[metric]
     # Cosine: precompute each side's norm ONCE PER ROW pre-join, so the
     # per-candidate work is a single dot product instead of three —
     # bitwise identical (same ops, same order, just not recomputed).
     if metric == "cosine":
-        c = c.withColumn("__cnorm", F.sqrt(_fdot(corpus_vec, corpus_vec)))
-        qp = qp.withColumn("__qnorm", F.sqrt(_fdot(query_vec, query_vec)))
+        c = c.withColumn("__cnorm", l2_norm(corpus_vec))
+        qp = qp.withColumn("__qnorm", l2_norm(query_vec))
         # Zero-norm guard matching functions.vector.cosine_similarity's
         # NULL convention — an unguarded 0/0 yields NaN, which ranks
         # unpredictably in the row_number window below.
         denom = F.col("__cnorm") * F.col("__qnorm")
         score_expr = F.when(
-            denom != 0.0, _fdot(corpus_vec, query_vec) / denom
+            denom != 0.0, dot_product(corpus_vec, query_vec) / denom
         )
-        desc = True
-    elif metric == "dot":
-        score_expr, desc = _fdot(corpus_vec, query_vec), True
-    elif metric == "l2":
-        score_expr, desc = _fl2(corpus_vec, query_vec), False
     else:
-        scorer, desc = _METRICS[metric]
         score_expr = scorer(corpus_vec, query_vec)
     # Project to (query_id, corpus_id, score) BEFORE the dedup shuffle:
     # candidate rows otherwise carry both embedding arrays through the

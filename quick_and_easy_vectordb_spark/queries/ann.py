@@ -16,6 +16,7 @@ from quick_and_easy_vectordb_spark.functions.vector import (
     dot_product,
     l2_distance,
     l2_norm,
+    squared_l2_distance,
     vector_literal,
 )
 from quick_and_easy_vectordb_spark.operators.ann import (
@@ -31,6 +32,7 @@ from quick_and_easy_vectordb_spark.queries.common import (
     sql_cosine,
     sql_dot,
     sql_l2,
+    sql_l2sq,
     sql_vec,
 )
 from quick_and_easy_vectordb_spark.queries.registry import query
@@ -1944,7 +1946,7 @@ def ann_kmeans_pp_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     query, app.py:40-48); this is the train step its scale-up needs.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    norm = F.sqrt(dot_product("embedding", "embedding"))
+    norm = l2_norm("embedding")
     first = (
         emb.select("vec_id", "embedding", norm.alias("m"))
         .orderBy(F.desc("m"), F.asc("vec_id"))
@@ -1980,27 +1982,6 @@ _U_SCALE = 281474976710656.0  # 2^48: u = md5-prefix48 / 2^48 ∈ [0,1)
 _EMB_E = "e.embedding::DOUBLE[]"
 
 
-def _sql_l2sq(a: str, b: str) -> str:
-    # ‖a−b‖² with the same fold shape as the Spark-side _l2sq below
-    # (the validated sql_l2 ↔ l2_distance pair, minus the sqrt)
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}),"
-        f" p -> (p[1] - p[2]) * (p[1] - p[2])))"
-    )
-
-
-def _l2sq(a, b):
-    return F.aggregate(
-        F.zip_with(
-            F.transform(a, lambda x: x.cast("double")),
-            F.transform(b, lambda x: x.cast("double")),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _kmp_u_sql(r: int) -> str:
     # deterministic per-(point, round) uniform: 48-bit md5 prefix as a
     # double — the minhash parity pattern (operators/dedup.py:103)
@@ -2021,7 +2002,7 @@ def _kmp_oracle() -> str:
     ]
     for r in range(1, _KMP_ROUNDS + 1):
         ctes.append(f"""d_{r} AS (
-  SELECT e.vec_id, MIN({_sql_l2sq(_EMB_E, 'c.v')}) AS d2
+  SELECT e.vec_id, MIN({sql_l2sq(_EMB_E, 'c.v')}) AS d2
   FROM embeddings e, cand_{r - 1} c
   GROUP BY e.vec_id
 )""")
@@ -2046,7 +2027,7 @@ def _kmp_oracle() -> str:
   SELECT e.vec_id, c.vec_id AS cand_vec_id,
          ROW_NUMBER() OVER (
            PARTITION BY e.vec_id
-           ORDER BY {_sql_l2sq(_EMB_E, 'c.v')}, c.vec_id) AS rn
+           ORDER BY {sql_l2sq(_EMB_E, 'c.v')}, c.vec_id) AS rn
   FROM embeddings e, cand_{R} c
 )""")
     ctes.append(
@@ -2062,7 +2043,7 @@ def _kmp_oracle() -> str:
         " ORDER BY wt DESC, vec_id LIMIT 1)"
     )
     for i in range(1, _KPP_K):
-        d2s = [_sql_l2sq("c.v", f"f{j}.v") for j in range(i)]
+        d2s = [sql_l2sq("c.v", f"f{j}.v") for j in range(i)]
         mind = d2s[0] if len(d2s) == 1 else f"LEAST({', '.join(d2s)})"
         froms = ", ".join(f"f{j}" for j in range(i))
         notin = " AND ".join(f"c.vec_id <> f{j}.vec_id" for j in range(i))
@@ -2124,7 +2105,7 @@ def ann_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     for corpora where even one extra full pass matters.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    norm = F.sqrt(dot_product("embedding", "embedding"))
+    norm = l2_norm("embedding")
     first = (
         emb.select("vec_id", "embedding", norm.alias("m"))
         .orderBy(F.desc("m"), F.asc("vec_id"))
@@ -2136,7 +2117,7 @@ def ann_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     for r in range(1, _KMP_ROUNDS + 1):
         dists = [
-            _l2sq(F.col("embedding"), vector_literal(v)) for _, v in cands
+            squared_l2_distance("embedding", v) for _, v in cands
         ]
         mind = dists[0] if len(dists) == 1 else F.least(*dists)
         d = emb.select("vec_id", "embedding", mind.alias("d2"))
@@ -2182,7 +2163,7 @@ def ann_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.struct(
-                _l2sq(F.col("embedding"), F.col("cv")).alias("d2"),
+                squared_l2_distance("embedding", "cv").alias("d2"),
                 F.col("cand_vec_id").alias("cid"),
             ).alias("s"),
         )
@@ -2216,7 +2197,7 @@ def ann_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     chosen.append((0, int(sel0.vec_id), int(sel0.wt), float(sel0.m)))
     chosen_vecs = [[float(x) for x in sel0.v]]
     for i in range(1, _KPP_K):
-        d2s = [_l2sq(F.col("v"), vector_literal(cv)) for cv in chosen_vecs]
+        d2s = [squared_l2_distance("v", cv) for cv in chosen_vecs]
         mind = d2s[0] if len(d2s) == 1 else F.least(*d2s)
         nxt = (
             cw_df.filter(
@@ -2511,28 +2492,12 @@ def ann_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d2_before = assign.select(
         "vec_id",
-        F.aggregate(
-            F.zip_with(
-                F.col("embedding").cast("array<double>"),
-                F.col("centroid"),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("d2"),
+        squared_l2_distance("embedding", "centroid").alias("d2"),
     )
     sse_before = d2_before.agg(dsum("d2").alias("sse_before"))
     d2_after = assign.join(F.broadcast(subcent), "sub").select(
         "vec_id",
-        F.aggregate(
-            F.zip_with(
-                F.col("embedding").cast("array<double>"),
-                F.col("subcentroid"),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("d2"),
+        squared_l2_distance("embedding", "subcentroid").alias("d2"),
     )
     sse_after = d2_after.agg(dsum("d2").alias("sse_after"))
     head = hot.select(
@@ -2726,15 +2691,13 @@ def ann_anisotropic_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("centroid").alias("cl"),
     )
 
-    def fold(expr):
-        return F.aggregate(expr, F.lit(0.0), lambda acc, t: acc + t)
-
+    # <r, x> with the residual r = x - c as the first operand
     f = v.select(
         "label",
-        fold(F.zip_with("x", "cl", lambda x, c: (x - c) * x)).alias("dxr"),
-        fold(F.zip_with("x", "cl", lambda x, c: (x - c) * (x - c)))
-        .alias("rr"),
-        fold(F.zip_with("x", "x", lambda a, b: a * b)).alias("xx"),
+        dot_product(F.zip_with("x", "cl", lambda x, c: x - c), "x")
+        .alias("dxr"),
+        squared_l2_distance("x", "cl").alias("rr"),
+        dot_product("x", "x").alias("xx"),
     ).filter(F.col("xx") > 0)
     g = f.select(
         "label",

@@ -41,9 +41,15 @@ def sql_cosine(a: str, b: str) -> str:
     )
 
 
+def sql_l2sq(a: str, b: str) -> str:
+    # ‖a−b‖₂² with the same fold shape as
+    # functions.vector.squared_l2_distance
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}),"
+        f" p -> (p[1] - p[2]) * (p[1] - p[2])))"
+    )
+
+
 def sql_l2(a: str, b: str) -> str:
     # ‖a−b‖₂ with the same fold shape as functions.vector.l2_distance
-    return (
-        f"sqrt(list_sum(list_transform(list_zip({a}, {b}),"
-        f" p -> (p[1] - p[2]) * (p[1] - p[2]))))"
-    )
+    return f"sqrt({sql_l2sq(a, b)})"

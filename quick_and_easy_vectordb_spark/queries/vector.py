@@ -24,7 +24,9 @@ from quick_and_easy_vectordb_spark.functions.vector import (
     cosine_similarity,
     dot_product,
     l2_distance,
+    l2_norm,
     parse_vector,
+    squared_l2_distance,
     vector_literal,
     vector_to_csv,
 )
@@ -37,6 +39,7 @@ from quick_and_easy_vectordb_spark.queries.common import (
     sql_cosine,
     sql_dot,
     sql_l2,
+    sql_l2sq,
     sql_vec,
 )
 from quick_and_easy_vectordb_spark.queries.registry import query
@@ -402,7 +405,7 @@ def vdb_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ones = vector_literal([1.0] * len(QUERY_VEC))
     return emb.select(
         "vec_id",
-        F.sqrt(dot_product(e, e)).alias("l2_norm"),
+        l2_norm("embedding").alias("l2_norm"),
         F.array_max(e).alias("max_val"),
         F.array_min(e).alias("min_val"),
         F.array_position(e, F.array_max(e)).alias("argmax_idx"),
@@ -490,7 +493,7 @@ def vdb_vector_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = F.col("embedding").cast("array<double>")
     q = vector_literal(QUERY_VEC)
-    nrm = F.sqrt(dot_product(e, e))
+    nrm = l2_norm("embedding")
     arrays = emb.select(
         "vec_id",
         F.transform(e, lambda x: x / nrm).alias("unit"),
@@ -1405,8 +1408,7 @@ def vdb_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside codegen, ONE map-side-combined groupBy(label) — shuffle
     carries O(labels) partials."""
     emb = load_table(spark, sf_dir, "embeddings")
-    e = F.col("embedding").cast("array<double>")
-    n = emb.select("label", F.sqrt(dot_product(e, e)).alias("nrm"))
+    n = emb.select("label", l2_norm("embedding").alias("nrm"))
     return n.groupBy(F.col("label").cast("long").alias("label")).agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.min("nrm").alias("min_norm"),
@@ -1722,19 +1724,16 @@ def vdb_norm_pruned_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ||x|| >= tau/||q|| scan filter — both phases TakeOrdered, no
     shuffle of vectors."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     scored = emb.select(
         "vec_id",
         dot_product("embedding", QUERY_VEC).alias("score"),
-        F.sqrt(dot_product("embedding", "embedding")).alias(
-            "xnorm"
-        ),
+        l2_norm("embedding").alias("xnorm"),
     ).persist()  # one scoring pass feeds top-k, threshold, and audit
     top5 = scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(5)
     # ||q|| via the SAME sequential fold the oracle's list_dot_product
     # mirrors — a Python math.sqrt(sum(...)) could differ by an ulp
     # and flip the boundary count.
-    qnorm = F.sqrt(dot_product(q, q))
+    qnorm = l2_norm(QUERY_VEC)
     thresh = top5.agg(F.min("score").alias("tau"))
     audit = (
         scored.crossJoin(F.broadcast(thresh))
@@ -2321,7 +2320,7 @@ def vdb_mips_augmented_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.col("dp")
             / (
-                F.sqrt(dot_product(qlit, qlit))
+                l2_norm(QUERY_VEC)
                 * F.sqrt(F.col("dvv") + av * av)
             )
         ).alias("cos_aug"),
@@ -3031,30 +3030,6 @@ def vdb_hard_negative_mining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sq_l2_sql(a: str, b: str) -> str:
-    """Squared L2 with the same fold shape as sql_l2 (no sqrt)."""
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}),"
-        f" p -> (p[1] - p[2]) * (p[1] - p[2])))"
-    )
-
-
-def _sq_l2(a, b):
-    """Squared L2 with the same fold shape as functions.vector
-    .l2_distance (no sqrt): zip_with squares, sequential fold."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(
-            F.transform(a, lambda x: x.cast("double")),
-            F.transform(b, lambda x: x.cast("double")),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 @query(
     "vdb_kcenter_coreset",
     oracle=f"""
@@ -3066,7 +3041,7 @@ c1 AS (
   ORDER BY list_dot_product(o, o) DESC, vec_id LIMIT 1
 ),
 d1 AS (
-  SELECT e.vec_id, e.o, {_sq_l2_sql('e.o', 'c1.o1')} AS dc1
+  SELECT e.vec_id, e.o, {sql_l2sq('e.o', 'c1.o1')} AS dc1
   FROM e CROSS JOIN c1
 ),
 c2 AS (
@@ -3074,7 +3049,7 @@ c2 AS (
   ORDER BY dc1 DESC, vec_id LIMIT 1
 ),
 d2 AS (
-  SELECT d1.vec_id, d1.o, d1.dc1, {_sq_l2_sql('d1.o', 'c2.o2')} AS dc2
+  SELECT d1.vec_id, d1.o, d1.dc1, {sql_l2sq('d1.o', 'c2.o2')} AS dc2
   FROM d1 CROSS JOIN c2
 ),
 c3 AS (
@@ -3082,7 +3057,7 @@ c3 AS (
   ORDER BY LEAST(dc1, dc2) DESC, vec_id LIMIT 1
 ),
 d3 AS (
-  SELECT d2.vec_id, d2.dc1, d2.dc2, {_sq_l2_sql('d2.o', 'c3.o3')} AS dc3
+  SELECT d2.vec_id, d2.dc1, d2.dc2, {sql_l2sq('d2.o', 'c3.o3')} AS dc3
   FROM d2 CROSS JOIN c3
 ),
 asg AS (
@@ -3142,7 +3117,7 @@ def vdb_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("n2")
     )
     d1 = e.crossJoin(F.broadcast(c1)).select(
-        "vec_id", "o", "id1", _sq_l2("o", "o1").alias("dc1")
+        "vec_id", "o", "id1", squared_l2_distance("o", "o1").alias("dc1")
     )
     c2 = (
         d1.select(F.col("vec_id").alias("id2"), F.col("o").alias("o2"), "dc1")
@@ -3152,7 +3127,7 @@ def vdb_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d2 = d1.crossJoin(F.broadcast(c2)).select(
         "vec_id", "o", "id1", "id2", "dc1",
-        _sq_l2("o", "o2").alias("dc2"),
+        squared_l2_distance("o", "o2").alias("dc2"),
     )
     c3 = (
         d2.select(
@@ -3165,7 +3140,7 @@ def vdb_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d3 = d2.crossJoin(F.broadcast(c3)).select(
         "vec_id", "id1", "id2", "id3", "dc1", "dc2",
-        _sq_l2("o", "o3").alias("dc3"),
+        squared_l2_distance("o", "o3").alias("dc3"),
     )
     asg = d3.select(
         "vec_id",

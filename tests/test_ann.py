@@ -3,6 +3,7 @@ centroid math, partitioned index write."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from quick_and_easy_vectordb_spark.functions.vector import vector_literal, dot_product
@@ -16,13 +17,54 @@ from quick_and_easy_vectordb_spark.operators.ann import (
 )
 
 
-def test_spark_and_python_signatures_agree(spark):
-    vecs = [[float((i * 13 + j * 7) % 11 - 5) for i in range(16)] for j in range(20)]
+@pytest.mark.parametrize("dim", [3, 16, 33, 64])
+def test_spark_and_python_signatures_agree(spark, dim):
+    vecs = [[float((i * 13 + j * 7) % 11 - 5) for i in range(dim)] for j in range(20)]
     df = spark.createDataFrame([(j, v) for j, v in enumerate(vecs)], "id long, v array<double>")
     got = {r.id: r.sig for r in
-           df.select("id", lsh_signature("v", 8, 16).alias("sig")).collect()}
+           df.select("id", lsh_signature("v", 8, dim).alias("sig")).collect()}
     for j, v in enumerate(vecs):
         assert got[j] == python_lsh_signature(v, 8)
+
+
+@pytest.mark.parametrize("dim", [8, 64])
+def test_invalid_rows_sign_all_zero(spark, dim):
+    """A row one element short or long, a NULL array and a NULL element
+    fold to NULL on every plane, so each gets the all-0 signature, at
+    every dim, with no error under ANSI mode."""
+    good = [float((i * 5) % 7 - 3) for i in range(dim)]
+    null_elem = list(good)
+    null_elem[dim // 2] = None
+    rows = [(0, good), (1, good[:-1]), (2, good + [1.0]), (3, None), (4, null_elem)]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    got = {r.id: r.sig for r in
+           df.select("id", lsh_signature("v", 8, dim).alias("sig")).collect()}
+    assert got[0] == python_lsh_signature(good, 8)
+    assert {got[i] for i in (1, 2, 3, 4)} == {"0" * 8}
+
+
+def test_lsh_signature_rejects_non_identifier_names():
+    with pytest.raises(ValueError):
+        lsh_signature("v`) + 1 --", 4, 8)
+
+
+def test_lsh_batch_knn_scores_short_corpus_row(spark):
+    """A corpus row one element short is bucketed and scored like any
+    invalid row (all-0 bucket, NULL score) instead of failing the job."""
+    from quick_and_easy_vectordb_spark.operators.search import lsh_batch_knn
+
+    dim = 8
+    rows = [(i, [float((i + j) % 5 - 2) for j in range(dim)]) for i in range(12)]
+    rows.append((99, [-1.0] * (dim - 1)))
+    corpus = spark.createDataFrame(rows, "id long, vec array<double>")
+    q = [-1.0] * dim
+    # the query probes the all-0 bucket the short row lands in
+    assert python_lsh_signature(q, 3).count("1") <= 1
+    qs = spark.createDataFrame([(0, q)], "query_id long, query_vec array<double>")
+    for metric in ("cosine", "dot", "l2"):
+        got = lsh_batch_knn(qs, corpus, k=20, num_planes=3, dim=dim, metric=metric).collect()
+        assert [r.score for r in got if r.id == 99] == [None]
+        assert any(r.score is not None for r in got)
 
 
 def test_hamming_neighbors():

@@ -14,6 +14,7 @@ from quick_and_easy_vectordb_spark.functions.vector import (
     l2_distance,
     l2_norm,
     parse_vector,
+    squared_l2_distance,
     vector_literal,
     vector_literal_sql,
     vector_to_csv,
@@ -140,7 +141,12 @@ def test_scorer_paths_bitwise_equal(spark):
     df = spark.createDataFrame(_ADVERSARIAL, "id int, vd array<double>").withColumn(
         "vf", F.col("vd").cast("array<float>")
     )
-    scorers = {"dot": dot_product, "l2": l2_distance, "cos": cosine_similarity}
+    scorers = {
+        "dot": dot_product,
+        "l2": l2_distance,
+        "l2sq": squared_l2_distance,
+        "cos": cosine_similarity,
+    }
     for q in _QUERIES:
         cols, groups = [], []
         for vec in ("vd", "vf"):
@@ -184,6 +190,20 @@ def test_scorer_paths_bitwise_equal(spark):
     assert len(rows) == len(_ADVERSARIAL) * len(_QUERIES)
     for names in groups:
         _assert_all_equal(rows, names)
+    # l2_distance is the sqrt of squared_l2_distance, bit for bit
+    for r in rows:
+        for a, b in (("vd", "qd"), ("vf", "qd"), ("vf", "vd")):
+            sq = r[f"l2sq_{a}_{b}_sql"]
+            want = None if sq is None else math.sqrt(sq)
+            assert _bits(r[f"l2_{a}_{b}_sql"]) == _bits(want), (r["id"], a, b)
+
+
+def test_l2_distance_text_is_sqrt_of_squared(spark):
+    """l2_distance's single-parse text is ``sqrt(`` around
+    squared_l2_distance's, so the two cannot drift apart."""
+    for b in ("b", [0.5, -1.0]):
+        sq = str(squared_l2_distance("a", b))[len("Column<'"):-len("'>")]
+        assert str(l2_distance("a", b)) == f"Column<'sqrt({sq})'>"
 
 
 def test_invalid_vector_scores_today(spark):
@@ -198,10 +218,12 @@ def test_invalid_vector_scores_today(spark):
             "id",
             dot_product("vd", q).alias("dot"),
             l2_distance("vd", q).alias("l2"),
+            squared_l2_distance("vd", q).alias("l2sq"),
             cosine_similarity("vd", q).alias("cos"),
         ).collect()
     }
+    metrics = ("dot", "l2", "l2sq", "cos")
     for i in (1, 2, 3, 4):
-        assert (rows[i].dot, rows[i].l2, rows[i].cos) == (None, None, None)
-    assert all(math.isnan(getattr(rows[6], m)) for m in ("dot", "l2", "cos"))
+        assert all(getattr(rows[i], m) is None for m in metrics)
+    assert all(math.isnan(getattr(rows[6], m)) for m in metrics)
     assert rows[5].cos is None and rows[5].dot == 0.0
