@@ -37,6 +37,7 @@ from quick_and_easy_vectordb_spark.queries.common import (
 )
 from quick_and_easy_vectordb_spark.queries.registry import query
 from quick_and_easy_vectordb_spark.sources.catalog import load_table
+from quick_and_easy_vectordb_spark.sources.scratch import fresh
 
 _EMB = "embedding::DOUBLE[]"
 HIST_PLANES = 16
@@ -3201,14 +3202,13 @@ def ann_lsh_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is partition pruning (ann_lsh_probe over read_lsh_index)."""
     import os
     import shutil
-    import tempfile
 
     from quick_and_easy_vectordb_spark.streaming.index_maintenance import (
         read_lsh_index,
         stream_lsh_index_maintenance,
     )
 
-    base = tempfile.mkdtemp(prefix="ann_lsh_idx_")
+    base = fresh("lsh_index_incremental", sf_dir)
     src_dir = os.path.join(base, "src")
     os.makedirs(src_dir)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3274,7 +3274,6 @@ def ann_lsh_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite — then a partitionBy write preserving the pruning layout
     exactly."""
     import os
-    import tempfile
 
     from quick_and_easy_vectordb_spark.streaming.index_maintenance import (
         compact_lsh_index,
@@ -3282,7 +3281,7 @@ def ann_lsh_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_lsh_index_maintenance,
     )
 
-    base = tempfile.mkdtemp(prefix="ann_lsh_compact_")
+    base = fresh("lsh_index_compaction", sf_dir)
     src_dir = os.path.join(base, "src")
     os.makedirs(src_dir)
     emb = load_table(spark, sf_dir, "embeddings")

@@ -17,81 +17,50 @@ from quick_and_easy_vectordb_spark.operators.asof import asof_join
 from quick_and_easy_vectordb_spark.operators.util import ensure_parallelism
 from quick_and_easy_vectordb_spark.operators.skew import salted_join
 from quick_and_easy_vectordb_spark.queries.registry import query
-from quick_and_easy_vectordb_spark.sources.catalog import load_table
+from quick_and_easy_vectordb_spark.sources.catalog import (
+    load_table,
+    read_nanos_as_long,
+)
+from quick_and_easy_vectordb_spark.sources.scratch import fresh, staged
+from quick_and_easy_vectordb_spark.streaming.windows import (
+    drain,
+    read_events_stream,
+)
 
 _DSUM_VAL = "CAST(CAST(SUM(CAST(value AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)"
 
-# Staged stream-source directories, keyed by (sf_dir, layout). The file
-# stream source needs a DIRECTORY of files; the fixtures are single
-# parquet files, so we stage symlink dirs (no data copy). Cached so
-# repeated invocations of the streamed queries reuse one dir per sf_dir
-# instead of leaking a fresh mkdtemp each call (round-2 ADVICE).
-_STREAM_SRC_DIRS: dict[tuple[str, str], str] = {}
 
-# Checkpoint-recovery staging (ev_stream_checkpoint_recovery): the two
-# half-feed parquet dirs, cached per process; checkpoint + live dirs are
-# fresh per invocation so the restart sequence replays deterministically.
-_CKPT_SCRATCH: dict[str, str] = {}
-
-
-def _stage_stream_dir(sf_dir: str, layout: tuple[str, ...], prefix: str) -> str:
-    """Return a directory containing ``events.parquet`` symlinked once
-    per name in ``layout`` (e.g. ("events_a", "events_b") stages the
-    same file twice to simulate an at-least-once replay)."""
+def _link_events(sf_dir: str, layout: tuple[str, ...], d: str) -> None:
+    """Symlink ``events.parquet`` into ``d`` once per name in ``layout``
+    (no data copy; ("events_a", "events_b") stages the same file twice
+    to simulate an at-least-once replay). The file stream source needs
+    a directory of files and does not recurse into a symlinked
+    subdirectory, so a directory-style dataset has its leaf data files
+    linked flat, one set per name."""
     import os
-    import tempfile
 
-    key = (os.path.abspath(sf_dir), ",".join(layout))
-    d = _STREAM_SRC_DIRS.get(key)
-    if d is not None and os.path.isdir(d):
-        return d
     src = os.path.abspath(f"{sf_dir}/events.parquet")
-    d = tempfile.mkdtemp(prefix=prefix)
-    if os.path.isdir(src):
-        # Directory-style parquet dataset: the file stream source does
-        # not recurse into a symlinked subdirectory, so symlink the
-        # leaf data files flat into the staging dir (one set per
-        # layout name to simulate replay).
-        leafs = sorted(
-            f for f in os.listdir(src)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        for name in layout:
-            for f in leafs:
-                os.symlink(
-                    os.path.join(src, f), os.path.join(d, f"{name}_{f}")
-                )
-    else:
+    if not os.path.isdir(src):
         for name in layout:
             os.symlink(src, os.path.join(d, f"{name}.parquet"))
-    _STREAM_SRC_DIRS[key] = d
-    return d
-
-
-def _stream_events_source(spark: SparkSession, src_dir: str, **options):
-    """File-source stream over staged events parquet, normalizing ``ts``
-    to a session-tz TimestampType exactly like the batch reader
-    (sources/catalog.py): the fixture has shipped both as parquet
-    TIMESTAMP(NANOS) (read as raw long under ``nanosAsLong``, floored
-    to micros) and as timestamp[us] NTZ (cast to timestamp; session tz
-    is UTC). The physical encoding is probed with a one-file batch
-    schema read so the streaming schema always matches the footer —
-    forcing the wrong schema silently misreads micros as nanos."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probed = spark.read.parquet(src_dir).schema
-    ts_type = probed["ts"].dataType.simpleString()
-    reader = spark.readStream.schema(
-        "event_id long, ts %s, user_id long, "
-        "event_type string, value double, props string" % ts_type
+        return
+    leafs = sorted(
+        f for f in os.listdir(src)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    stream = reader.parquet(src_dir)
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    for name in layout:
+        for f in leafs:
+            os.symlink(os.path.join(src, f), os.path.join(d, f"{name}_{f}"))
+
+
+def _events_dir(sf_dir: str, layout: tuple[str, ...] = ("events",)) -> str:
+    """Stream-source dir holding the events file once per name in
+    ``layout``, staged once per process."""
+    return staged(
+        "events_" + "_".join(layout),
+        sf_dir,
+        lambda d: _link_events(sf_dir, layout, d),
+    )
 
 
 @query(
@@ -151,10 +120,8 @@ def ev_tumbling_hour_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow backlog drains, so no watermark is needed for
     correctness here (the incremental-state path with watermarks is
     exercised in tests/test_streaming.py)."""
-    sink = "ev_tumbling_hour_streamed_sink"
-    spark.catalog.dropTempView(sink)  # no-op when absent; allows re-runs
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_src_")
-    src = _stream_events_source(spark, d)
+    d = _events_dir(sf_dir)
+    src = read_events_stream(spark, d, max_files_per_trigger=None)
     agg = (
         src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -168,15 +135,7 @@ def ev_tumbling_hour_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(agg, "ev_tumbling_hour_streamed_sink", "complete")
 
 
 @query(
@@ -197,27 +156,16 @@ def ev_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the single-copy count — the row only matches if the
     streaming dedup dropped every replay, which is the exactly-once
     property itself as a CORRECTNESS row."""
-    sink = "ev_stream_dedup_ingest_sink"
-    spark.catalog.dropTempView(sink)
     # Same file staged twice = the replay; one file per micro-batch so
     # the replay arrives in a LATER batch and the dedup must hold state
     # across batches.
-    d = _stage_stream_dir(
-        sf_dir, ("events_a", "events_b"), "ev_stream_replay_"
+    d = _events_dir(sf_dir, ("events_a", "events_b"))
+    src = read_events_stream(spark, d)
+    out = drain(
+        src.dropDuplicates(["event_id"]), "ev_stream_dedup_ingest_sink", "append"
     )
-    src = _stream_events_source(spark, d, maxFilesPerTrigger=1)
-    q = (
-        src.dropDuplicates(["event_id"])
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(sink)
-        .groupBy("event_type")
+        out.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
 
@@ -1008,25 +956,15 @@ def ev_click_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
         stream_click_attribution,
     )
 
-    sink = "ev_click_attribution_streamed_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_attr_")
-    src = _stream_events_source(spark, d)
+    d = _events_dir(sf_dir)
+    src = read_events_stream(spark, d, max_files_per_trigger=None)
     attributed = stream_click_attribution(src).select(
         "purchase_id",
         "p_uid",
         F.unix_micros("purchase_ts").alias("purchase_us"),
         F.unix_micros("click_ts").alias("click_us"),
     )
-    q = (
-        attributed.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(attributed, "ev_click_attribution_streamed_sink", "append")
 
 
 @query(
@@ -1090,10 +1028,8 @@ def ev_sliding_window_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     harder streaming shape — each event updates TWO window states — so
     promoting this twin to a driver CORRECTNESS row pins the state
     fan-out, not just the tumbling special case."""
-    sink = "ev_sliding_window_streamed_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_src_")
-    src = _stream_events_source(spark, d)
+    d = _events_dir(sf_dir)
+    src = read_events_stream(spark, d, max_files_per_trigger=None)
     agg = (
         src.groupBy(
             F.window("ts", "30 minutes", "15 minutes").alias("w"), "event_type"
@@ -1109,15 +1045,7 @@ def ev_sliding_window_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(agg, "ev_sliding_window_streamed_sink", "complete")
 
 
 @query(
@@ -1155,10 +1083,8 @@ def ev_sessionize_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     both are pinned so the pair also documents the boundary difference
     between the two formulations. Output keys on session_start_us
     (ordinal session ids are meaningless for merged windows)."""
-    sink = "ev_sessionize_streamed_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_src_")
-    src = _stream_events_source(spark, d)
+    d = _events_dir(sf_dir)
+    src = read_events_stream(spark, d, max_files_per_trigger=None)
     gap_us = 30 * 60 * 1000 * 1000
     agg = (
         src.groupBy(
@@ -1176,15 +1102,7 @@ def ev_sessionize_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("duration_us"),
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(agg, "ev_sessionize_streamed_sink", "complete")
 
 
 @query(
@@ -1280,10 +1198,8 @@ def ev_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAX(type_avg) output column is constant within each group —
     included so the enrichment VALUE (not just the filtered counts) is
     hash-verified."""
-    sink = "ev_stream_static_enrich_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_src_")
-    src = _stream_events_source(spark, d)
+    d = _events_dir(sf_dir)
+    src = read_events_stream(spark, d, max_files_per_trigger=None)
     from quick_and_easy_vectordb_spark.functions.numeric import davg
 
     dim = (
@@ -1300,15 +1216,7 @@ def ev_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("type_avg").alias("type_avg"),
         )
     )
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(enriched, "ev_stream_static_enrich_sink", "complete")
 
 
 @query(
@@ -1490,20 +1398,12 @@ def ev_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_user_activity_state,
     )
 
-    sink = "ev_stream_stateful_totals_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_state_")
-    src = _stream_events_source(spark, d)
-    q = (
-        stream_user_activity_state(src)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    d = _events_dir(sf_dir)
+    src = read_events_stream(spark, d, max_files_per_trigger=None)
+    out = drain(
+        stream_user_activity_state(src), "ev_stream_stateful_totals_sink", "update"
     )
-    q.awaitTermination()
-    return spark.table(sink).groupBy("user_id").agg(
+    return out.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.min("first_us").alias("first_us"),
         F.max("last_us").alias("last_us"),
@@ -1539,10 +1439,8 @@ def ev_hourly_ohlc_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode over availableNow; state per (type, window) is 4 numbers + 2
     structs regardless of event volume — the incremental-candlestick
     topology every metrics/trading pipeline runs."""
-    sink = "ev_hourly_ohlc_streamed_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_ohlc_")
-    src = _stream_events_source(spark, d)
+    d = _events_dir(sf_dir)
+    src = read_events_stream(spark, d, max_files_per_trigger=None)
     tv = F.struct(
         F.unix_micros("ts").alias("us"),
         F.col("event_id").alias("id"),
@@ -1568,15 +1466,7 @@ def ev_hourly_ohlc_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(agg, "ev_hourly_ohlc_streamed_sink", "complete")
 
 
 @query(
@@ -1660,10 +1550,8 @@ def ev_distinct_users_hourly_streamed(spark: SparkSession, sf_dir: str) -> DataF
     (user, hour) across executors and expired by watermark in the
     incremental deployment (tests/test_streaming.py exercises the
     watermarked path); no shuffle carries raw events twice."""
-    sink = "ev_distinct_users_hourly_streamed_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_src_")
-    src = _stream_events_source(spark, d)
+    d = _events_dir(sf_dir)
+    src = read_events_stream(spark, d, max_files_per_trigger=None)
     deduped = (
         src.select(
             F.window("ts", "1 hour").alias("w"), "user_id"
@@ -1671,17 +1559,9 @@ def ev_distinct_users_hourly_streamed(spark: SparkSession, sf_dir: str) -> DataF
         .select(F.col("w.start").alias("hour_start"), "user_id")
         .dropDuplicates(["hour_start", "user_id"])
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = drain(deduped, "ev_distinct_users_hourly_streamed_sink", "append")
     return (
-        spark.table(sink)
-        .groupBy(F.unix_timestamp("hour_start").alias("window_start"))
+        out.groupBy(F.unix_timestamp("hour_start").alias("window_start"))
         .agg(F.count(F.lit(1)).alias("n_users"))
     )
 
@@ -1725,11 +1605,9 @@ def ev_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state stores; each arriving row probes the opposite buffer within
     the time bounds. The rollup afterwards is one map-side-combined
     groupBy over the (small) matched pairs."""
-    sink = "ev_stream_stream_join_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_src_")
+    d = _events_dir(sf_dir)
     purchases = (
-        _stream_events_source(spark, d)
+        read_events_stream(spark, d, max_files_per_trigger=None)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -1739,7 +1617,7 @@ def ev_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("p_ts", "35 days")
     )
     clicks = (
-        _stream_events_source(spark, d)
+        read_events_stream(spark, d, max_files_per_trigger=None)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user_id"), F.col("ts").alias("c_ts")
@@ -1754,17 +1632,9 @@ def ev_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AND c_ts < p_ts"
         ),
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = drain(joined, "ev_stream_stream_join_sink", "append")
     return (
-        spark.table(sink)
-        .groupBy("purchase_id", F.col("p_user_id").alias("user_id"))
+        out.groupBy("purchase_id", F.col("p_user_id").alias("user_id"))
         .agg(F.count(F.lit(1)).alias("n_clicks_30m"))
     )
 
@@ -1857,24 +1727,16 @@ def ev_append_mode_finalized_windows(spark: SparkSession, sf_dir: str) -> DataFr
     the watermark bounds state to open-windows-only, which is the
     difference that matters for an unbounded deployment — state size
     is O(windows in flight), not O(windows ever)."""
-    sink = "ev_append_finalized_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_src_")
-    src = _stream_events_source(spark, d).withWatermark("ts", "1 hour")
+    d = _events_dir(sf_dir)
+    src = read_events_stream(
+        spark, d, max_files_per_trigger=None
+    ).withWatermark("ts", "1 hour")
     agg = (
         src.groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.unix_timestamp("w.start").alias("window_start"), "n_events")
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(agg, "ev_append_finalized_sink", "append")
 
 
 @query(
@@ -2075,24 +1937,15 @@ def ev_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
         stream_dedup_events,
     )
 
-    sink = "ev_stream_dedup_wm_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(
-        sf_dir, ("events_a", "events_b"), "ev_stream_replay_"
+    d = _events_dir(sf_dir, ("events_a", "events_b"))
+    src = read_events_stream(spark, d)
+    out = drain(
+        stream_dedup_events(src, watermark="35 days"),
+        "ev_stream_dedup_wm_sink",
+        "append",
     )
-    src = _stream_events_source(spark, d, maxFilesPerTrigger=1)
-    q = (
-        stream_dedup_events(src, watermark="35 days")
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(sink)
-        .groupBy("event_type")
+        out.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
 
@@ -2552,13 +2405,6 @@ def ev_ordered_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c1.crossJoin(F.broadcast(c2)).crossJoin(F.broadcast(c3))
 
 
-# State roots for the foreachBatch-upsert sink, keyed by sf_dir: each
-# invocation resets its root (the stream must start from an empty
-# table) but the FINAL version must outlive the call — the returned
-# DataFrame is evaluated lazily by the driver after we return.
-_FOREACHBATCH_STATE: dict[str, str] = {}
-
-
 @query(
     "ev_stream_foreachbatch_upsert",
     oracle=f"""
@@ -2597,22 +2443,14 @@ def ev_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     state — is exactly the 100 TB one. The merge join is keyed on
     event_id, co-partitioned batch-over-batch."""
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
 
     from quick_and_easy_vectordb_spark.operators.merge import upsert
 
-    key = _os.path.abspath(sf_dir)
-    old = _FOREACHBATCH_STATE.get(key)
-    if old and _os.path.isdir(old):
-        _shutil.rmtree(old, ignore_errors=True)
-    root = _tempfile.mkdtemp(prefix="qev_fbatch_upsert_")
-    _FOREACHBATCH_STATE[key] = root
-
-    d = _stage_stream_dir(
-        sf_dir, ("events_a", "events_b", "events_c"), "ev_fbatch_replay_"
-    )
-    src = _stream_events_source(spark, d, maxFilesPerTrigger=1).select(
+    # Each run starts from an empty table; the final version outlives
+    # the call because the returned DataFrame scans it lazily.
+    root = fresh("fbatch_upsert", sf_dir)
+    d = _events_dir(sf_dir, ("events_a", "events_b", "events_c"))
+    src = read_events_stream(spark, d).select(
         "event_id", "user_id", "value"
     )
 
@@ -3240,10 +3078,8 @@ def ev_stream_bitmap_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_distinct_users_hourly_streamed (one state row per
     user-hour): the bitmap holds 32 users per row, trading row count
     for fixed-width registers."""
-    sink = "ev_stream_bitmap_actives_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_src_")
-    src = _stream_events_source(spark, d)
+    d = _events_dir(sf_dir)
+    src = read_events_stream(spark, d, max_files_per_trigger=None)
     bm = (
         src.select(
             F.window("ts", "1 day").alias("w"),
@@ -3255,17 +3091,9 @@ def ev_stream_bitmap_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("w.start").alias("day_start"), "word")
         .agg(F.bit_or("mask").alias("bm"))
     )
-    q = (
-        bm.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = drain(bm, "ev_stream_bitmap_actives_sink", "complete")
     return (
-        spark.table(sink)
-        .groupBy(F.unix_timestamp("day_start").alias("window_start"))
+        out.groupBy(F.unix_timestamp("day_start").alias("window_start"))
         .agg(
             F.sum(F.bit_count("bm")).cast("long").alias("n_active"),
             F.count(F.lit(1)).cast("long").alias("n_words"),
@@ -4076,22 +3904,18 @@ def ev_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame
     compaction) — the knobs a production deploy actually cares
     about."""
     import os
-    import tempfile
 
-    halves_dir, ready = _CKPT_SCRATCH.get(os.path.abspath(sf_dir)), True
-    if halves_dir is None or not os.path.isdir(halves_dir):
-        ready = False
-        halves_dir = tempfile.mkdtemp(prefix="ev_ckpt_halves_")
-        _CKPT_SCRATCH[os.path.abspath(sf_dir)] = halves_dir
-    if not ready:
+    def write_halves(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         for name, keep in (("h0", 0), ("h1", 1)):
             (
                 ev.filter(F.col("event_id") % 2 == keep)
                 .coalesce(1)
                 .write.mode("overwrite")
-                .parquet(os.path.join(halves_dir, name))
+                .parquet(os.path.join(d, name))
             )
+
+    halves_dir = staged("ckpt_halves", sf_dir, write_halves)
 
     def _links(src_sub: str, live: str) -> None:
         sub = os.path.join(halves_dir, src_sub)
@@ -4101,14 +3925,16 @@ def ev_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame
                     os.path.join(sub, f), os.path.join(live, f"{src_sub}_{f}")
                 )
 
-    live = tempfile.mkdtemp(prefix="ev_ckpt_live_")
-    ckpt = tempfile.mkdtemp(prefix="ev_ckpt_state_")
+    # Live feed + checkpoint are fresh per invocation so the restart
+    # sequence replays deterministically.
+    run = fresh("ckpt_run", sf_dir)
+    live, ckpt = os.path.join(run, "live"), os.path.join(run, "ckpt")
+    os.mkdir(live)
     _links("h0", live)
 
-    def _run(sink: str) -> None:
-        spark.catalog.dropTempView(sink)
+    def _run(sink: str) -> DataFrame:
         agg = (
-            _stream_events_source(spark, live)
+            read_events_stream(spark, live, max_files_per_trigger=None)
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -4116,21 +3942,11 @@ def ev_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.sum(F.col("value").cast("decimal(30,10)")).alias("_tv"),
             )
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return drain(agg, sink, "complete", checkpoint=ckpt)
 
     _run("ev_ckpt_run1")  # first half only; then the "crash"
     _links("h1", live)
-    _run("ev_ckpt_run2")  # restart: reads ONLY h1, state carries h0
-
-    final = spark.table("ev_ckpt_run2")
+    final = _run("ev_ckpt_run2")  # restart: reads ONLY h1, state carries h0
     return final.select(
         "event_type",
         "n_events",
@@ -4954,53 +4770,51 @@ _SENTINEL_TS = "2124-01-01 00:00:00"
 _SENTINEL_NANOS = 4859827200 * 1_000_000_000
 
 
-def _stage_stream_dir_sentinel(
-    spark: SparkSession, sf_dir: str, kinds: tuple[str, ...], prefix: str
+def _sentinel_dir(
+    spark: SparkSession, sf_dir: str, kinds: tuple[str, ...]
 ) -> str:
-    """Staging dir = events parquet + one sentinel file holding a
+    """Stream-source dir = events parquet + one sentinel file holding a
     far-future row per event_type in ``kinds`` (negative ids, so any
     equi-join on user_id can never match real rows). The sentinel file
-    is written with the SAME logical ts type the batch reader probes
+    is written with the SAME logical ts type the stream reader probes
     from the source footer, so the stream source's merged schema is
     unchanged."""
     import os
-    import tempfile
+    import shutil
 
-    key = (os.path.abspath(sf_dir), "sentinel:" + ",".join(kinds))
-    d = _STREAM_SRC_DIRS.get(key)
-    if d is not None and os.path.isdir(d):
-        return d
-    base = _stage_stream_dir(sf_dir, ("events",), prefix)
-    d = tempfile.mkdtemp(prefix=prefix + "sent_")
-    for f in os.listdir(base):
-        os.symlink(os.path.realpath(os.path.join(base, f)), os.path.join(d, f))
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    one = spark.read.parquet(src).limit(1)
-    ts_dtype = one.schema["ts"].dataType
-    if ts_dtype.simpleString() == "bigint":  # TIMESTAMP(NANOS) as raw long
-        ts_lit = F.lit(_SENTINEL_NANOS).cast("long")
-    else:
-        ts_lit = F.lit(_SENTINEL_TS).cast(ts_dtype)
-    rows = None
-    for i, et in enumerate(kinds):
-        r = one.select(
-            F.lit(-(i + 1)).cast("long").alias("event_id"),
-            ts_lit.alias("ts"),
-            F.lit(-(i + 1)).cast("long").alias("user_id"),
-            F.lit(et).alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit("{}").alias("props"),
+    def write(d: str) -> None:
+        _link_events(sf_dir, ("events",), d)
+        read_nanos_as_long(spark)
+        src = os.path.abspath(f"{sf_dir}/events.parquet")
+        one = spark.read.parquet(src).limit(1)
+        ts_dtype = one.schema["ts"].dataType
+        if ts_dtype.simpleString() == "bigint":  # TIMESTAMP(NANOS) as raw long
+            ts_lit = F.lit(_SENTINEL_NANOS).cast("long")
+        else:
+            ts_lit = F.lit(_SENTINEL_TS).cast(ts_dtype)
+        rows = None
+        for i, et in enumerate(kinds):
+            r = one.select(
+                F.lit(-(i + 1)).cast("long").alias("event_id"),
+                ts_lit.alias("ts"),
+                F.lit(-(i + 1)).cast("long").alias("user_id"),
+                F.lit(et).alias("event_type"),
+                F.lit(0.0).alias("value"),
+                F.lit("{}").alias("props"),
+            )
+            rows = r if rows is None else rows.unionAll(r)
+        out = os.path.join(d, "_sentinel")
+        rows.coalesce(1).write.mode("overwrite").parquet(out)
+        leaf = sorted(
+            f for f in os.listdir(out)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )[0]
+        os.rename(
+            os.path.join(out, leaf), os.path.join(d, "zz_sentinel.parquet")
         )
-        rows = r if rows is None else rows.unionAll(r)
-    sdir = tempfile.mkdtemp(prefix=prefix + "write_")
-    rows.coalesce(1).write.mode("overwrite").parquet(sdir)
-    leaf = sorted(
-        f for f in os.listdir(sdir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )[0]
-    os.symlink(os.path.join(sdir, leaf), os.path.join(d, "zz_sentinel.parquet"))
-    _STREAM_SRC_DIRS[key] = d
-    return d
+        shutil.rmtree(out)
+
+    return staged("events_sentinel_" + "_".join(kinds), sf_dir, write)
 
 
 @query(
@@ -5030,7 +4844,7 @@ def ev_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a row the engine held back until the watermark closed its
     window, then released exactly once.
 
-    The far-future sentinel (see _stage_stream_dir_sentinel) pushes
+    The far-future sentinel (see _sentinel_dir) pushes
     the final watermark past every real purchase so the tail rows
     close too; the sentinel purchase itself is the one row the
     watermark never passes, so it stays buffered and out of the
@@ -5044,13 +4858,9 @@ def ev_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides hash-partitioned by user_id into co-located state stores,
     per-row range probe) plus the watermark-driven eviction scan; a
     shrunk production delay bounds state to O(users · 30 min)."""
-    sink = "ev_stream_left_outer_join_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir_sentinel(
-        spark, sf_dir, ("purchase", "click"), "ev_stream_louter_"
-    )
+    d = _sentinel_dir(spark, sf_dir, ("purchase", "click"))
     purchases = (
-        _stream_events_source(spark, d)
+        read_events_stream(spark, d, max_files_per_trigger=None)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -5060,7 +4870,7 @@ def ev_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("p_ts", "1 minute")
     )
     clicks = (
-        _stream_events_source(spark, d)
+        read_events_stream(spark, d, max_files_per_trigger=None)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -5078,17 +4888,9 @@ def ev_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftOuter",
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = drain(joined, "ev_stream_left_outer_join_sink", "append")
     return (
-        spark.table(sink)
-        .groupBy("purchase_id", F.col("p_user_id").alias("user_id"))
+        out.groupBy("purchase_id", F.col("p_user_id").alias("user_id"))
         .agg(F.count("click_id").cast("long").alias("n_clicks_30m"))
     )
 
@@ -5121,7 +4923,7 @@ def ev_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same watermark; the second level's window(w5, '1 hour')
     groups by the TIME COLUMN of the first level's window struct.
 
-    The sentinel row (see _stage_stream_dir_sentinel) finalizes every
+    The sentinel row (see _sentinel_dir) finalizes every
     real 5-minute and 1-hour window; its own 2124 window can never
     finalize, so it is structurally absent from the sink.
 
@@ -5132,12 +4934,10 @@ def ev_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange; level-2 state is |hours × types|, negligible. This is
     strictly cheaper than two separate jobs because level 2 consumes
     level 1's in-flight stream, never a persisted intermediate."""
-    sink = "ev_stream_chained_agg_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir_sentinel(
-        spark, sf_dir, ("purchase",), "ev_stream_chain_"
-    )
-    s = _stream_events_source(spark, d).withWatermark("ts", "1 minute")
+    d = _sentinel_dir(spark, sf_dir, ("purchase",))
+    s = read_events_stream(
+        spark, d, max_files_per_trigger=None
+    ).withWatermark("ts", "1 minute")
     a1 = s.groupBy(
         F.window("ts", "5 minutes").alias("w5"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n5"))
@@ -5148,15 +4948,8 @@ def ev_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n5").cast("long").alias("total"),
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
     )
-    q = (
-        a2.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
+    out = drain(a2, "ev_stream_chained_agg_sink", "append")
+    return out.select(
         F.unix_timestamp(F.col("wh.start")).cast("long").alias("hour_start"),
         "event_type",
         "max_5m",
@@ -5997,9 +5790,6 @@ def ev_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LATE_ACCT_DIRS: dict[str, str] = {}
-
-
 @query(
     "ev_stream_late_data_accounting",
     oracle="""
@@ -6040,13 +5830,9 @@ def ev_stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFram
     broadcast watermark — accounting costs nothing."""
     import os
     import shutil
-    import tempfile
 
-    key = os.path.abspath(sf_dir)
-    out = _LATE_ACCT_DIRS.get(key)
-    if out is None or not os.path.isdir(out):
+    def write(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
-        d = tempfile.mkdtemp(prefix="ev_late_acct_")
         a_dir, b_dir = d + "/late_half", d + "/early_half"
         ev.filter(F.dayofmonth("ts") >= 16).coalesce(1).write.mode(
             "overwrite"
@@ -6096,8 +5882,8 @@ def ev_stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFram
             os.path.join(feed, "02_first_half.parquet"),
         )
         run()  # run 2: first half arrives 2 weeks late -> dropped
-        _LATE_ACCT_DIRS[key] = out
 
+    out = os.path.join(staged("late_acct", sf_dir, write), "out")
     sunk = spark.read.parquet(out).groupBy("w").agg(
         F.max("n").alias("n")
     )
@@ -6551,13 +6337,9 @@ def ev_stream_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange (keyed by hour) — two stateful operators, two shuffles,
     zero intermediate storage; pre-3.4 this was two jobs and a Kafka
     topic between them."""
-    sink = "ev_stream_join_then_agg_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir_sentinel(
-        spark, sf_dir, ("purchase", "click"), "ev_stream_ja_"
-    )
+    d = _sentinel_dir(spark, sf_dir, ("purchase", "click"))
     purchases = (
-        _stream_events_source(spark, d)
+        read_events_stream(spark, d, max_files_per_trigger=None)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -6567,7 +6349,7 @@ def ev_stream_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("p_ts", "1 minute")
     )
     clicks = (
-        _stream_events_source(spark, d)
+        read_events_stream(spark, d, max_files_per_trigger=None)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user_id"), F.col("ts").alias("c_ts")
@@ -6585,15 +6367,8 @@ def ev_stream_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = j.groupBy(F.window("p_ts", "1 hour").alias("w")).agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs")
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
+    out = drain(agg, "ev_stream_join_then_agg_sink", "append")
+    return out.select(
         F.unix_timestamp(F.col("w.start")).cast("long").alias("hour_start"),
         "n_pairs",
     )
@@ -8274,8 +8049,6 @@ def run_stream_transform_with_state(
         stream_user_activity_tws,
     )
 
-    sink = "ev_stream_tws_sink"
-    spark.catalog.dropTempView(sink)
     prev = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass", None
     )
@@ -8285,17 +8058,11 @@ def run_stream_transform_with_state(
         "RocksDBStateStoreProvider",
     )
     try:
-        d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_tws_")
-        src = _stream_events_source(spark, d)
-        q = (
-            stream_user_activity_tws(src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+        d = _events_dir(sf_dir)
+        src = read_events_stream(spark, d, max_files_per_trigger=None)
+        out = drain(
+            stream_user_activity_tws(src), "ev_stream_tws_sink", "update"
         )
-        q.awaitTermination()
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -8303,7 +8070,7 @@ def run_stream_transform_with_state(
             spark.conf.set(
                 "spark.sql.streaming.stateStore.providerClass", prev
             )
-    return spark.table(sink).groupBy("user_id").agg(
+    return out.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.min("first_us").alias("first_us"),
         F.max("last_us").alias("last_us"),
@@ -8812,10 +8579,8 @@ def ev_stream_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming grid is bit-equivalent to the batch grid (integer
     counts merge associatively, the design rule every streaming twin
     here follows)."""
-    sink = "ev_stream_sprt_monitor_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_sprt_")
-    src = _stream_events_source(spark, d)
+    d = _events_dir(sf_dir)
+    src = read_events_stream(spark, d, max_files_per_trigger=None)
     daily = (
         src.select(
             (F.col("user_id") % 2).alias("variant"),
@@ -8825,15 +8590,8 @@ def ev_stream_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("variant", "day")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("conv").alias("c"))
     )
-    q = (
-        daily.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    grid = spark.table(sink)
+    out = drain(daily, "ev_stream_sprt_monitor_sink", "complete")
+    grid = out
     w = (
         Window.partitionBy("variant")
         .orderBy("day")
@@ -8924,10 +8682,8 @@ def ev_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape at 100 TB/day: partial max combines map-side within
     each micro-batch; the state store holds G*64 rows hash-partitioned
     by (type, idx); downstream estimate is O(G*64)."""
-    sink = "ev_stream_hll_distinct_sink"
-    spark.catalog.dropTempView(sink)
-    d = _stage_stream_dir(sf_dir, ("events",), "ev_stream_src_")
-    src = _stream_events_source(spark, d)
+    d = _events_dir(sf_dir)
+    src = read_events_stream(spark, d, max_files_per_trigger=None)
     h = F.conv(
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 12), 16, 10
     ).cast("long")
@@ -8943,21 +8699,14 @@ def ev_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "idx")
         .agg(F.max("rho").alias("m"))
     )
-    q = (
-        regs_stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = drain(regs_stream, "ev_stream_hll_distinct_sink", "complete")
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     grid = (
         ev.select("event_type")
         .distinct()
         .crossJoin(spark.range(64).select(F.col("id").alias("idx")))
     )
-    regs = grid.join(spark.table(sink), ["event_type", "idx"], "left").select(
+    regs = grid.join(out, ["event_type", "idx"], "left").select(
         "event_type", "idx", F.coalesce("m", F.lit(0)).alias("m")
     )
     alpha = F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(64.0))

@@ -38,24 +38,9 @@ from quick_and_easy_vectordb_spark.queries.common import (
 from quick_and_easy_vectordb_spark.operators.util import ensure_parallelism
 from quick_and_easy_vectordb_spark.queries.registry import query
 from quick_and_easy_vectordb_spark.sources.catalog import load_table
+from quick_and_easy_vectordb_spark.sources.scratch import fresh, staged
 
 _EMB = "embedding::DOUBLE[]"
-
-_LH_SCRATCH: dict[tuple[str, str], str] = {}
-
-
-def _scratch_dir(kind: str, sf_dir: str) -> tuple[str, bool]:
-    """(path, already_written) for a cached per-process scratch dir."""
-    import tempfile
-
-    key = (kind, os.path.abspath(sf_dir))
-    d = _LH_SCRATCH.get(key)
-    if d is not None and os.path.isdir(d):
-        return d, True
-    d = tempfile.mkdtemp(prefix=f"qev_{kind}_")
-    _LH_SCRATCH[key] = d
-    return d, False
-
 
 def ordered_positions(
     df: DataFrame, key: str, n_buckets: int = 64
@@ -304,9 +289,9 @@ def src_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice"),
     )
     fmt = ManifestParquetFormat()
-    d, ready = _scratch_dir("timetravel", sf_dir)
-    table = os.path.join(d, "orders_versioned")
-    if not ready or len(fmt.versions(table)) < 3:
+
+    def write(d: str) -> None:
+        table = os.path.join(d, "orders_versioned")
         o = load_table(spark, sf_dir, "orders").select(*base_cols)
         odd = o.filter(F.col("o_orderkey") % 2 == 1)
         fmt.commit(o.filter(F.col("o_orderkey") % 2 == 0), table,
@@ -323,6 +308,8 @@ def src_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             replace="odd",
             name="odd_restated",
         )
+
+    table = os.path.join(staged("timetravel", sf_dir, write), "orders_versioned")
 
     def read_snapshot(version: int) -> DataFrame:
         return fmt.read(spark, table, version=version)
@@ -395,10 +382,10 @@ def vdb_ivf_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of corpus size; the persisted assignment table is
     label-partitioned so the cell read is partition-pruned I/O, and
     nothing outside the probed cell is ever fetched."""
-    d, ready = _scratch_dir("ivf_index", sf_dir)
-    cent_path = os.path.join(d, "centroids")
-    assign_path = os.path.join(d, "assignments")
-    if not ready or not os.path.isdir(assign_path):
+
+    def write(d: str) -> None:
+        cent_path = os.path.join(d, "centroids")
+        assign_path = os.path.join(d, "assignments")
         emb = load_table(spark, sf_dir, "embeddings")
         centroids_by_key(emb, "embedding", "label").withColumnRenamed(
             "key", "label"
@@ -406,6 +393,10 @@ def vdb_ivf_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select("label", "vec_id", "embedding").write.mode(
             "overwrite"
         ).partitionBy("label").parquet(assign_path)
+
+    d = staged("ivf_index", sf_dir, write)
+    cent_path = os.path.join(d, "centroids")
+    assign_path = os.path.join(d, "assignments")
 
     # Search session: everything below reads only the persisted index.
     cent = spark.read.parquet(cent_path)
@@ -585,9 +576,9 @@ def src_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape at 100 TB: schema-declared JSON scan (no inference
     pass over the corpus); the corrupt column costs nothing on clean
     rows; staging is a distributed text write, never driver-side."""
-    d, ready = _scratch_dir("json_corrupt", sf_dir)
-    path = os.path.join(d, "docs_jsonl")
-    if not ready or not os.path.isdir(path):
+
+    def write(d: str) -> None:
+        path = os.path.join(d, "docs_jsonl")
         docs = load_table(spark, sf_dir, "documents")
         js = docs.select(
             F.to_json(F.struct("doc_id", "lang", "n_chars")).alias("line"),
@@ -602,6 +593,8 @@ def src_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .text(path)
         )
+
+    path = os.path.join(staged("json_corrupt", sf_dir, write), "docs_jsonl")
     back = (
         spark.read.schema(
             "doc_id long, lang string, n_chars long, _bad string"
@@ -622,9 +615,6 @@ def src_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming vector ingest + search (the reference loop, stream-native)
 # ---------------------------------------------------------------------------
-
-_STREAM_APPEND_STATE: dict[str, str] = {}
-
 
 @query(
     "vdb_stream_append_search",
@@ -659,12 +649,9 @@ def vdb_stream_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     built. Checkpoint + file-source log give restart-safe
     exactly-once across ingest failures
     (ev_stream_checkpoint_recovery proves that property directly)."""
-    import shutil
-    import tempfile
 
-    d, ready = _scratch_dir("stream_append_src", sf_dir)
-    src_dir = os.path.join(d, "batches")
-    if not ready or not os.path.isdir(src_dir):
+    def write(d: str) -> None:
+        src_dir = os.path.join(d, "batches")
         emb = load_table(spark, sf_dir, "embeddings")
         os.makedirs(src_dir, exist_ok=True)
         for i in range(4):
@@ -681,15 +668,12 @@ def vdb_stream_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(src_dir, f"batch_{i}.parquet"),
             )
 
+    src_dir = os.path.join(staged("stream_append_src", sf_dir, write), "batches")
+
     # Fresh accumulating table + checkpoint per invocation: reusing a
     # checkpoint would (correctly) skip already-ingested files and
     # make the second run a no-op against a stale table.
-    key = os.path.abspath(sf_dir)
-    old = _STREAM_APPEND_STATE.get(key)
-    if old and os.path.isdir(old):
-        shutil.rmtree(old, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="qev_stream_append_")
-    _STREAM_APPEND_STATE[key] = root
+    root = fresh("stream_append", sf_dir)
     table = os.path.join(root, "vector_table")
 
     src = (
@@ -914,11 +898,11 @@ def src_merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle at all. Compaction (folding delete files back into data
     files) is exactly src_cdc_log_compaction's shape when read
     amplification grows."""
-    d, written = _scratch_dir("mor", sf_dir)
-    base_path = os.path.join(d, "base")
-    pos_del_path = os.path.join(d, "pos_deletes")
-    eq_del_path = os.path.join(d, "eq_deletes")
-    if not written:
+
+    def write(d: str) -> None:
+        base_path = os.path.join(d, "base")
+        pos_del_path = os.path.join(d, "pos_deletes")
+        eq_del_path = os.path.join(d, "eq_deletes")
         orders = load_table(spark, sf_dir, "orders")
         # write-time position assignment is the distributed bucketed
         # prefix-sum (ordered_positions) — the plain
@@ -938,6 +922,11 @@ def src_merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         base_r.filter(F.col("o_orderkey") % 131 == 0).select(
             "o_orderkey"
         ).write.mode("overwrite").parquet(eq_del_path)
+
+    d = staged("mor", sf_dir, write)
+    base_path = os.path.join(d, "base")
+    pos_del_path = os.path.join(d, "pos_deletes")
+    eq_del_path = os.path.join(d, "eq_deletes")
     base = spark.read.parquet(base_path)
     pos_del = spark.read.parquet(pos_del_path)
     eq_del = spark.read.parquet(eq_del_path)
@@ -1010,9 +999,9 @@ def src_copy_on_write_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite — a 1-row update in a 1000-partition table rewrites
     one partition, and this query is the regression test that it
     STAYS one."""
-    d, written = _scratch_dir("cow", sf_dir)
-    tbl = os.path.join(d, "table")
-    if not written:
+
+    def write(d: str) -> None:
+        tbl = os.path.join(d, "table")
         orders = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("k"),
             F.col("o_totalprice").alias("p"),
@@ -1046,6 +1035,8 @@ def src_copy_on_write_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+    tbl = os.path.join(staged("cow", sf_dir, write), "table")
     final = spark.read.parquet(tbl).select(
         "k", "p", F.col("bucket").cast("long").alias("bucket")
     )
@@ -1332,10 +1323,10 @@ def src_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     cutoff = "2024-01-15"
-    d, ready = _scratch_dir("part_evolution", sf_dir)
-    old_path = os.path.join(d, "events_by_week")
-    new_path = os.path.join(d, "events_by_date")
-    if not ready or not os.path.isdir(old_path):
+
+    def write(d: str) -> None:
+        old_path = os.path.join(d, "events_by_week")
+        new_path = os.path.join(d, "events_by_date")
         from quick_and_easy_vectordb_spark.sources.writers import write_corpus
 
         ev = load_table(spark, sf_dir, "events").select(
@@ -1360,6 +1351,10 @@ def src_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             new_path,
             partition_by="event_date",
         )
+
+    d = staged("part_evolution", sf_dir, write)
+    old_path = os.path.join(d, "events_by_week")
+    new_path = os.path.join(d, "events_by_date")
     lo, hi = "2024-01-12", "2024-01-18"
     old = (
         spark.read.parquet(old_path)
@@ -1726,10 +1721,10 @@ def src_snapshot_expire_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     fmt = ManifestParquetFormat()
-    d, ready = _scratch_dir("vacuum", sf_dir)
-    table = os.path.join(d, "orders_vacuum")
-    stats_path = os.path.join(d, "vacuum_stats.json")
-    if not ready or not os.path.isfile(stats_path):
+
+    def write(d: str) -> None:
+        table = os.path.join(d, "orders_vacuum")
+        stats_path = os.path.join(d, "vacuum_stats.json")
         o = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey"),
             F.year("o_orderdate").cast("long").alias("yr"),
@@ -1753,6 +1748,10 @@ def src_snapshot_expire_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats = fmt.expire(table, keep_versions=[3])
         with open(stats_path, "w") as f:
             json.dump(stats, f)
+
+    d = staged("vacuum", sf_dir, write)
+    table = os.path.join(d, "orders_vacuum")
+    stats_path = os.path.join(d, "vacuum_stats.json")
     with open(stats_path) as f:
         stats = json.load(f)
     try:
@@ -1828,9 +1827,9 @@ def src_incremental_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     fmt = ManifestParquetFormat()
-    d, ready = _scratch_dir("incrdiff", sf_dir)
-    table = os.path.join(d, "orders_incremental")
-    if not ready or len(fmt.versions(table)) < 3:
+
+    def write(d: str) -> None:
+        table = os.path.join(d, "orders_incremental")
         o = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey"),
             F.year("o_orderdate").cast("long").alias("yr"),
@@ -1847,6 +1846,8 @@ def src_incremental_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame
             table,
             name="batch100",
         )
+
+    table = os.path.join(staged("incrdiff", sf_dir, write), "orders_incremental")
 
     def inc(tag: str, v_from: int, v_to: int) -> DataFrame:
         return fmt.read_diff(spark, table, v_from, v_to).select(
@@ -1915,9 +1916,9 @@ def src_manifest_branch_isolation(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     fmt = ManifestParquetFormat()
-    d, ready = _scratch_dir("branching", sf_dir)
-    table = os.path.join(d, "orders_branched")
-    if not ready or len(fmt.versions(table)) < 2:
+
+    def write(d: str) -> None:
+        table = os.path.join(d, "orders_branched")
         o = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey"),
             F.year("o_orderdate").cast("long").alias("yr"),
@@ -1935,6 +1936,8 @@ def src_manifest_branch_isolation(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         fmt.commit(o.filter(F.col("o_orderkey") % 2 == 1), table,
                    name="odd")                                   # main v2
+
+    table = os.path.join(staged("branching", sf_dir, write), "orders_branched")
     branch = os.path.join(table, "branches", "exp")
 
     def ref(tag: str, path: str, version: int) -> DataFrame:
@@ -2007,10 +2010,10 @@ def src_vacuum_restatement_safety(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     fmt = ManifestParquetFormat()
-    d, ready = _scratch_dir("vacuum_restate", sf_dir)
-    table = os.path.join(d, "orders_restate_vacuum")
-    stats_path = os.path.join(d, "vacuum_restate_stats.json")
-    if not ready or not os.path.isfile(stats_path):
+
+    def write(d: str) -> None:
+        table = os.path.join(d, "orders_restate_vacuum")
+        stats_path = os.path.join(d, "vacuum_restate_stats.json")
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
@@ -2024,6 +2027,10 @@ def src_vacuum_restatement_safety(spark: SparkSession, sf_dir: str) -> DataFrame
         stats = fmt.expire(table, keep_versions=[3])
         with open(stats_path, "w") as f:
             json.dump(stats, f)
+
+    d = staged("vacuum_restate", sf_dir, write)
+    table = os.path.join(d, "orders_restate_vacuum")
+    stats_path = os.path.join(d, "vacuum_restate_stats.json")
     with open(stats_path) as f:
         stats = json.load(f)
     try:
@@ -2105,9 +2112,8 @@ def src_pdf_datasource_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_pdf,
     )
 
-    d, ready = _scratch_dir("pdfdir", sf_dir)
-    pdf_dir = os.path.join(d, "pdfs")
-    if not ready or not os.path.isdir(pdf_dir):
+    def write(d: str) -> None:
+        pdf_dir = os.path.join(d, "pdfs")
         _os.makedirs(pdf_dir, exist_ok=True)
         rows = (
             load_table(spark, sf_dir, "documents")
@@ -2123,6 +2129,8 @@ def src_pdf_datasource_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(pdf_dir, f"{int(r.doc_id):06d}.pdf"), "wb"
             ) as f:
                 f.write(pdf_encode(pages))
+
+    pdf_dir = os.path.join(staged("pdfdir", sf_dir, write), "pdfs")
     register_pdf(spark)
     return (
         spark.read.format("qev_pdf")
@@ -2529,17 +2537,13 @@ def src_corpus_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionBy routing; the append touches only new files; the
     read-back scan prunes to lang directories and reads exactly the
     3 columns the aggregate needs."""
-    import tempfile
-
     from quick_and_easy_vectordb_spark.sources.writers import (
         append_rows,
         read_corpus,
         write_corpus,
     )
 
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="src_corpus_sink_"), "corpus"
-    )
+    path = os.path.join(fresh("corpus_sink", sf_dir), "corpus")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
@@ -2587,11 +2591,7 @@ def src_jsonl_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition emits its own .gz member), which is exactly how crawl
     drops are laid out (thousands of ~100 MB members). The read plan
     scales with the member count, not with file size."""
-    import tempfile
-
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="src_jsonl_gz_"), "docs"
-    )
+    path = os.path.join(fresh("jsonl_gz", sf_dir), "docs")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars", "text"
     )
@@ -2651,7 +2651,6 @@ def src_conflict_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     create-exclusive, the same atomic primitive object stores expose
     as if-none-match puts)."""
     import json as _json
-    import tempfile
 
     from quick_and_easy_vectordb_spark.sources.table_format import (
         CommitConflict,
@@ -2659,9 +2658,7 @@ def src_conflict_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     fmt = ManifestParquetFormat()
-    table = os.path.join(
-        tempfile.mkdtemp(prefix="src_conflict_"), "docs_versioned"
-    )
+    table = os.path.join(fresh("commit_conflict", sf_dir), "docs_versioned")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").alias("text_len")
     )

@@ -33,6 +33,7 @@ from pyspark.sql.functions import pandas_udf
 from quick_and_easy_vectordb_spark.operators.util import ensure_parallelism
 from quick_and_easy_vectordb_spark.queries.registry import query
 from quick_and_easy_vectordb_spark.sources.catalog import load_table
+from quick_and_easy_vectordb_spark.sources.scratch import fresh, staged
 
 
 @query(
@@ -640,12 +641,11 @@ def src_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     messages; the manifest read costs one small file."""
     import json as _json
     import os as _os
-    import tempfile
 
     from quick_and_easy_vectordb_spark.sources.pydatasource import register
 
     register(spark)
-    out = tempfile.mkdtemp(prefix="qev_sink_")
+    out = fresh("pydatasource_sink", sf_dir)
     (
         spark.read.format("qev_synth")
         .option("rows", 800)
@@ -726,26 +726,6 @@ def udf_pandas_iterator(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Materialized source-roundtrip scratch dirs, keyed by (kind, sf_dir):
-# written once per process, reused by repeated invocations (the
-# returned DataFrame scans them lazily, so they must outlive the call).
-_SRC_SCRATCH: dict[tuple[str, str], str] = {}
-
-
-def _scratch_dir(kind: str, sf_dir: str) -> tuple[str, bool]:
-    """(path, already_written) for a cached per-process scratch dir."""
-    import os
-    import tempfile
-
-    key = (kind, os.path.abspath(sf_dir))
-    d = _SRC_SCRATCH.get(key)
-    if d is not None and os.path.isdir(d):
-        return d, True
-    d = tempfile.mkdtemp(prefix=f"qev_{kind}_")
-    _SRC_SCRATCH[key] = d
-    return d, False
-
-
 @query(
     "src_partitioned_parquet_prune",
     oracle="""
@@ -785,9 +765,8 @@ def src_partitioned_parquet_prune(spark: SparkSession, sf_dir: str) -> DataFrame
     date representation in the layout."""
     import os
 
-    d, ready = _scratch_dir("part_prune", sf_dir)
-    path = os.path.join(d, "events_by_date")
-    if not ready or not os.path.isdir(path):
+    def write(d: str) -> None:
+        path = os.path.join(d, "events_by_date")
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
@@ -798,6 +777,8 @@ def src_partitioned_parquet_prune(spark: SparkSession, sf_dir: str) -> DataFrame
         from quick_and_easy_vectordb_spark.sources.writers import write_corpus
 
         write_corpus(ev, path, partition_by="event_date")
+
+    path = os.path.join(staged("part_prune", sf_dir, write), "events_by_date")
     back = spark.read.parquet(path).filter(
         F.col("event_date").cast("string").between("2024-01-08", "2024-01-14")
     )
@@ -843,9 +824,8 @@ def src_json_lines_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (json scans prune columns at parse time)."""
     import os
 
-    d, ready = _scratch_dir("jsonl", sf_dir)
-    path = os.path.join(d, "events_jsonl")
-    if not ready or not os.path.isdir(path):
+    def write(d: str) -> None:
+        path = os.path.join(d, "events_jsonl")
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
@@ -854,6 +834,8 @@ def src_json_lines_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
         ev.write.mode("overwrite").json(path)
+
+    path = os.path.join(staged("jsonl", sf_dir, write), "events_jsonl")
     back = spark.read.schema(
         "event_id long, user_id long, event_type string, us long, value double"
     ).json(path)
@@ -910,9 +892,8 @@ def src_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     path."""
     import os
 
-    d, ready = _scratch_dir("schema_merge", sf_dir)
-    root = os.path.join(d, "events_evolving")
-    if not ready or not os.path.isdir(root):
+    def write(d: str) -> None:
+        root = os.path.join(d, "events_evolving")
         ev = load_table(spark, sf_dir, "events")
         ev.filter(F.col("event_id") % 97 == 0).select(
             "event_id", "user_id"
@@ -920,6 +901,8 @@ def src_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_id") % 101 == 0).select(
             "event_id", "user_id", "value"
         ).write.mode("overwrite").parquet(os.path.join(root, "gen=2"))
+
+    root = os.path.join(staged("schema_merge", sf_dir, write), "events_evolving")
     back = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(root, "gen=1"), os.path.join(root, "gen=2")
     )
@@ -1028,9 +1011,8 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FileFormat-based scans under the same planner)."""
     import os
 
-    d, ready = _scratch_dir("orc", sf_dir)
-    path = os.path.join(d, "events_orc")
-    if not ready or not os.path.isdir(path):
+    def write(d: str) -> None:
+        path = os.path.join(d, "events_orc")
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
@@ -1039,6 +1021,8 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
         ev.write.mode("overwrite").orc(path)
+
+    path = os.path.join(staged("orc", sf_dir, write), "events_orc")
     back = spark.read.schema(
         "event_id long, user_id long, event_type string, us long, value double"
     ).orc(path)
@@ -1087,9 +1071,8 @@ def src_csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the curation pipeline moves it to parquet."""
     import os
 
-    d, ready = _scratch_dir("csv_quoted", sf_dir)
-    path = os.path.join(d, "events_csv")
-    if not ready or not os.path.isdir(path):
+    def write(d: str) -> None:
+        path = os.path.join(d, "events_csv")
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "event_type",
@@ -1107,6 +1090,8 @@ def src_csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("header", "false")
             .csv(path)
         )
+
+    path = os.path.join(staged("csv_quoted", sf_dir, write), "events_csv")
     back = (
         spark.read.schema("event_id long, event_type string, tricky string")
         .option("quote", '"')
@@ -1231,10 +1216,9 @@ def src_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's scans stay O(data) instead of O(files)."""
     import os
 
-    d, ready = _scratch_dir("compaction", sf_dir)
-    frag = os.path.join(d, "events_fragmented")
-    compact = os.path.join(d, "events_compacted")
-    if not ready or not os.path.isdir(compact):
+    def write(d: str) -> None:
+        frag = os.path.join(d, "events_fragmented")
+        compact = os.path.join(d, "events_compacted")
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value"
         )
@@ -1242,6 +1226,10 @@ def src_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(frag).repartition(4).write.mode(
             "overwrite"
         ).parquet(compact)
+
+    d = staged("compaction", sf_dir, write)
+    frag = os.path.join(d, "events_fragmented")
+    compact = os.path.join(d, "events_compacted")
     back = spark.read.parquet(compact)
     n_small = len(
         [f for f in os.listdir(frag) if f.endswith(".parquet")]
@@ -1293,9 +1281,8 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     why the curation pipeline's first move is XML -> parquet."""
     import os
 
-    d, ready = _scratch_dir("xml", sf_dir)
-    path = os.path.join(d, "events_xml")
-    if not ready or not os.path.isdir(path):
+    def write(d: str) -> None:
+        path = os.path.join(d, "events_xml")
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
@@ -1306,6 +1293,8 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.write.mode("overwrite").format("xml").option("rowTag", "event").save(
             path
         )
+
+    path = os.path.join(staged("xml", sf_dir, write), "events_xml")
     back = (
         spark.read.format("xml")
         .option("rowTag", "event")
@@ -1452,9 +1441,8 @@ def src_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/multimodal.py) without re-shuffling."""
     import os
 
-    d, ready = _scratch_dir("binfiles", sf_dir)
-    files = os.path.join(d, "docs")
-    if not ready or not os.path.isdir(files):
+    def write(d: str) -> None:
+        files = os.path.join(d, "docs")
         os.makedirs(files, exist_ok=True)
         # Fixture staging, not the operator: 50 rows materialize once
         # per process to create the on-disk file corpus the binaryFile
@@ -1468,6 +1456,8 @@ def src_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in rows:
             with open(os.path.join(files, f"doc_{r.doc_id:05d}.txt"), "wb") as f:
                 f.write(r.text.encode("utf-8"))
+
+    files = os.path.join(staged("binfiles", sf_dir, write), "docs")
     back = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.txt")
@@ -1518,9 +1508,8 @@ def src_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     parallel."""
     import os
 
-    d, ready = _scratch_dir("dynpart", sf_dir)
-    path = os.path.join(d, "orders_by_year")
-    if not ready or not os.path.isdir(path):
+    def write(d: str) -> None:
+        path = os.path.join(d, "orders_by_year")
         o = load_table(spark, sf_dir, "orders").select(
             F.year("o_orderdate").alias("yr"),
             F.col("o_totalprice").alias("price"),
@@ -1536,6 +1525,8 @@ def src_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
         restated.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("yr").parquet(path)
+
+    path = os.path.join(staged("dynpart", sf_dir, write), "orders_by_year")
     back = spark.read.parquet(path)
     return back.groupBy("yr").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1786,9 +1777,8 @@ def src_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
     fact table and throws 71%% of it away post-join."""
     import os
 
-    d, ready = _scratch_dir("dpp", sf_dir)
-    path = os.path.join(d, "events_by_date")
-    if not ready or not os.path.isdir(path):
+    def write(d: str) -> None:
+        path = os.path.join(d, "events_by_date")
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
@@ -1799,6 +1789,8 @@ def src_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
         from quick_and_easy_vectordb_spark.sources.writers import write_corpus
 
         write_corpus(ev, path, partition_by="event_date")
+
+    path = os.path.join(staged("dpp", sf_dir, write), "events_by_date")
     fact = spark.read.parquet(path)
     dim = spark.range(60).select(
         F.date_format(

@@ -20,7 +20,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+from quick_and_easy_vectordb_spark.sources import scratch
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+
+def _default_driver_memory() -> str:
+    """Half the host's MemTotal, capped at 32g (32g if /proc/meminfo is
+    unreadable). Local mode runs every executor thread in the driver
+    JVM, whose RSS exceeds its heap, so a heap the size of the host
+    gets the process OOM-killed."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "32g"
+    return f"{min(32 * 1024, kib // 2048)}m"
 
 
 def get_spark(
@@ -55,15 +70,18 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # local mode: the driver JVM hosts all executor threads, so it
         # needs executor-scale heap (32 threads on a 128 GiB box)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # managed tables (bucketed writes) go to scratch, not the repo.
         # Per-process dir: each process also gets its own derby metastore,
         # so a shared warehouse would let one process's orphan-location
         # cleanup (writers.write_bucketed) delete a table a concurrent
-        # process's catalog still references. Pid-keyed dirs make that
-        # impossible; /tmp reaping handles the accumulation.
-        .config("spark.sql.warehouse.dir", f"/tmp/qev_spark_warehouse_{os.getpid()}")
+        # process's catalog still references. The per-process scratch
+        # root makes that impossible and is removed at exit.
+        .config("spark.sql.warehouse.dir", os.path.join(scratch.root(), "warehouse"))
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -41,7 +41,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _SCAN_META: dict[tuple, tuple] = {}
 
 
-def _infer_meta(spark: SparkSession, path: str, name: str) -> tuple:
+def read_nanos_as_long(spark: SparkSession) -> None:
+    """Read parquet TIMESTAMP(NANOS) as raw long nanos (the vectorized
+    reader rejects it otherwise); ``normalize_ts`` floors it to micros."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+def infer_meta(spark: SparkSession, path: str, name: str) -> tuple:
     """(schema, ts_is_long, ntz_cols) of the parquet at ``path``."""
     schema = spark.read.parquet(path).schema
     ts_is_long = name == "events" and isinstance(
@@ -60,7 +66,7 @@ def _scan_meta(spark: SparkSession, path: str, name: str) -> tuple:
     key = (path, st.st_mtime_ns, st.st_size)
     hit = _SCAN_META.get(key)
     if hit is None:
-        hit = _infer_meta(spark, path, name)
+        hit = infer_meta(spark, path, name)
         if len(_SCAN_META) >= 512:  # bound (ADVICE r14): keyed on file
             _SCAN_META.clear()      # identity, rewrites accumulate
         _SCAN_META[key] = hit
@@ -90,7 +96,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        read_nanos_as_long(spark)
     if os.path.isfile(path):
         schema, ts_is_long, ntz_cols = _scan_meta(spark, path, name)
     else:
@@ -98,8 +104,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # generator, but possible for caller-supplied dirs): no stable
         # single-file identity to key the metadata cache on — take the
         # uncached inference path.
-        schema, ts_is_long, ntz_cols = _infer_meta(spark, path, name)
-    df = spark.read.schema(schema).parquet(path)
+        schema, ts_is_long, ntz_cols = infer_meta(spark, path, name)
+    return normalize_ts(spark.read.schema(schema).parquet(path), ts_is_long, ntz_cols)
+
+
+def normalize_ts(
+    df: DataFrame, ts_is_long: bool, ntz_cols: tuple[str, ...]
+) -> DataFrame:
+    """The temporal-column rule ``load_table`` applies, shared with the
+    events stream reader: long ``ts`` nanos floored to micros, and
+    every TIMESTAMP_NTZ column cast to TIMESTAMP."""
     if ts_is_long:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Uniform invariant for EVERY table: temporal columns are session-tz

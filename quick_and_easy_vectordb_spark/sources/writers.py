@@ -86,10 +86,11 @@ def write_bucketed(
     catalog). ``sort_by`` additionally pre-sorts buckets, turning a
     sort-merge join's sort phase into a no-op.
 
-    The warehouse dir is per-process scratch (session.py keys it by
-    pid) while each session's derby metastore is private, so a table
-    location left by an earlier session *in this process* is invisible
-    to a fresh catalog and makes ``saveAsTable`` throw
+    The warehouse dir is per-process scratch (session.py puts it in
+    the sources/scratch.py root) while each session's derby metastore
+    is private, so a table location left by an earlier session *in
+    this process* is invisible to a fresh catalog and makes
+    ``saveAsTable`` throw
     LOCATION_ALREADY_EXISTS; clear such orphaned locations before
     writing. Because the warehouse is never shared across processes,
     this cleanup cannot touch a concurrently-running session's data."""

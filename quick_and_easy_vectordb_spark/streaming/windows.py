@@ -14,6 +14,13 @@ Design rules:
 - custom per-key session logic uses applyInPandasWithState (the
   engine's stateful-UDF surface) with explicit timeouts.
 
+Every events stream in the package is read through
+``read_events_stream`` (one ``ts`` rule, shared with the batch reader
+``sources/catalog.py:load_table``), and every bounded run into a memory
+sink goes through ``drain``: availableNow to completion, then the
+sink's table. Stream-source and checkpoint directories come from
+``sources/scratch.py``.
+
 Batch equivalence: with the same input as a bounded file source, each
 streaming query's complete-output equals its batch twin — that
 equivalence is the test strategy (tests/test_streaming.py), mirroring
@@ -26,6 +33,12 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from quick_and_easy_vectordb_spark.sources.catalog import (
+    infer_meta,
+    normalize_ts,
+    read_nanos_as_long,
+)
 
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -40,42 +53,54 @@ EVENTS_STREAM_SCHEMA = T.StructType(
 
 
 def read_events_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 1
+    spark: SparkSession, path: str, max_files_per_trigger: int | None = 1
 ) -> DataFrame:
     """File-source stream of events (parquet files landing in a
     directory — the local stand-in for Kafka; swap `.format` and
     options to move to a real bus, the downstream plan is unchanged).
+    ``max_files_per_trigger=None`` puts no cap on a micro-batch.
 
-    ``ts`` is normalized to a session-tz TimestampType regardless of
-    the file encoding (timestamp vs timestamp_ntz — the driver fixtures
-    have shipped both): the physical type is probed with a batch schema
-    read so the stream schema always matches the footer, then NTZ is
-    cast (session tz is UTC, so the cast is a pure type change).
-    Watermarks require this — ``withWatermark`` on a column whose type
-    silently mismatches the file would misread event time."""
-    schema = EVENTS_STREAM_SCHEMA
-    ntz = False
+    ``ts`` follows the batch reader's rule (sources/catalog.py
+    ``load_table``): the physical type is probed with a batch schema
+    read so the stream schema always matches the footer, then
+    TIMESTAMP(NANOS), read as long nanos, is floored to micros and
+    TIMESTAMP_NTZ is cast (session tz is UTC, so the cast is a pure
+    type change). Watermarks require this — ``withWatermark`` on a
+    column whose type silently mismatches the file would misread event
+    time. An empty directory keeps the declared TIMESTAMP schema."""
+    read_nanos_as_long(spark)
     try:
-        ntz = isinstance(
-            spark.read.parquet(path).schema["ts"].dataType, T.TimestampNTZType
-        )
-    except AnalysisException:
-        pass  # empty dir at start-up: keep the declared schema
-    if ntz:
+        _, ts_is_long, ntz_cols = infer_meta(spark, path, "events")
+    except AnalysisException:  # empty dir at start-up
+        ts_is_long, ntz_cols = False, ()
+    ntz = "ts" in ntz_cols
+    schema = EVENTS_STREAM_SCHEMA
+    if ts_is_long or ntz:
+        ts = T.StructField("ts", T.LongType() if ts_is_long else T.TimestampNTZType())
         schema = T.StructType(
-            [
-                f if f.name != "ts" else T.StructField("ts", T.TimestampNTZType())
-                for f in EVENTS_STREAM_SCHEMA.fields
-            ]
+            [ts if f.name == "ts" else f for f in EVENTS_STREAM_SCHEMA.fields]
         )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-    if ntz:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return normalize_ts(reader.parquet(path), ts_is_long, ("ts",) if ntz else ())
+
+
+def drain(
+    df: DataFrame, sink: str, mode: str, checkpoint: str | None = None
+) -> DataFrame:
+    """Run the streaming ``df`` over everything available now into the
+    memory sink ``sink`` (``mode`` is the output mode), wait for it to
+    finish, and return the sink's table. The sink's previous view is
+    dropped first, so repeated runs start empty; ``checkpoint`` resumes
+    from (and commits to) a checkpoint directory."""
+    spark = df.sparkSession
+    spark.catalog.dropTempView(sink)
+    w = df.writeStream.format("memory").queryName(sink).outputMode(mode)
+    if checkpoint is not None:
+        w = w.option("checkpointLocation", checkpoint)
+    w.trigger(availableNow=True).start().awaitTermination()
+    return spark.table(sink)
 
 
 def stream_tumbling_counts(

@@ -12,7 +12,7 @@ import pandas as pd
 
 from quick_and_easy_vectordb_spark.plans.inspect import formatted_plan
 from quick_and_easy_vectordb_spark.queries import QUERIES
-from quick_and_easy_vectordb_spark.queries.events import _FOREACHBATCH_STATE
+from quick_and_easy_vectordb_spark.sources.scratch import lookup
 
 SF = "/root/testdata/sf0.001"
 
@@ -27,9 +27,7 @@ def test_partitioned_parquet_scan_prunes_directories(spark):
     seg = plan.split("PartitionFilters")[1].split("]")[0]
     assert "2024-01-08" in seg and "2024-01-14" in seg
     # and the layout on disk really is hive-partitioned by date
-    from quick_and_easy_vectordb_spark.queries.udf_surface import _SRC_SCRATCH
-
-    root = _SRC_SCRATCH[("part_prune", os.path.abspath(SF))]
+    root = lookup("part_prune", SF)
     days = [
         p
         for p in os.listdir(os.path.join(root, "events_by_date"))
@@ -44,7 +42,7 @@ def test_foreachbatch_upsert_ran_multiple_batches_and_deduped(spark):
     exercised across batches), and the final table must hold exactly
     one row per event_id — the single-copy corpus."""
     out = QUERIES["ev_stream_foreachbatch_upsert"].fn(spark, SF).toPandas()
-    root = _FOREACHBATCH_STATE[os.path.abspath(SF)]
+    root = lookup("fbatch_upsert", SF)
     versions = [v for v in os.listdir(root) if v.startswith("v")]
     assert len(versions) >= 2
     final = max(versions, key=lambda v: int(v[1:]))
@@ -62,9 +60,7 @@ def test_jsonl_roundtrip_loses_no_rows_or_values(spark):
     (a schema drift would silently null mismatched fields), and the
     per-type double totals equal a pandas recomputation to the bit."""
     QUERIES["src_json_lines_roundtrip"].fn(spark, SF).toPandas()
-    from quick_and_easy_vectordb_spark.queries.udf_surface import _SRC_SCRATCH
-
-    root = _SRC_SCRATCH[("jsonl", os.path.abspath(SF))]
+    root = lookup("jsonl", SF)
     back = spark.read.schema(
         "event_id long, user_id long, event_type string, us long, value double"
     ).json(os.path.join(root, "events_jsonl"))

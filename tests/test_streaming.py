@@ -4,11 +4,14 @@ late-data watermark behavior."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from quick_and_easy_vectordb_spark.sources.catalog import load_table
 from quick_and_easy_vectordb_spark.streaming.windows import (
+    drain,
     read_events_stream,
     stream_tumbling_counts,
     stream_user_sessions,
@@ -413,3 +416,31 @@ def test_ntz_source_stream_equals_batch(spark, tmp_path):
     )
     assert sorted(map(tuple, out)) == sorted(map(tuple, batch))
     assert len(out) > 100  # windows must NOT collapse (1970 bug shape)
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_events_stream_rows_equal_load_table(spark, sf_dir, tmp_path, unit):
+    """An events file written by pyarrow with ``ts`` as timestamp[us]
+    (read as TIMESTAMP_NTZ) or timestamp[ns] (parquet TIMESTAMP(NANOS))
+    streams exactly the rows the batch reader loads: the stream and
+    load_table share one ``ts`` rule."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp(unit)))
+    sf = tmp_path / "sf"
+    src = tmp_path / "src"
+    sf.mkdir()
+    src.mkdir()
+    pq.write_table(t, str(sf / "events.parquet"))
+    os.symlink(sf / "events.parquet", src / "events.parquet")
+    got = drain(
+        read_events_stream(spark, str(src)), f"t_reader_{unit}", "append"
+    )
+    want = load_table(spark, str(sf), "events").select(*got.columns)
+    assert dict(got.dtypes)["ts"] == "timestamp"
+    rows = sorted(map(repr, got.collect()))
+    assert rows == sorted(map(repr, want.collect()))
+    assert len(rows) == t.num_rows

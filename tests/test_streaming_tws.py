@@ -35,11 +35,10 @@ def test_tws_matches_batch(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from quick_and_easy_vectordb_spark.queries.events import (
-        _stage_stream_dir,
-        _stream_events_source,
-    )
+    from quick_and_easy_vectordb_spark.sources.scratch import staged
     from quick_and_easy_vectordb_spark.streaming.windows import (
+        drain,
+        read_events_stream,
         stream_type_activity_tws,
     )
 
@@ -49,22 +48,17 @@ def test_tws_matches_batch(spark, sf_dir):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        d = _stage_stream_dir(sf_dir, ("events",), "tws_test_")
-        src = _stream_events_source(spark, d)
-        sink = "tws_test_sink"
-        q = (
-            stream_type_activity_tws(src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+        events = os.path.join(os.path.abspath(sf_dir), "events.parquet")
+        d = staged(
+            "tws_test",
+            sf_dir,
+            lambda d: os.symlink(events, os.path.join(d, "events.parquet")),
         )
-        q.awaitTermination()
+        src = read_events_stream(spark, d, max_files_per_trigger=None)
+        out = drain(stream_type_activity_tws(src), "tws_test_sink", "update")
         got = {
             r["event_type"]: (r["n"], r["f"], r["l"])
-            for r in spark.table(sink)
-            .groupBy("event_type")
+            for r in out.groupBy("event_type")
             .agg(
                 F.max("n_events").alias("n"),
                 F.min("first_us").alias("f"),
