@@ -5855,13 +5855,12 @@ def ev_stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFram
             os.path.join(a_dir, leaf(a_dir)),
             os.path.join(feed, "01_second_half.parquet"),
         )
-        probed = spark.read.parquet(feed).schema
 
         def write_batch(bdf, bid: int) -> None:
             bdf.write.mode("append").parquet(out)
 
         def run() -> None:
-            stream = spark.readStream.schema(probed).parquet(feed)
+            stream = read_events_stream(spark, feed, max_files_per_trigger=None)
             agg = (
                 stream.withWatermark("ts", "1 minute")
                 .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -8590,8 +8589,7 @@ def ev_stream_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("variant", "day")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("conv").alias("c"))
     )
-    out = drain(daily, "ev_stream_sprt_monitor_sink", "complete")
-    grid = out
+    grid = drain(daily, "ev_stream_sprt_monitor_sink", "complete")
     w = (
         Window.partitionBy("variant")
         .orderBy("day")

@@ -44,6 +44,10 @@ DEFAULT = (
     "ev_click_attribution_streamed",
 )
 
+# How long ``ProgressListener.wait`` lets the listener bus deliver the
+# last termination events after the run returns.
+WAIT_S = 30.0
+
 
 class ProgressListener(StreamingQueryListener):
     """Collects every progress event of the streams started while it is
@@ -64,9 +68,14 @@ class ProgressListener(StreamingQueryListener):
     def onQueryTerminated(self, event) -> None:
         self.ended.add(str(event.id))
 
-    def wait(self, timeout_s: float = 30.0) -> None:
-        deadline = time.monotonic() + timeout_s
-        while self.started - self.ended and time.monotonic() < deadline:
+    def wait(self) -> None:
+        deadline = time.monotonic() + WAIT_S
+        while self.started - self.ended:
+            if time.monotonic() > deadline:
+                raise RuntimeError(
+                    f"{len(self.started - self.ended)} stream(s) reported no "
+                    f"end within {WAIT_S:.0f} s; their progress is incomplete"
+                )
             time.sleep(0.05)
 
 
