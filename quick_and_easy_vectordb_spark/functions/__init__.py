@@ -1,9 +1,9 @@
-"""Scalar / array function library — all JVM-side Catalyst expressions.
+"""Scalar / array function library — all JVM-side expressions.
 
 Nothing in this package crosses the Python-worker boundary: every
-function returns a ``Column`` built from ``pyspark.sql.functions``
-higher-order and scalar functions, so the whole expression tree stays
-inside whole-stage codegen.
+function returns a ``Column`` built from ``pyspark.sql.functions`` or
+from the compiled vector kernels (VectorKernels.java, registered by
+kernels.py at session start).
 """
 
 from quick_and_easy_vectordb_spark.functions.vector import (  # noqa: F401

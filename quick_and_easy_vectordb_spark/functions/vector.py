@@ -1,6 +1,6 @@
-"""Vector algebra as Catalyst higher-order functions.
+"""Vector algebra: the engine's only vector folds.
 
-Re-expresses the reference's numpy kernels as JVM-side expressions:
+Re-expresses the reference's numpy kernels as Spark SQL functions:
 
 - raw dot product  — parity with ``np.dot(stored, query)``
   (/root/reference/app.py:45; NOT cosine — the reference never
@@ -10,37 +10,41 @@ Re-expresses the reference's numpy kernels as JVM-side expressions:
   NULL instead of being silently truncated
 - cosine / L2      — the standard variants the reference lacks
 
-This is the only module that writes a vector fold. Every dot product,
-norm and (squared) L2 distance in the package is built here: the
-scorers, the LSH signature's per-plane terms (:func:`dot_product_sql`),
-the LSH kNN's pre-join norms, and the query surface's k-means and
-coreset distances. The fold's shape and summation order, which the
-DuckDB oracle mirrors bit for bit, is therefore defined once.
+This is the only module that builds a vector fold. Every dot product,
+norm and (squared) L2 distance in the package is a call built here:
+the scorers, the LSH signature (:func:`lsh_bits`), the LSH kNN's
+pre-join norms, and the query surface's k-means and coreset distances.
 
-All functions operate on ``array<double>`` (or ``array<float>``, which
-Spark happily feeds into double arithmetic via the lambda casts) and
-compile into whole-stage-codegen'd ``transform``/``zip_with``/
-``aggregate`` expressions — no Python in the hot path, no UDF
-serialization, fully columnar under Parquet + Tungsten.
+Each fold is a compiled Java function (functions/VectorKernels.java,
+built and registered at session start by functions/kernels.py), not a
+higher-order-function expression: Spark's ``aggregate``/``zip_with``/
+``transform`` are interpreted row by row and element by element, with
+every element boxed. A kernel is the left-to-right loop of the fold it
+replaced: elements cast exactly to double, the sum seeded with 0.0 and
+added in index order, NULL for a NULL array, a NULL element or a length
+mismatch, and a NULL cosine when ‖a‖·‖b‖ is 0. So scores stay bitwise
+those of the fold, which the DuckDB oracle mirrors
+(tests/test_vector_functions.py keeps the fold text as the spec every
+kernel is compared with). The one exception is
+:func:`decimal_squared_l2_sql`, PQ's exact decimal fold, which stays a
+SQL ``aggregate``.
 
 Plan-build cost: pass operands as column names and float sequences,
-not Column objects. A name or a sequence lets each scorer build its
-whole expression from ONE SQL string (one py4j call); a Column operand
-makes it compose the tree with Column operators instead, roughly 10
-py4j calls per lambda (cosine builds seven to ten lambdas). A literal
-sequence is inlined with exact binary64 values, so both forms score
-bitwise identically.
+not Column objects. Then each scorer is ONE SQL string (one py4j
+call), and a float sequence becomes one binary literal of big-endian
+binary64 values, which the kernel decodes once per task (cosine folds
+its norm then too). A Column operand costs a few py4j calls more.
 
-Scale note: per-row O(d) arithmetic inside codegen is embarrassingly
-parallel and shuffle-free; at 100 TB the only cost that matters is the
-scan itself, which is why callers must select only the vector + key
-columns they need (column pruning keeps the ~0.5 KB/row vector payload
-out of queries that don't score).
+Scale note: per-row O(d) arithmetic is embarrassingly parallel and
+shuffle-free; at 100 TB the only cost that matters is the scan itself,
+which is why callers must select only the vector + key columns they
+need (column pruning keeps the ~0.5 KB/row vector payload out of
+queries that don't score).
 """
 
 from __future__ import annotations
 
-import math
+import struct
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -53,13 +57,10 @@ __all__ = [
     "squared_l2_distance",
     "l2_distance",
     "cosine_similarity",
+    "lsh_bits",
     "parse_vector",
     "vector_to_csv",
 ]
-
-
-def _double_sql(x: float) -> str:
-    return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
 def vector_literal_sql(values: Sequence[float]) -> str:
@@ -67,15 +68,7 @@ def vector_literal_sql(values: Sequence[float]) -> str:
     through CAST('<repr>' AS DOUBLE): repr() is shortest-roundtrip, so
     the parse reproduces the exact binary64 values (a bare SQL decimal
     literal would parse as DECIMAL and re-round)."""
-    return "array(" + ", ".join(_double_sql(v) for v in values) + ")"
-
-
-def dot_product_sql(a: str, b: str) -> str:
-    """The SQL text of ⟨a,b⟩ for two operands given as SQL text (a
-    quoted column name, :func:`vector_literal_sql`, ...). The one
-    definition of the fold: :func:`dot_product` parses it, and
-    operators/ann.py lsh_signature concatenates it into CASE terms."""
-    return _DOT_SQL.format(a, b)
+    return "array(" + ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in values) + ")"
 
 
 def decimal_squared_l2_sql(a: str, b: str) -> str:
@@ -95,195 +88,116 @@ def decimal_squared_l2_sql(a: str, b: str) -> str:
 
 
 def vector_literal(values: Sequence[float]) -> Column:
-    """A constant ``array<double>`` column. Catalyst constant-folds this
-    into the projection, which is the distributed analog of broadcasting
-    the query vector to every executor (cf. reference app.py:42-45 where
-    the query embedding is a Python closure variable). Built by parsing
-    ONE SQL string: ``F.array(*[F.lit(v) ...])`` costs dim+1 py4j round
-    trips (~2.7 ms each on this class of sandbox, measured round 14)
-    for the identical literal array."""
+    """A constant ``array<double>`` column, for a query that needs the
+    vector itself (element-wise arithmetic, a literal column). To score
+    against a constant, pass the float sequence to the scorer instead.
+    Built by parsing ONE SQL string: ``F.array(*[F.lit(v) ...])`` costs
+    dim+1 py4j round trips (~2.7 ms each on this class of sandbox,
+    measured round 14) for the identical literal array."""
     return F.expr(vector_literal_sql(values))
 
 
-def _is_literal(x) -> bool:
-    return isinstance(x, Sequence) and not isinstance(x, str)
+def _binary64_sql(values: Sequence[float], header: bytes = b"") -> str:
+    """``header`` then ``values`` as big-endian binary64, as one SQL
+    binary literal: exact, and one token for the parser however long
+    the vector."""
+    return "X'" + (header + struct.pack(f">{len(values)}d", *values)).hex() + "'"
 
 
-def _sql_operand(x) -> str | None:
-    """SQL text for an operand the single-parse fast path can accept:
-    a plain column name or a float sequence (inlined literal array).
-    Anything else (an arbitrary Column object) returns None and takes
-    the Column-composition path."""
+def _operand_sql(x) -> str | None:
+    """SQL text for an operand given as a plain column name
+    (backtick-quoted, so a name that collides with a SQL keyword or
+    niladic function such as ``current_date`` still means the column)
+    or a float sequence (a binary literal). None for anything else."""
     if isinstance(x, str) and x.isidentifier():
-        # Backtick-quoted (ADVICE r14): a bare name that collides with
-        # a SQL keyword or niladic function (current_date, ...) would
-        # resolve differently from F.col(name); quoting pins column
-        # semantics while keeping the single-parse path.
         return f"`{x}`"
-    if _is_literal(x):
-        return vector_literal_sql(x)
+    if isinstance(x, Sequence) and not isinstance(x, str):
+        return _binary64_sql(x)
     return None
 
 
-def _as_double(col: Column) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
+def _call_sql(name: str, *operands) -> str | None:
+    """The SQL text of a call of the kernel ``name``, or None when an
+    operand is a Column (or a name that is not an identifier)."""
+    sql = [_operand_sql(x) for x in operands]
+    return None if None in sql else f"{name}({', '.join(sql)})"
 
 
-_AS_DOUBLE_SQL = "transform({0}, x -> CAST(x AS DOUBLE))"
-# the fold seeds are written 0.0D (double literal): a bare SQL 0.0
-# parses as DECIMAL(1,1) and would change the accumulator type
-_DOT_SQL = (
-    "aggregate(zip_with(" + _AS_DOUBLE_SQL.format("{0}") + ", "
-    + _AS_DOUBLE_SQL.format("{1}")
-    + ", (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
-)
-_NORM_SQL = (
-    "sqrt(aggregate(" + _AS_DOUBLE_SQL.format("{0}")
-    + ", 0.0D, (acc, v) -> acc + v * v))"
-)
-_SQ_L2_SQL = (
-    "aggregate(zip_with(" + _AS_DOUBLE_SQL.format("{0}") + ", "
-    + _AS_DOUBLE_SQL.format("{1}")
-    + ", (x, y) -> (x - y) * (x - y)), 0.0D, (acc, v) -> acc + v)"
-)
+def _kernel(name: str, *operands) -> Column:
+    """A call of the compiled kernel ``name``: one parsed SQL string
+    when every operand is a name or a sequence, else composed from
+    Columns."""
+    text = _call_sql(name, *operands)
+    if text is not None:
+        return F.expr(text)
+
+    def column(x) -> Column:
+        if isinstance(x, Column):
+            return x
+        return F.col(x) if isinstance(x, str) else F.expr(_binary64_sql(x))
+
+    return F.call_function(name, *map(column, operands))
 
 
-def _as_column(x: Column | str | Sequence[float]) -> Column:
-    if isinstance(x, Column):
-        return x
-    return F.col(x) if isinstance(x, str) else vector_literal(x)
-
-
-def _literal_norm(values: Sequence[float]) -> float:
-    """‖values‖₂ folded in Python exactly as the SQL fold does it:
-    left to right, ``acc + v*v`` from 0.0, then a correctly rounded
-    sqrt, so it is bitwise the value Spark would compute per row."""
-    acc = 0.0
-    for v in values:
-        acc = acc + float(v) * float(v)
-    return math.sqrt(acc)
-
-
-def dot_product(a: Column | str, b: Column | str | Sequence[float]) -> Column:
+def dot_product(
+    a: Column | str | Sequence[float], b: Column | str | Sequence[float]
+) -> Column:
     """Raw inner product ⟨a,b⟩ — the reference's similarity
-    (reference app.py:45). ``zip_with`` multiplies element-wise,
-    ``aggregate`` folds left-to-right with a double accumulator, which
-    fixes a deterministic summation order (important for oracle-exact
-    comparisons). Pass column names and float sequences: they take the
-    single-parse SQL path, one py4j call for the whole expression. A
-    Column operand composes the identical expression from Column
-    operators, roughly 10 py4j calls per lambda."""
-    sa, sb = _sql_operand(a), _sql_operand(b)
-    if sa is not None and sb is not None:
-        return F.expr(dot_product_sql(sa, sb))
-    a, b = _as_column(a), _as_column(b)
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    (reference app.py:45), summed left to right from 0.0 (a fixed
+    summation order, which oracle-exact comparisons need)."""
+    return _kernel("qev_dot", a, b)
 
 
 def l2_norm(a: Column | str | Sequence[float]) -> Column:
-    """Euclidean norm ‖a‖₂: ``sqrt`` of the fold ``acc + v*v`` from
-    0.0, bitwise ``sqrt(dot_product(a, a))``."""
-    sa = _sql_operand(a)
-    if sa is not None:
-        return F.expr(_NORM_SQL.format(sa))
-    a = _as_column(a)
-    return F.sqrt(
-        F.aggregate(_as_double(a), F.lit(0.0), lambda acc, v: acc + v * v)
-    )
+    """Euclidean norm ‖a‖₂: ``sqrt`` of the sum of ``v*v`` from 0.0,
+    bitwise ``sqrt(dot_product(a, a))``."""
+    return _kernel("qev_norm", a)
 
 
 def squared_l2_distance(
     a: Column | str | Sequence[float], b: Column | str | Sequence[float]
 ) -> Column:
-    """Squared Euclidean distance ‖a−b‖₂²: ``zip_with`` squares the
-    element-wise differences, ``aggregate`` folds them left to right
-    from 0.0. :func:`l2_distance` is the ``sqrt`` of this fold."""
-    sa, sb = _sql_operand(a), _sql_operand(b)
-    if sa is not None and sb is not None:
-        return F.expr(_SQ_L2_SQL.format(sa, sb))
-    a, b = _as_column(a), _as_column(b)
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    """Squared Euclidean distance ‖a−b‖₂²: the squared element-wise
+    differences summed left to right from 0.0. :func:`l2_distance` is
+    the ``sqrt`` of it."""
+    return _kernel("qev_squared_l2", a, b)
 
 
-def l2_distance(a: Column | str, b: Column | str | Sequence[float]) -> Column:
+def l2_distance(
+    a: Column | str | Sequence[float], b: Column | str | Sequence[float]
+) -> Column:
     """Euclidean distance ‖a−b‖₂, ``sqrt`` of
     :func:`squared_l2_distance`."""
-    sa, sb = _sql_operand(a), _sql_operand(b)
-    if sa is not None and sb is not None:
-        return F.expr(f"sqrt({_SQ_L2_SQL.format(sa, sb)})")
+    text = _call_sql("qev_squared_l2", a, b)
+    if text is not None:
+        return F.expr(f"sqrt({text})")
     return F.sqrt(squared_l2_distance(a, b))
 
 
-# Lambda variables binding each operand's sum of squares in the cosine
-# finish lambdas; the operands' SQL text sits inside those lambdas, so
-# the names must not be ones a column could plausibly carry.
-_COS_SUMSQ = ("__qev_cos_a2", "__qev_cos_b2")
+def cosine_similarity(
+    a: Column | str | Sequence[float], b: Column | str | Sequence[float]
+) -> Column:
+    """cos(a,b) = ⟨a,b⟩ / (‖a‖·‖b‖), NULL when ‖a‖·‖b‖ is 0. Each
+    norm is folded once per row, a literal operand's once per task;
+    scores are bitwise those of ``CASE WHEN ‖a‖·‖b‖ != 0 THEN ⟨a,b⟩ /
+    (‖a‖·‖b‖) END`` over the folds above."""
+    return _kernel("qev_cosine", a, b)
 
 
-def cosine_similarity(a: Column | str, b: Column | str | Sequence[float]) -> Column:
-    """cos(a,b) = ⟨a,b⟩ / (‖a‖·‖b‖). NULL when ‖a‖·‖b‖ is 0.
-
-    Each norm is computed once per row: the sum of squares is folded
-    by ``aggregate`` and the score is that fold's finish lambda,
-    ``CASE WHEN ‖a‖·‖b‖ != 0 THEN ⟨a,b⟩ / (‖a‖·‖b‖) END`` (Spark
-    shares no subexpression across CASE branches, so writing the norms
-    inline would fold each twice). A literal sequence's norm is folded
-    once per call, in Python, with the same operations and order, and
-    inlined as a constant: a literal query costs two folds per row,
-    the dot and the row's norm. Scores are bitwise those of the inline
-    formula. Pass column names and float sequences: they take the
-    single-parse SQL path, one py4j call for the whole expression. A
-    Column operand composes the identical expression from Column
-    operators, roughly 10 py4j calls per lambda (seven to ten here)."""
-    sa, sb = _sql_operand(a), _sql_operand(b)
-    if sa is not None and sb is not None:
-
-        def with_norm_sql(x, sx: str, var: str, finish) -> str:
-            if _is_literal(x):
-                return finish(_double_sql(_literal_norm(x)))
-            return (
-                f"aggregate({_AS_DOUBLE_SQL.format(sx)}, 0.0D, "
-                f"(acc, v) -> acc + v * v, {var} -> {finish(f'sqrt({var})')})"
-            )
-
-        def score_sql(na: str, nb: str) -> str:
-            denom = f"({na} * {nb})"
-            return (
-                f"CASE WHEN {denom} != 0.0D "
-                f"THEN {dot_product_sql(sa, sb)} / {denom} END"
-            )
-
-        va, vb = _COS_SUMSQ
-        expr = with_norm_sql(
-            a, sa, va,
-            lambda na: with_norm_sql(b, sb, vb, lambda nb: score_sql(na, nb)),
-        )
-        return F.expr(expr)
-
-    def score(na: Column, nb: Column) -> Column:
-        denom = na * nb
-        return F.when(denom != 0.0, dot_product(a, b) / denom)
-
-    def with_norm(x, finish):
-        """``finish(‖x‖)``, with a column's norm bound by its fold."""
-        if _is_literal(x):
-            return finish(F.lit(_literal_norm(x)))
-        return F.aggregate(
-            _as_double(_as_column(x)),
-            F.lit(0.0),
-            lambda acc, v: acc + v * v,
-            lambda s2: finish(F.sqrt(s2)),
-        )
-
-    return with_norm(a, lambda na: with_norm(b, lambda nb: score(na, nb)))
+def lsh_bits(vec_col: str, planes: Sequence[Sequence[float]]) -> Column:
+    """One ``'0'``/``'1'`` per hyperplane, bit j ``'1'`` iff
+    ⟨v, planes[j]⟩ ≥ 0 in SQL order (a NaN dot counts as ≥ 0), every
+    plane folded in one pass over the row. A row whose length is not
+    the planes' dim, a NULL array or a NULL element gets all ``'0'``.
+    ``vec_col`` must be a plain column name (``ValueError``
+    otherwise)."""
+    if not (isinstance(vec_col, str) and vec_col.isidentifier()):
+        raise ValueError(f"lsh_bits needs a plain column name, got {vec_col!r}")
+    dim = len(planes[0])
+    flat = [float(v) for p in planes for v in p]
+    return F.expr(
+        f"qev_lsh_bits(`{vec_col}`, {_binary64_sql(flat, struct.pack('>i', dim))})"
+    )
 
 
 def parse_vector(col: Column | str) -> Column:

@@ -29,8 +29,7 @@ from pyspark.sql import functions as F
 
 from quick_and_easy_vectordb_spark.functions.vector import (
     decimal_squared_l2_sql,
-    dot_product_sql,
-    vector_literal_sql,
+    lsh_bits,
 )
 
 __all__ = [
@@ -67,30 +66,16 @@ def hyperplane(j: int, dim: int) -> list[float]:
 
 def lsh_signature(vec_col: str, num_planes: int, dim: int) -> Column:
     """Sign-bit bucket string of a vector column: bit j = 1 iff
-    ⟨v, H_j⟩ ≥ 0. One projection, no shuffle, no UDF.
+    ⟨v, H_j⟩ ≥ 0. One projection, no shuffle, no Python UDF.
 
-    One strategy for every ``dim``: bit j is a CASE over
-    functions/vector.py's dot-product fold of the row against H_j (an
-    exact literal array), and the P bits are concatenated in ONE SQL
-    string, parsed by one py4j call. The fold sums left to right from
-    0.0, the order :func:`python_lsh_signature` uses. A row whose
-    length is not ``dim``, a NULL array or a NULL element folds to
-    NULL on every plane, so its signature is all ``0`` bits.
+    One compiled call (functions/vector.py :func:`lsh_bits`) folds the
+    row against all ``num_planes`` hyperplanes in one pass, each sum
+    left to right from 0.0, the order :func:`python_lsh_signature`
+    uses. A row whose length is not ``dim``, a NULL array or a NULL
+    element gets the all-``0`` signature.
 
-    ``vec_col`` must be a plain column name: it is interpolated into
-    the SQL string, so anything else raises ``ValueError``."""
-    if not (isinstance(vec_col, str) and vec_col.isidentifier()):
-        raise ValueError(
-            f"lsh_signature needs a plain column name, got {vec_col!r}"
-        )
-    col = f"`{vec_col}`"
-    bits = [
-        "(CASE WHEN ("
-        + dot_product_sql(col, vector_literal_sql(hyperplane(j, dim)))
-        + ") >= 0 THEN '1' ELSE '0' END)"
-        for j in range(num_planes)
-    ]
-    return F.expr("CONCAT(" + ", ".join(bits) + ")")
+    ``vec_col`` must be a plain column name, else ``ValueError``."""
+    return lsh_bits(vec_col, [hyperplane(j, dim) for j in range(num_planes)])
 
 
 def python_lsh_signature(vec: Sequence[float], num_planes: int) -> str:

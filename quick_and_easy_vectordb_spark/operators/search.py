@@ -19,13 +19,13 @@ tie order is nondeterministic (SURVEY.md §1.4.3 / app.py:48); a
 deterministic rule is required for reproducible results and
 oracle-hash comparison.
 
-Plan build is the request's driver-side cost, so every scorer here is
+Scoring runs in the compiled vector kernels (functions/vector.py), and
+plan build is the request's driver-side cost, so every scorer here is
 called with the vector column's NAME and the query as a plain float
-LIST: the scorers then parse one SQL string per expression (one py4j
-call, whatever the metric or dimension), where Column operands would
-assemble the lambdas one py4j call at a time (roughly 10 per lambda).
-A name that is not a plain identifier falls back to ``F.col`` inside
-the scorer.
+LIST: the scorer is then one SQL string (one py4j call, whatever the
+metric or dimension) with the query as one binary literal, decoded
+once per task. A name that is not a plain identifier is passed as
+``F.col`` inside the scorer, a few py4j calls more.
 """
 
 from __future__ import annotations

@@ -102,7 +102,6 @@ def ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     sig = python_lsh_signature(QUERY_VEC, PROBE_PLANES)
     probes = hamming_neighbors(sig, 1)
-    q = vector_literal(QUERY_VEC)
     scored = emb.select(
         "vec_id",
         lsh_signature("embedding", PROBE_PLANES, DIM).alias("bucket"),
@@ -207,7 +206,6 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both sides are deterministic, so even the quality metric is
     oracle-checked."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     sig = python_lsh_signature(QUERY_VEC, PROBE_PLANES)
     probes = hamming_neighbors(sig, 1)
     scored = emb.select(
@@ -340,9 +338,7 @@ def ann_kmeans_one_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs it to convergence."""
     emb = load_table(spark, sf_dir, "embeddings")
     e = F.col("embedding").cast("array<double>")
-    d = [
-        l2_distance(e, vector_literal(hyperplane(k, DIM))) for k in range(_KM_K)
-    ]
+    d = [l2_distance("embedding", hyperplane(k, DIM)) for k in range(_KM_K)]
     cluster = (
         F.when((d[0] <= d[1]) & (d[0] <= d[2]) & (d[0] <= d[3]), 0)
         .when((d[1] <= d[2]) & (d[1] <= d[3]), 1)
@@ -725,7 +721,6 @@ def _sq8_scored(emb: DataFrame) -> DataFrame:
             ).otherwise(F.element_at("mns", i + 1)),
         ).alias("e8"),
     )
-    q = vector_literal(QUERY_VEC)
     return dq.select("vec_id", dot_product("e8", QUERY_VEC).alias("sq8_score"))
 
 
@@ -804,7 +799,6 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k (the dequantization reuses the broadcast [mns, spans]
     stats); the overlap join is k rows against k rows."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     approx = (
         _sq8_scored(emb)
         .orderBy(F.desc("sq8_score"), F.asc("vec_id"))
@@ -993,7 +987,6 @@ def ann_int4_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.element_at("mns", i + 1)),
         ).alias("e4"),
     )
-    q = vector_literal(QUERY_VEC)
     return (
         dq.select("vec_id", dot_product("e4", QUERY_VEC).alias("int4_score"))
         .orderBy(F.desc("int4_score"), F.asc("vec_id"))
@@ -1660,7 +1653,6 @@ def ann_graph_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     blk = emb.join(
         F.broadcast(entry), emb["label"] == F.col("entry_label")
     ).select("vec_id", "emb", "entry_id").persist()
-    qv = vector_literal(QUERY_VEC)
     scored = blk.select(
         "vec_id", "emb", cosine_similarity("emb", QUERY_VEC).alias("sim")
     ).persist()
@@ -2439,7 +2431,7 @@ def ann_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each vector to ITS sub-centroid) must come in under SSE before
     (all to the old centroid; a guaranteed property of the mean, made
     visible as data). Per-row distance squares are the same double
-    fold in both engines — Spark's aggregate(zip_with) left fold is
+    fold in both engines — the squared-L2 kernel's left fold is
     mirrored in the oracle by list_reduce over a pos-ordered centroid
     list with a 0.0 seed (NOT a GROUP BY SUM, whose addition order
     DuckDB does not pin); the SSE totals are decimal sums of those
@@ -2567,7 +2559,6 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (the approx side already bucket-pruned), 20-row windows,
     broadcast 4-row cutoff table, tiny join."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     sig = python_lsh_signature(QUERY_VEC, PROBE_PLANES)
     probes = hamming_neighbors(sig, 1)
     scored = emb.select(
@@ -2670,7 +2661,7 @@ def ann_anisotropic_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagnostic that decides whether score-aware (eta-weighted)
     codebook training would pay: cells with high parallel share lose
     recall@k under plain k-means codebooks. Per-row folds are the
-    shared ordered aggregate(zip_with) double fold, mirrored in the
+    shared ordered double fold of the squared-L2 kernel, mirrored in the
     oracle by pos-ordered list_reduce with a 0.0 seed (the
     ann_ivf_cell_split discipline); cell sums are DECIMAL(30,10),
     so every number hashes bitwise.
@@ -2781,7 +2772,6 @@ def ann_lsh_planes_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact head is TakeOrderedAndProject; the 10-row exact set joins
     broadcast."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     qsig = python_lsh_signature(QUERY_VEC, _SWEEP_SIG)
     scored = emb.select(
         "vec_id",
@@ -3041,7 +3031,6 @@ def ann_rabitq_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     score instead of raw Hamming). Here the estimate is computed as
     one codegen projection; top-10 is TakeOrderedAndProject."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     sg = F.transform(
         "embedding",
         lambda v: F.when(v >= 0, F.lit(1.0)).otherwise(F.lit(-1.0)),
@@ -3050,8 +3039,8 @@ def ann_rabitq_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         dot_product("embedding", "embedding").alias("n2"),
         dot_product(sg, "embedding").alias("so"),
-        dot_product(sg, q).alias("sq"),
-        dot_product("embedding", q).alias("exact_dot"),
+        dot_product(sg, QUERY_VEC).alias("sq"),
+        dot_product("embedding", QUERY_VEC).alias("exact_dot"),
     )
     # Zero-vector guard: NULL the estimate when <sign(o),o> = 0 so the
     # Spark and DuckDB sides agree even on a degenerate corpus (Spark's
@@ -3150,12 +3139,11 @@ def ann_rerank_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("sq8_score"), F.asc("vec_id"))
         .limit(50)
     )
-    q = vector_literal(QUERY_VEC)
     s3 = (
         emb.join(F.broadcast(s2), "vec_id")
         .select(
             "vec_id", "hamming", "sq8_score",
-            dot_product("embedding", q).alias("score"),
+            dot_product("embedding", QUERY_VEC).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(10)
@@ -3319,7 +3307,6 @@ def spann_assignments(emb: DataFrame, query_vec: list[float]) -> DataFrame:
     one row per (vector, assigned cell) with the query distance, home
     label, and the assigned-cell struct ``a``. Zero-shuffle apart from
     the O(C*D) centroid build."""
-    q = vector_literal(query_vec)
     cent = centroids_by_key(emb, "embedding", "label")
     cl = cent.agg(
         F.array_sort(F.collect_list(F.struct("key", "centroid"))).alias("cl")
@@ -3333,7 +3320,7 @@ def spann_assignments(emb: DataFrame, query_vec: list[float]) -> DataFrame:
     )
     return emb.crossJoin(F.broadcast(cl)).select(
         "vec_id",
-        l2_distance(F.col("embedding"), q).alias("l2_dist"),
+        l2_distance("embedding", query_vec).alias("l2_dist"),
         F.array_sort(dists).alias("ds"),
     ).select(
         "vec_id",
@@ -3417,11 +3404,10 @@ def ann_spann_multi_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost with replication factor sum(|postings|)/N <= C bounded by eps;
     the probe side reads exactly one posting list (label-partitioned at
     scale, so one partition). Exactness: the same sequential
-    zip_with/aggregate fold as functions/vector.py:l2_distance on both
+    left-to-right fold as functions/vector.py:l2_distance on both
     sides; 1.25 is exact in binary so the closure predicate cannot
     straddle a rounding boundary."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     cent = centroids_by_key(emb, "embedding", "label")
     assigned = spann_assignments(emb, QUERY_VEC)
     best = (

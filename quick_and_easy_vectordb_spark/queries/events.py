@@ -17,10 +17,7 @@ from quick_and_easy_vectordb_spark.operators.asof import asof_join
 from quick_and_easy_vectordb_spark.operators.util import ensure_parallelism
 from quick_and_easy_vectordb_spark.operators.skew import salted_join
 from quick_and_easy_vectordb_spark.queries.registry import query
-from quick_and_easy_vectordb_spark.sources.catalog import (
-    load_table,
-    read_nanos_as_long,
-)
+from quick_and_easy_vectordb_spark.sources.catalog import load_table
 from quick_and_easy_vectordb_spark.sources.scratch import fresh, staged
 from quick_and_easy_vectordb_spark.streaming.windows import (
     drain,
@@ -4784,7 +4781,6 @@ def _sentinel_dir(
 
     def write(d: str) -> None:
         _link_events(sf_dir, ("events",), d)
-        read_nanos_as_long(spark)
         src = os.path.abspath(f"{sf_dir}/events.parquet")
         one = spark.read.parquet(src).limit(1)
         ts_dtype = one.schema["ts"].dataType

@@ -16,7 +16,7 @@ from quick_and_easy_vectordb_spark.functions.embed import (
     hash_embed_py,
     make_embed_udf,
 )
-from quick_and_easy_vectordb_spark.functions.vector import dot_product, vector_literal
+from quick_and_easy_vectordb_spark.functions.vector import dot_product
 from quick_and_easy_vectordb_spark.operators.multimodal import (
     extract_binary_features,
     with_binary_payload,
@@ -117,9 +117,8 @@ def mm_embed_hash_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/embed.py — identical plumbing, deterministic math)."""
     docs = _scan_docs(spark, sf_dir, "doc_id", "text")
     embed = make_embed_udf("hash", HASH_EMBED_DIM)
-    q = vector_literal(_QVEC)
     scored = docs.select(
-        "doc_id", dot_product(embed(F.col("text")), q).alias("similarity")
+        "doc_id", dot_product(embed(F.col("text")), _QVEC).alias("similarity")
     )
     return scored.orderBy(F.desc("similarity"), F.asc("doc_id")).limit(10)
 
@@ -215,11 +214,10 @@ def vdb_end_to_end_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     chunks = chunk_documents(docs, chunk_size=200, overlap=50)
     embed = make_embed_udf("hash", HASH_EMBED_DIM)
-    q = vector_literal(_QVEC)
     scored = chunks.select(
         "chunk_id",
         "document_id",
-        dot_product(embed(F.col("chunk_text")), q).alias("similarity"),
+        dot_product(embed(F.col("chunk_text")), _QVEC).alias("similarity"),
     )
     return scored.orderBy(F.desc("similarity"), F.asc("chunk_id")).limit(5)
 
@@ -3362,11 +3360,10 @@ def mm_pdf_rag_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted = docs.mapInPandas(run, "doc_id long, text string")
     chunks = chunk_documents(extracted, chunk_size=200, overlap=50)
     embed = make_embed_udf("hash", HASH_EMBED_DIM)
-    q = vector_literal(_QVEC)
     scored = chunks.select(
         "chunk_id",
         "document_id",
-        dot_product(embed(F.col("chunk_text")), q).alias("similarity"),
+        dot_product(embed(F.col("chunk_text")), _QVEC).alias("similarity"),
     )
     return scored.orderBy(F.desc("similarity"), F.asc("chunk_id")).limit(5)
 

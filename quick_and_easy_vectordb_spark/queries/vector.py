@@ -126,7 +126,6 @@ def vdb_threshold_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score-threshold search: every row with cosine ≥ τ. A pure
     filter — fully pushed into the scan stage, no shuffle at all."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     scored = emb.select(
         "vec_id", cosine_similarity("embedding", QUERY_VEC).alias("score")
     )
@@ -280,7 +279,6 @@ def vdb_knn_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped top-k: the 3 most similar vectors *within each label*
     — window partitionBy keeps the shuffle keyed on label only."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     scored = emb.select(
         "label", "vec_id", dot_product("embedding", QUERY_VEC).alias("similarity")
     )
@@ -402,14 +400,15 @@ def vdb_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the (verified engine-identical) dot-product fold."""
     emb = load_table(spark, sf_dir, "embeddings")
     e = F.col("embedding").cast("array<double>")
-    ones = vector_literal([1.0] * len(QUERY_VEC))
     return emb.select(
         "vec_id",
         l2_norm("embedding").alias("l2_norm"),
         F.array_max(e).alias("max_val"),
         F.array_min(e).alias("min_val"),
         F.array_position(e, F.array_max(e)).alias("argmax_idx"),
-        (dot_product(e, ones) / F.size("embedding")).alias("mean_val"),
+        (dot_product("embedding", [1.0] * len(QUERY_VEC)) / F.size("embedding")).alias(
+            "mean_val"
+        ),
     )
 
 
@@ -608,7 +607,6 @@ def vdb_search_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     every page; at corpus scale that is the difference between
     pagination working and not)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     scored = emb.select(
         "vec_id", dot_product("embedding", QUERY_VEC).alias("similarity")
     ).persist()
@@ -698,7 +696,6 @@ def vdb_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("r_lex"),
     )
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     vecr = emb.select(
         F.col("vec_id").alias("doc_id"),
         F.row_number()
@@ -744,7 +741,6 @@ def vdb_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("lang") == "en") & (F.col("n_chars") >= 200)
     )
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     joined = emb.join(docs, emb.vec_id == docs.doc_id)
     return (
         joined.select(
@@ -1044,7 +1040,6 @@ def vdb_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k via TakeOrderedAndProject. |Q| is a query-time constant
     (~32 for ColBERT), so the scan stays single-pass."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q1, q2 = vector_literal(QUERY_VEC), vector_literal(QUERY_VEC2)
     per_label = (
         emb.select(
             "label",
@@ -1110,7 +1105,6 @@ def vdb_upsert_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") + 100).alias("label"),
     )
     merged = upsert(emb, delta, on="vec_id")
-    q = vector_literal(QUERY_VEC)
     return (
         merged.select(
             "vec_id",
@@ -1150,7 +1144,6 @@ def vdb_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     tombstones = emb.filter(F.col("vec_id") % 13 == 0).select("vec_id")
     live = emb.join(F.broadcast(tombstones), "vec_id", "left_anti")
-    q = vector_literal(QUERY_VEC)
     return (
         live.select(
             "vec_id",
@@ -1456,9 +1449,9 @@ def vdb_matryoshka_prefix_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     full 64-dim dot product — the memory-bandwidth play every
     vector store now ships (4× fewer bytes per candidate scanned).
 
-    Both stages are TakeOrderedAndProject over pure Catalyst
-    expressions; slice + aggregate(zip_with) keeps the same
-    sequential fold DuckDB's list_dot_product uses, so scores are
+    Both stages are TakeOrderedAndProject over JVM-side
+    expressions; slice + the dot kernel keeps the same sequential
+    fold DuckDB's list_dot_product uses, so scores are
     bit-identical.
 
     Plan shape at 100 TB: stage 1 reads 16 of 64 components per row
@@ -1468,13 +1461,13 @@ def vdb_matryoshka_prefix_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores exactly 50 rows. One wide scan, zero shuffles beyond the
     top-k reduction."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q16 = vector_literal(QUERY_VEC[:_MRL_PREFIX])
-    qfull = vector_literal(QUERY_VEC)
     v = F.col("embedding").cast("array<double>")
     scored = emb.select(
         "vec_id",
         "embedding",
-        dot_product(F.slice(v, 1, _MRL_PREFIX), q16).alias("prefix_score"),
+        dot_product(F.slice(v, 1, _MRL_PREFIX), QUERY_VEC[:_MRL_PREFIX]).alias(
+            "prefix_score"
+        ),
     )
     short = scored.orderBy(F.desc("prefix_score"), F.asc("vec_id")).limit(
         _MRL_SHORTLIST
@@ -1482,9 +1475,7 @@ def vdb_matryoshka_prefix_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     rer = short.select(
         "vec_id",
         "prefix_score",
-        dot_product(F.col("embedding").cast("array<double>"), qfull).alias(
-            "similarity"
-        ),
+        dot_product("embedding", QUERY_VEC).alias("similarity"),
     )
     return rer.orderBy(F.desc("similarity"), F.asc("vec_id")).limit(5)
 
@@ -1532,10 +1523,9 @@ def vdb_power_iteration_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(partitions·d) longs, independent of N. Iterating multiplies
     plans, not state: each step is this same job with q := y/‖y‖."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     d = emb.select(
         F.col("embedding").cast("array<double>").alias("v"),
-        dot_product(F.col("embedding").cast("array<double>"), q).alias("dq"),
+        dot_product("embedding", QUERY_VEC).alias("dq"),
     )
     exploded = d.select(F.posexplode("v").alias("pos0", "val"), "dq")
     term = (
@@ -1662,7 +1652,6 @@ def vdb_postfilter_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches 20 rows — a broadcast of the RESULT side, the inverse
     of pre-filter's broadcast of the id set."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     ranked = (
         emb.select(
             "vec_id", cosine_similarity("embedding", QUERY_VEC).alias("score")
@@ -1820,8 +1809,7 @@ def vdb_random_projection_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     fetched per candidate only."""
     emb = load_table(spark, sf_dir, "embeddings")
     planes = _rp_planes()
-    e = F.col("embedding").cast("array<double>")
-    px = [dot_product(e, vector_literal(p)) for p in planes]
+    px = [dot_product("embedding", p) for p in planes]
     qx = [
         sum(float(a) * float(b) for a, b in zip(QUERY_VEC, p)) for p in planes
     ]
@@ -1843,7 +1831,6 @@ def vdb_random_projection_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long"),
         )
     )
-    q = vector_literal(QUERY_VEC)
     return (
         cand.select(
             "vec_id",
@@ -1893,7 +1880,6 @@ def vdb_shard_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     executors ships at most shards·k rows; the final merge sorts
     8·k = 80 rows. The vector column never leaves the scan stage."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     scored = emb.select(
         "vec_id",
         (F.col("vec_id") % _SHARDS).cast("long").alias("shard"),
@@ -2126,7 +2112,6 @@ def vdb_hybrid_score_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
         lex_score = term if lex_score is None else lex_score + term
     lex = docs.select("doc_id", lex_score.cast("double").alias("lex"))
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     vec = emb.select(
         F.col("vec_id").alias("doc_id"),
         cosine_similarity("embedding", QUERY_VEC).alias("cos"),
@@ -2306,10 +2291,9 @@ def vdb_mips_augmented_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject heaps; the rank-comparison join touches 5
     rows. Augmentation adds NO shuffle anywhere."""
     e = load_table(spark, sf_dir, "embeddings")
-    qlit = vector_literal(QUERY_VEC)
     base = e.select(
         "vec_id",
-        dot_product("embedding", qlit).alias("dp"),
+        dot_product("embedding", QUERY_VEC).alias("dp"),
         dot_product("embedding", "embedding").alias("dvv"),
     ).persist()
     m2 = base.agg(F.max("dvv").alias("m2"))
@@ -2719,7 +2703,6 @@ def vdb_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows and the pair self-join touch only {_RC_K} broadcast-sized
     rows."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = vector_literal(QUERY_VEC)
     scored = emb.select(
         "vec_id",
         dot_product("embedding", QUERY_VEC).alias("dot"),

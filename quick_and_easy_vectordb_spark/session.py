@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from quick_and_easy_vectordb_spark.functions import kernels
 from quick_and_easy_vectordb_spark.sources import scratch
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
@@ -38,6 +39,20 @@ def _default_driver_memory() -> str:
     return f"{min(32 * 1024, kib // 2048)}m"
 
 
+# Parquet TIMESTAMP(NANOS) is read as raw long nanos (the vectorized
+# reader rejects it otherwise); sources/catalog.py normalize_ts floors
+# them to micros.
+_NANOS_AS_LONG = ("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+def adopt(spark: SparkSession) -> None:
+    """Ready a session that ``get_spark`` did not build for the engine's
+    plans: register the vector kernels and set the parquet nanos conf.
+    Idempotent; the driver contract calls it on the caller's session."""
+    kernels.install(spark)
+    spark.conf.set(*_NANOS_AS_LONG)
+
+
 def get_spark(
     app_name: str = "quick_and_easy_vectordb_spark",
     master: str | None = None,
@@ -47,10 +62,17 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``)
     when no cluster master is configured; on a real cluster the caller's
-    ``--master`` wins because an existing active session is reused as-is.
+    ``--master`` wins because an existing active session is reused
+    as-is, apart from :func:`adopt`.
+
+    The vector kernels (functions/kernels.py) are compiled first if
+    their cache is cold, which needs ``javac``; without it this raises.
+    Their jar goes on ``spark.jars``, after any jars ``extra_conf``
+    lists, and they are registered in the session.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
+        adopt(active)
         return active
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -66,6 +88,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(*_NANOS_AS_LONG)
         # embeddings are wide rows (~0.5-6 KB); keep scan splits moderate
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # local mode: the driver JVM hosts all executor threads, so it
@@ -83,7 +106,10 @@ def get_spark(
         # root makes that impossible and is removed at exit.
         .config("spark.sql.warehouse.dir", os.path.join(scratch.root(), "warehouse"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
-    return builder.getOrCreate()
+    extra_conf = dict(extra_conf or {})
+    jars = [j for j in extra_conf.pop("spark.jars", "").split(",") if j]
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
+    spark = builder.config("spark.jars", ",".join([*jars, kernels.jar()])).getOrCreate()
+    kernels.install(spark)
+    return spark

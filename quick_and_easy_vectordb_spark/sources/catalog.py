@@ -41,12 +41,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _SCAN_META: dict[tuple, tuple] = {}
 
 
-def read_nanos_as_long(spark: SparkSession) -> None:
-    """Read parquet TIMESTAMP(NANOS) as raw long nanos (the vectorized
-    reader rejects it otherwise); ``normalize_ts`` floors it to micros."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-
 def infer_meta(spark: SparkSession, path: str, name: str) -> tuple:
     """(schema, ts_is_long, ntz_cols) of the parquet at ``path``."""
     schema = spark.read.parquet(path).schema
@@ -83,9 +77,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cast is a pure type change, never a wall-clock shift):
 
     * parquet TIMESTAMP(NANOS) — Spark's vectorized reader rejects it,
-      so it is read as raw nanos (legacy ``nanosAsLong`` conf, set here
-      at runtime so any caller session works) and floored to micros,
-      the same truncation DuckDB applies to TIMESTAMP_NS;
+      so it is read as raw nanos (legacy ``nanosAsLong`` conf, set once
+      in ``session.get_spark``) and floored to micros, the same
+      truncation DuckDB applies to TIMESTAMP_NS;
     * parquet timestamp[us] with isAdjustedToUTC=false — Spark reads it
       as TIMESTAMP_NTZ, which functions like ``unix_micros`` reject;
       cast to TimestampType.
@@ -95,8 +89,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        read_nanos_as_long(spark)
     if os.path.isfile(path):
         schema, ts_is_long, ntz_cols = _scan_meta(spark, path, name)
     else:

@@ -50,14 +50,14 @@ def canonicalize_vectors(df: DataFrame) -> DataFrame:
     """Ingest-time canonicalization (SURVEY.md §1.4.1): every vector
     becomes array<double> regardless of source dtype, and the L2 norm
     is precomputed once — cosine queries against the corpus then never
-    re-fold the self-dot-product. Pure Catalyst expressions; works
+    re-fold the self-dot-product. JVM-side expressions only; works
     identically on batch and streaming frames."""
     vec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     return df.select(
         "vec_id",
         vec.alias("embedding"),
         F.col("label"),
-        l2_norm(vec).alias("norm"),
+        l2_norm("embedding").alias("norm"),
     )
 
 

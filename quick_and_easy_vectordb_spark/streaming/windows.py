@@ -37,7 +37,6 @@ from pyspark.sql import types as T
 from quick_and_easy_vectordb_spark.sources.catalog import (
     infer_meta,
     normalize_ts,
-    read_nanos_as_long,
 )
 
 EVENTS_STREAM_SCHEMA = T.StructType(
@@ -68,7 +67,6 @@ def read_events_stream(
     type change). Watermarks require this — ``withWatermark`` on a
     column whose type silently mismatches the file would misread event
     time. An empty directory keeps the declared TIMESTAMP schema."""
-    read_nanos_as_long(spark)
     try:
         _, ts_is_long, ntz_cols = infer_meta(spark, path, "events")
     except AnalysisException:  # empty dir at start-up

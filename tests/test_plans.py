@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from quick_and_easy_vectordb_spark.functions.vector import dot_product, vector_literal
+from quick_and_easy_vectordb_spark.functions.vector import dot_product
 from quick_and_easy_vectordb_spark.operators.search import batch_knn, top_k_by_dot
 from quick_and_easy_vectordb_spark.queries.common import QUERY_VEC
 from quick_and_easy_vectordb_spark.sources.catalog import load_table
@@ -109,19 +109,17 @@ def test_gram_matrix_has_partial_aggregation(spark, sf_dir):
 
 
 def test_vector_math_is_jvm_side_no_python(spark, sf_dir):
-    """The dot product must be pure JVM expression eval — no Python
-    worker round-trip. (Note: higher-order functions are NOT whole-
-    stage-codegen'd in Spark 4 — the projection runs as interpreted
-    expression eval — but the scan stays columnar and the constant
-    query vector is folded into the plan.)"""
+    """The dot product must be JVM-side — no Python worker round-trip
+    — and a call of the compiled kernel, not an interpreted
+    higher-order-function fold; the scan stays columnar."""
     emb = load_table(spark, sf_dir, "embeddings")
     scored = emb.select(
-        "vec_id", dot_product("embedding", vector_literal(QUERY_VEC)).alias("s")
+        "vec_id", dot_product("embedding", QUERY_VEC).alias("s")
     )
     plan = physical(scored)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "Batched: true" in plan  # columnar parquet scan
-    assert "aggregate(zip_with" in plan  # folded constant, single pass
+    assert "qev_dot(" in plan and "aggregate(" not in plan
 
 
 def test_dimension_join_is_broadcast(spark, sf_dir):

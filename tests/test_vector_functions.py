@@ -81,7 +81,8 @@ def test_cosine_matches_math(chunks):
 
 # Adversarial rows: NULL array, NULL element, empty array, dimension
 # mismatch, all-zero vector, NaN and ±inf components, an overflowing
-# norm, and finite rows whose float32 copies differ from the doubles.
+# norm, finite rows whose float32 copies differ from the doubles, and
+# signed zeros.
 _INF, _NAN = float("inf"), float("nan")
 _ADVERSARIAL = [
     (1, None),
@@ -95,6 +96,7 @@ _ADVERSARIAL = [
     (9, [1e200, 1e200, 0.0, 0.0]),
     (10, [0.1, 0.2, 0.3, 0.4]),
     (11, [3.0, -4.0, 1e-3, 7.25]),
+    (12, [-0.0, 0.0, -0.0, -1e-300]),
 ]
 _QUERIES = [
     [1.0, 0.5, 0.25, 0.0],
@@ -102,25 +104,56 @@ _QUERIES = [
     [0.0, 0.0, 0.0, 0.0],  # zero query
     [0.5, _NAN, 1.0, 0.0],
     [_INF, 0.0, -1.0, 0.0],
+    [-0.0, 1e-300, -0.0, 1e300],
     [0.1, 0.7, -0.2],  # dimension mismatch against every 4-wide row
 ]
 
 
-def _parent_cosine_sql(a: str, b: str) -> str:
-    """The cosine formula before each norm was folded once per row:
-    both norms written inline in both CASE branches."""
+# The spec: the higher-order-function folds the compiled kernels
+# (functions/VectorKernels.java) replaced, as SQL text. Each kernel
+# must return exactly what its fold returns on every row.
+def _as_double_sql(x: str) -> str:
+    return f"transform({x}, x -> CAST(x AS DOUBLE))"
 
-    def d(x):
-        return f"transform({x}, x -> CAST(x AS DOUBLE))"
 
-    dot = (
-        f"aggregate(zip_with({d(a)}, {d(b)}, (x, y) -> x * y), 0.0D, "
-        "(acc, v) -> acc + v)"
+def _spec_dot(a: str, b: str) -> str:
+    # the seed is 0.0D: a bare 0.0 parses as DECIMAL(1,1)
+    return (
+        f"aggregate(zip_with({_as_double_sql(a)}, {_as_double_sql(b)}, "
+        "(x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
     )
-    na, nb = (
-        f"sqrt(aggregate({d(x)}, 0.0D, (acc, v) -> acc + v * v))" for x in (a, b)
+
+
+def _spec_norm(a: str) -> str:
+    return f"sqrt(aggregate({_as_double_sql(a)}, 0.0D, (acc, v) -> acc + v * v))"
+
+
+def _spec_l2sq(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({_as_double_sql(a)}, {_as_double_sql(b)}, "
+        "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, v) -> acc + v)"
     )
-    return f"CASE WHEN ({na} * {nb}) != 0.0D THEN {dot} / ({na} * {nb}) END"
+
+
+def _spec_cos(a: str, b: str) -> str:
+    denom = f"({_spec_norm(a)} * {_spec_norm(b)})"
+    return f"CASE WHEN {denom} != 0.0D THEN {_spec_dot(a, b)} / {denom} END"
+
+
+def _spec_lsh(a: str, planes) -> str:
+    return "CONCAT(" + ", ".join(
+        f"(CASE WHEN ({_spec_dot(a, vector_literal_sql(p))}) >= 0 "
+        "THEN '1' ELSE '0' END)"
+        for p in planes
+    ) + ")"
+
+
+_SPECS = {
+    "dot": (dot_product, _spec_dot),
+    "l2": (l2_distance, lambda a, b: f"sqrt({_spec_l2sq(a, b)})"),
+    "l2sq": (squared_l2_distance, _spec_l2sq),
+    "cos": (cosine_similarity, _spec_cos),
+}
 
 
 def _bits(v):
@@ -130,61 +163,70 @@ def _bits(v):
 
 def _assert_all_equal(rows, names):
     for r in rows:
-        got = {n: _bits(r[n]) for n in names}
+        got = {n: r[n] if isinstance(r[n], str) else _bits(r[n]) for n in names}
         assert len(set(got.values())) == 1, (r["id"], got)
 
 
 def test_scorer_paths_bitwise_equal(spark):
-    """The single-parse SQL path (names and float sequences) and the
-    Column path of every scorer return bitwise-equal values on
-    adversarial rows, and cosine equals the inline two-norm formula."""
+    """Every kernel, called with a name and a float list, with a list
+    and a name, and with Column operands, over ``array<float>`` and
+    ``array<double>`` rows, returns bitwise the value of its fold spec
+    on adversarial rows; so do ``l2_norm`` and ``lsh_signature``."""
+    from quick_and_easy_vectordb_spark.operators.ann import hyperplane, lsh_signature
+
     df = spark.createDataFrame(_ADVERSARIAL, "id int, vd array<double>").withColumn(
         "vf", F.col("vd").cast("array<float>")
     )
-    scorers = {
-        "dot": dot_product,
-        "l2": l2_distance,
-        "l2sq": squared_l2_distance,
-        "cos": cosine_similarity,
-    }
-    for q in _QUERIES:
-        cols, groups = [], []
+    cols, groups = [], []
+    for vec in ("vd", "vf"):
+        names = [f"norm_{vec}_{p}" for p in ("name", "col", "spec")]
+        cols += [
+            l2_norm(vec).alias(names[0]),
+            l2_norm(F.col(vec)).alias(names[1]),
+            F.expr(_spec_norm(f"`{vec}`")).alias(names[2]),
+        ]
+        groups.append(names)
+        planes = [hyperplane(j, 4) for j in range(6)]
+        names = [f"lsh_{vec}_kernel", f"lsh_{vec}_spec"]
+        cols += [
+            lsh_signature(vec, 6, 4).alias(names[0]),
+            F.expr(_spec_lsh(f"`{vec}`", planes)).alias(names[1]),
+        ]
+        groups.append(names)
+    for i, q in enumerate(_QUERIES):
+        names = [f"norm_q{i}_{p}" for p in ("list", "spec")]
+        cols += [
+            l2_norm(q).alias(names[0]),
+            F.expr(_spec_norm(vector_literal_sql(q))).alias(names[1]),
+        ]
+        groups.append(names)
         for vec in ("vd", "vf"):
-            for m, fn in scorers.items():
-                names = [f"{m}_{vec}_sql", f"{m}_{vec}_col"]
+            for m, (fn, spec) in _SPECS.items():
+                names = [f"{m}_{vec}_q{i}_{p}" for p in ("name", "rev", "col", "spec")]
                 cols += [
                     fn(vec, q).alias(names[0]),
-                    fn(F.col(vec), vector_literal(q)).alias(names[1]),
+                    fn(q, vec).alias(names[1]),
+                    fn(F.col(vec), vector_literal(q)).alias(names[2]),
+                    F.expr(spec(f"`{vec}`", vector_literal_sql(q))).alias(names[3]),
                 ]
-                if m == "cos":
-                    names.append(f"cos_{vec}_inline")
-                    cols.append(
-                        F.expr(
-                            _parent_cosine_sql(f"`{vec}`", vector_literal_sql(q))
-                        ).alias(names[2])
-                    )
                 groups.append(names)
-        rows = df.select("id", *cols).collect()
-        for names in groups:
-            _assert_all_equal(rows, names)
-    # Column operands on both sides: float32 rows against double rows,
-    # each row against every query.
+    rows = df.select("id", *cols).collect()
+    for names in groups:
+        _assert_all_equal(rows, names)
+    # Two column operands: float32 rows against double rows, each row
+    # against every query.
     pairs = df.crossJoin(
         spark.createDataFrame([(q,) for q in _QUERIES], "qd array<double>")
     )
     cols, groups = [], []
     for a, b in (("vd", "qd"), ("vf", "qd"), ("vf", "vd")):
-        for m, fn in scorers.items():
-            names = [f"{m}_{a}_{b}_sql", f"{m}_{a}_{b}_col"]
+        for m, (fn, spec) in _SPECS.items():
+            names = [f"{m}_{a}_{b}_{p}" for p in ("name", "col", "spec")]
             cols += [
                 fn(a, b).alias(names[0]),
                 fn(F.col(a), F.col(b)).alias(names[1]),
+                F.expr(spec(f"`{a}`", f"`{b}`")).alias(names[2]),
             ]
-            if m == "cos":
-                names.append(f"cos_{a}_{b}_inline")
-                cols.append(
-                    F.expr(_parent_cosine_sql(f"`{a}`", f"`{b}`")).alias(names[2])
-                )
             groups.append(names)
     rows = pairs.select("id", *cols).collect()
     assert len(rows) == len(_ADVERSARIAL) * len(_QUERIES)
@@ -193,9 +235,9 @@ def test_scorer_paths_bitwise_equal(spark):
     # l2_distance is the sqrt of squared_l2_distance, bit for bit
     for r in rows:
         for a, b in (("vd", "qd"), ("vf", "qd"), ("vf", "vd")):
-            sq = r[f"l2sq_{a}_{b}_sql"]
+            sq = r[f"l2sq_{a}_{b}_name"]
             want = None if sq is None else math.sqrt(sq)
-            assert _bits(r[f"l2_{a}_{b}_sql"]) == _bits(want), (r["id"], a, b)
+            assert _bits(r[f"l2_{a}_{b}_name"]) == _bits(want), (r["id"], a, b)
 
 
 def test_l2_distance_text_is_sqrt_of_squared(spark):
