@@ -80,7 +80,9 @@ def lsh_signature(vec_col: str, num_planes: int, dim: int) -> Column:
 
 def python_lsh_signature(vec: Sequence[float], num_planes: int) -> str:
     """The same signature computed driver-side for a literal query
-    vector (used to build the probe predicate)."""
+    vector (used to build the probe predicate). A NaN plane dot signs
+    ``1``, as in :func:`lsh_signature`, where SQL orders NaN above
+    every double."""
     dim = len(vec)
     out = []
     for j in range(num_planes):
@@ -88,7 +90,7 @@ def python_lsh_signature(vec: Sequence[float], num_planes: int) -> str:
         s = 0.0
         for a, b in zip(vec, h):
             s += a * b
-        out.append("1" if s >= 0 else "0")
+        out.append("0" if s < 0 else "1")
     return "".join(out)
 
 

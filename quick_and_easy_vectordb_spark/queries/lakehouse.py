@@ -1027,14 +1027,9 @@ def src_copy_on_write_update(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "bucket",
             )
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            rewritten.write.mode("overwrite").partitionBy("bucket").parquet(
-                tbl
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        rewritten.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(tbl)
 
     tbl = os.path.join(staged("cow", sf_dir, write), "table")
     final = spark.read.parquet(tbl).select(

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 from quick_and_easy_vectordb_spark.functions import kernels
@@ -48,7 +49,13 @@ _NANOS_AS_LONG = ("spark.sql.legacy.parquet.nanosAsLong", "true")
 def adopt(spark: SparkSession) -> None:
     """Ready a session that ``get_spark`` did not build for the engine's
     plans: register the vector kernels and set the parquet nanos conf.
-    Idempotent; the driver contract calls it on the caller's session."""
+    Idempotent; the driver contract calls it on the caller's session.
+
+    Such a session keeps Hadoop's own ``file://`` classes, which fork
+    ``chmod`` for each local file and directory written. Binding the
+    engine's class now would not take: the JVM made and cached its
+    local FileSystem when the session started. Files, modes and
+    results are the same either way."""
     kernels.install(spark)
     spark.conf.set(*_NANOS_AS_LONG)
 
@@ -65,10 +72,19 @@ def get_spark(
     ``--master`` wins because an existing active session is reused
     as-is, apart from :func:`adopt`.
 
-    The vector kernels (functions/kernels.py) are compiled first if
-    their cache is cold, which needs ``javac``; without it this raises.
-    Their jar goes on ``spark.jars``, after any jars ``extra_conf``
-    lists, and they are registered in the session.
+    The engine's jar (functions/kernels.py) is compiled first if its
+    cache is cold, which needs ``javac``; without it this raises. The
+    jar goes on ``spark.jars`` (which ships it to executors) and on
+    ``spark.driver.extraClassPath``, each after any entries
+    ``extra_conf`` gives, and its vector kernels are registered in the
+    session. The ``file`` scheme is bound to its java.nio FileSystem
+    (``kernels.FILE_SYSTEM``), so local writes set modes without
+    forking ``chmod``. That class must be on the class path the JVM
+    starts with: Spark makes its first local FileSystem while it
+    submits the driver, before ``spark.jars`` is loaded, and Hadoop
+    caches that instance for every later writer in the JVM. So a JVM
+    that is already running in this process without the jar (a session
+    built and stopped elsewhere) keeps Hadoop's classes.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -107,9 +123,24 @@ def get_spark(
         .config("spark.sql.warehouse.dir", os.path.join(scratch.root(), "warehouse"))
     )
     extra_conf = dict(extra_conf or {})
+    jar = kernels.jar()
     jars = [j for j in extra_conf.pop("spark.jars", "").split(",") if j]
+    class_path = [
+        p for p in extra_conf.pop("spark.driver.extraClassPath", "").split(os.pathsep) if p
+    ]
+    builder = builder.config("spark.jars", ",".join([*jars, jar])).config(
+        "spark.driver.extraClassPath", os.pathsep.join([*class_path, jar])
+    )
+    # a JVM already running in this process (a session built and stopped
+    # elsewhere) keeps the class path it started with
+    jvm = SparkContext._jvm
+    if jvm is None or jar in jvm.java.lang.System.getProperty("java.class.path").split(
+        os.pathsep
+    ):
+        for k, v in kernels.FILE_SYSTEM.items():
+            builder = builder.config(f"spark.hadoop.{k}", v)
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.config("spark.jars", ",".join([*jars, kernels.jar()])).getOrCreate()
+    spark = builder.getOrCreate()
     kernels.install(spark)
     return spark

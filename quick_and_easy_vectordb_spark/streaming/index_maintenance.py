@@ -24,6 +24,19 @@ as new vectors stream in, without ever rebuilding it from scratch:
   cannot atomically overwrite a path it is reading); the caller swaps
   directories (an fs rename — atomic on HDFS/object-store manifest
   commits) between streaming restarts.
+
+Cost: a build writes one directory, one parquet file and one ``.crc``
+per bucket a task touches (about 250 buckets' worth for 4,000 rows at
+8 planes), plus the checkpoint and file-sink logs. Without the native
+libhadoop, Hadoop's local FileSystem forked ``chmod`` for each of
+those, about 810 process starts per build. ``session.get_spark`` binds
+the ``file`` scheme to the engine's java.nio class
+(functions/NioLocalFileSystem.java), which sets the same modes with
+no process start; on a 4-core host that took a one-process build from
+about 4.2 s to 1.5 s of ``addBatch``. A session built elsewhere keeps
+Hadoop's classes and that cost. Repartitioning by bucket before the
+sink spreads the files over more tasks but does not cut their number,
+so it is not done.
 """
 
 from __future__ import annotations

@@ -3,6 +3,8 @@ centroid math, partitioned index write."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,12 +21,25 @@ from quick_and_easy_vectordb_spark.operators.ann import (
 
 @pytest.mark.parametrize("dim", [3, 16, 33, 64])
 def test_spark_and_python_signatures_agree(spark, dim):
+    """Both sides agree on every row, NaN-bearing ones included: a NaN
+    plane dot signs 1 on both (SQL orders NaN above every double)."""
     vecs = [[float((i * 13 + j * 7) % 11 - 5) for i in range(dim)] for j in range(20)]
+    for j, pos in enumerate((0, dim // 2, dim - 1)):
+        vecs.append(list(vecs[j]))
+        vecs[-1][pos] = math.nan
+    vecs.append([math.inf] + [-math.inf] * (dim - 1))  # a sum may be inf - inf
     df = spark.createDataFrame([(j, v) for j, v in enumerate(vecs)], "id long, v array<double>")
     got = {r.id: r.sig for r in
            df.select("id", lsh_signature("v", 8, dim).alias("sig")).collect()}
     for j, v in enumerate(vecs):
         assert got[j] == python_lsh_signature(v, 8)
+
+
+def test_nan_row_signs_all_one(spark):
+    vec = [math.nan, 1.0, 0.0, 2.0]
+    df = spark.createDataFrame([(vec,)], "v array<double>")
+    assert df.select(lsh_signature("v", 6, 4)).first()[0] == "111111"
+    assert python_lsh_signature(vec, 6) == "111111"
 
 
 @pytest.mark.parametrize("dim", [8, 64])

@@ -60,7 +60,7 @@ def build_index() -> str:
         rel = os.path.relpath(code.co_filename, _REPO)
         oracle = "sql" if qd.oracle is not None else "rows-only"
         fams.setdefault(fam, []).append(
-            (name, one_liner(qd.fn), f"{rel}:{code.co_firstlineno}",
+            (name, one_liner(qd.fn), f"{rel}::{code.co_name}",
              oracle, "bench" if qd.bench else "")
         )
     lines = [
@@ -68,7 +68,7 @@ def build_index() -> str:
         "",
         "Generated by `python tools/survey_crosscheck.py --index`; do",
         "not edit by hand (tests/test_survey_index.py pins it fresh).",
-        "One row per registered query: defining file:line, oracle kind",
+        "One row per registered query: defining file::function, oracle kind",
         "(`sql` = DuckDB hash-compare, `rows-only` = non-SQL-expressible),",
         "and whether it is in the bench.py headline set. SURVEY.md §2b",
         "remains the narrative record; this is the map.",
