@@ -15,38 +15,18 @@ state bounded by degree, all data distributed; ``localCheckpoint``
 truncates lineage each round (at cluster scale use ``checkpoint`` to
 reliable storage instead).
 
-History: rounds 1-8 used min-label propagation with one path-halving
-hop per round. That converges fast on dense near-dup clusters
-(diameter 2-4) but label-only halving STALLS on long chains whose id
-layout points "away" from the minimum — round 9's grid-blocked DBSCAN
-graph (spatial chains, diameter ~100) needed 25+ rounds while the cap
-was 20, and the operator silently returned split components (caught
-by the geo_dbscan_clusters oracle). Star rounds contract the graph
-itself, so no id layout defeats them — and an exhausted iteration cap
-now raises instead of returning wrong answers.
+Star rounds contract the graph itself, so no id layout defeats them
+(label propagation with path halving stalls on long chains whose ids
+point away from the minimum, such as a spatial DBSCAN chain), and an
+exhausted round cap raises rather than return split components.
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["connected_components", "dup_clusters"]
-
-# Reference-counted guard for the session-global constraint-propagation
-# toggle below (round-11, ADVICE r10): nested or concurrent
-# connected_components calls on the same SparkSession previously raced
-# the save/restore — the inner call could snapshot the already-disabled
-# value and "restore" the conf to false permanently. The outermost
-# entry saves + disables; only the matching outermost exit restores.
-# (Any UNRELATED query running concurrently on the same session still
-# observes the disabled conf for the duration — inherent to a
-# session-global toggle; the cost is only filter-inference quality.)
-_CP_LOCK = threading.Lock()
-_CP_DEPTH = 0
-_CP_SAVED = "true"
 
 
 def connected_components(
@@ -54,180 +34,118 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    pointer_jumping: bool = True,  # kept for API compat; always on
 ) -> DataFrame:
     """Return (id, component) for every vertex in ``edges``, where
     ``component`` is the minimum vertex id reachable from ``id``.
 
-    ALTERNATING STAR algorithm (Kiveris et al., "Connected Components
-    in MapReduce and Beyond"): each round rewrites the EDGE SET with a
-    large-star then a small-star operation until the graph is a star
-    forest whose centers are the component minima. Deterministic
+    Each round rewrites the EDGE SET with a large-star then a
+    small-star operation (Kiveris et al.). Both keep every component
+    intact and the small star writes every edge from the larger id to
+    the smaller, so once no vertex has two out-edges and no edge's
+    target has an out-edge, the edges are the star forest whose roots
+    are the component minima: that one test, run before the first
+    round and after each, decides convergence. Deterministic
     (min-of-ids everywhere), provably O(log^2 n) rounds with per-key
-    state bounded by node degree.
-
-    Round 9 replaced the previous min-label propagation + path
-    halving: label-only halving provably stalls on adversarial id
-    layouts (a spatial-chain DBSCAN graph of diameter ~100 needed 25+
-    rounds — the old max_iter=20 SILENTLY returned split components,
-    caught by the geo_dbscan_clusters oracle). Star rounds contract
-    the graph itself, so id layout cannot defeat them; and an
-    exhausted ``max_iter`` now RAISES instead of returning a wrong
-    answer.
+    state bounded by node degree. An exhausted ``max_iter`` RAISES:
+    stopping early would return split components.
 
     Vertices only in ``edges`` appear; isolated vertices (self-loop
     only) map to themselves.
-
-    Robustness (round 10): the star rounds SELF-JOIN a plan rooted at
-    a localCheckpointed LogicalRDD, which trips a Spark 4 analysis bug
-    when constraint propagation rewrites the deduplicated relation's
-    stale constraint attributes ("NoSuchElementException: key not
-    found: <attr>" on any action) — reproducible whenever the INPUT
-    edge list is itself checkpoint-derived (e.g. incremental-merge
-    callers). Constraint propagation is therefore disabled for the
-    duration of this operator and restored after; the only cost is
-    filter-inference quality on two-column union/agg/join plans,
-    where it contributes nothing.
     """
-    global _CP_DEPTH, _CP_SAVED
-    spark = edges.sparkSession
-    _CP = "spark.sql.constraintPropagation.enabled"
-    with _CP_LOCK:
-        if _CP_DEPTH == 0:
-            _CP_SAVED = spark.conf.get(_CP, "true")
-            spark.conf.set(_CP, "false")
-        _CP_DEPTH += 1
+    edges = edges.persist()  # scanned twice: edge checkpoint, vertex list
     try:
-        return _connected_components_impl(edges, src, dst, max_iter)
-    finally:
-        with _CP_LOCK:
-            _CP_DEPTH -= 1
-            if _CP_DEPTH == 0:
-                spark.conf.set(_CP, _CP_SAVED)
-
-
-def _connected_components_impl(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int,
-) -> DataFrame:
-    edges = edges.persist()  # scanned twice below (forward + reversed)
-    sym0 = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-    verts = sym0.select(F.col("u").alias("vid")).distinct().persist()
-    # strip self-loops: star rounds operate on proper edges
-    e = (
-        sym0.filter(F.col("u") != F.col("v"))
-        .select("u", "v")
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _sym(df: DataFrame) -> DataFrame:
-        return df.unionByName(
-            df.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-
-    def large_star(sym: DataFrame) -> DataFrame:
-        # per node u: m = min(N(u) ∪ {u}); emit (v, m) for v > u
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        ).select(F.col("u").alias("mu"), "m")
-        return (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mins, F.col("u") == F.col("mu"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
+        sym0 = _pairs(edges, (src, dst), (dst, src))
+        verts = sym0.select(F.col("u").alias("vid")).distinct()
+        # strip self-loops: star rounds operate on proper edges
+        e = (
+            sym0.filter(F.col("u") != F.col("v"))
             .distinct()
+            .localCheckpoint()
         )
-
-    def small_star(sym: DataFrame) -> DataFrame:
-        # per node u over its ≤-neighborhood: m = min(N<(u) ∪ {u});
-        # emit (x, m) for x in N<(u) ∪ {u}, x != m
-        le = sym.filter(F.col("v") < F.col("u"))
-        mins = le.groupBy("u").agg(F.min("v").alias("m")).select(
-            F.col("u").alias("mu"), "m"
-        )
-        with_m = le.join(mins, F.col("u") == F.col("mu"))
-        out = with_m.select(F.col("v").alias("u"), F.col("m").alias("v")) \
-            .unionByName(
-                with_m.select(F.col("mu").alias("u"), F.col("m").alias("v"))
+        converged = _is_star_forest(e)  # empty, or never: e is symmetric
+        for _ in range(max_iter):
+            if converged:
+                break
+            e = _small_star(_sym(_large_star(_sym(e)))).localCheckpoint()
+            converged = _is_star_forest(e)
+        if not converged:
+            # an exhausted cap means SPLIT components — wrong answers,
+            # not slow ones; fail loudly
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
             )
-        return out.filter(F.col("u") != F.col("v")).distinct()
-
-    def _fingerprint(df: DataFrame):
-        # Order-insensitive set fingerprint in ONE map-side-combinable
-        # agg job: count + three xxhash64 XOR folds (XOR, not SUM — the
-        # edge sets are distinct so multiplicity is 1, and XOR cannot
-        # overflow, which matters under Spark 4's ANSI mode where a
-        # long-SUM overflow throws). Equal sets ⇒ equal fingerprints;
-        # a fingerprint MATCH is then confirmed with the exact
-        # exceptAll set-equality check below, so a collision can cost
-        # a wasted check, never a wrong convergence call.
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u))").alias("xu"),
-            F.expr("bit_xor(xxhash64(v))").alias("xv"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("xuv"),
-        ).collect()[0]
-        return (row.n, row.xu, row.xv, row.xuv)
-
-    converged = e.isEmpty()
-    fp_e = None
-    for _ in range(max_iter):
-        if converged:
-            break
-        new_e = small_star(_sym(large_star(_sym(e)))).localCheckpoint()
-        # stable iff the round was a no-op on the edge set: cheap
-        # order-insensitive fingerprint first (one agg job per round;
-        # the previous round's fingerprint is reused, and a differing
-        # fingerprint PROVES the sets differ), exact exceptAll
-        # set-equality only on a fingerprint match — the star fixed
-        # point is also verified as "every edge points at a root"
-        # below before trusting convergence
-        if fp_e is None:
-            fp_e = _fingerprint(e)
-        fp_new = _fingerprint(new_e)
-        same = fp_new == fp_e and (
-            new_e.exceptAll(e).isEmpty() and e.exceptAll(new_e).isEmpty()
-        )
-        e = new_e
-        fp_e = fp_new
-        if same:
-            # fixed point reached; verify star shape: no edge's target
-            # is itself a source of a smaller edge
-            tgt = e.select(F.col("v").alias("t")).distinct()
-            nonroot_tgt = tgt.join(
-                e.select(F.col("u").alias("t")).distinct(), "t"
-            )
-            converged = nonroot_tgt.isEmpty()
-            if not converged:  # pragma: no cover — not reachable per
-                break          # the algorithm's fixed-point theorem
-    if not converged:
+        # star forest: each non-root has one edge, to its component min;
+        # everything else (roots, isolated vertices) labels itself
+        pointed = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
+        return verts.join(
+            pointed, verts["vid"] == pointed["id"], "left"
+        ).select(
+            F.col("vid").alias("id"),
+            F.coalesce("component", F.col("vid")).alias("component"),
+        ).localCheckpoint()
+    finally:
         edges.unpersist()
-        verts.unpersist()
-        # an exhausted cap means SPLIT components — wrong answers,
-        # not slow ones; fail loudly
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+
+
+def _pairs(df: DataFrame, *cols: tuple[str, str]) -> DataFrame:
+    """(u, v) rows, one per (column, column) pair per row of ``df``.
+
+    A generator over one scan, not a union of two: with constraint
+    propagation on, Spark 4 fails such a union with
+    "NoSuchElementException: key not found: <attr>" when the two
+    endpoint columns differ in nullability (a non-nullable id against
+    a nullable ``id % k``), and the star rounds would union a
+    localCheckpoint of those edges again every round."""
+    return df.select(F.inline(F.array(*[
+        F.struct(F.col(a).alias("u"), F.col(b).alias("v")) for a, b in cols
+    ])))
+
+
+def _is_star_forest(e: DataFrame) -> bool:
+    """No vertex that is the larger end of an edge row appears in a
+    second row. With every edge written larger → smaller, that is: no
+    vertex has two out-edges and no target has one. A symmetric edge
+    set fails it unless empty. One grouped aggregate job."""
+    return (
+        _pairs(e, ("u", "v"), ("v", "u"))
+        .groupBy("u")
+        .agg(
+            F.max(F.col("u") > F.col("v")).alias("larger"),
+            F.count(F.lit(1)).alias("n"),
         )
-    # star forest: non-roots point at their component min; everything
-    # else (roots, isolated vertices) labels itself
-    pointed = e.groupBy("u").agg(F.min("v").alias("component")).select(
-        F.col("u").alias("id"), "component"
+        .filter(F.col("larger") & (F.col("n") > 1))
+        .isEmpty()
     )
-    labeled = verts.join(
-        pointed, verts["vid"] == pointed["id"], "left"
-    ).select(
-        F.col("vid").alias("id"),
-        F.coalesce("component", F.col("vid")).alias("component"),
+
+
+def _sym(df: DataFrame) -> DataFrame:
+    return _pairs(df, ("u", "v"), ("v", "u")).distinct()
+
+
+def _large_star(sym: DataFrame) -> DataFrame:
+    # per node u: m = min(N(u) ∪ {u}); emit (v, m) for v > u
+    mins = sym.groupBy("u").agg(
+        F.least(F.min("v"), F.first("u")).alias("m")
+    ).select(F.col("u").alias("mu"), "m")
+    return (
+        sym.filter(F.col("v") > F.col("u"))
+        .join(mins, F.col("u") == F.col("mu"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
     )
-    out = labeled.localCheckpoint()
-    edges.unpersist()
-    verts.unpersist()
-    return out
+
+
+def _small_star(sym: DataFrame) -> DataFrame:
+    # per node u over its ≤-neighborhood: m = min(N<(u) ∪ {u});
+    # emit (x, m) for x in N<(u) ∪ {u}, x != m
+    le = sym.filter(F.col("v") < F.col("u"))
+    mins = le.groupBy("u").agg(F.min("v").alias("m")).select(
+        F.col("u").alias("mu"), "m"
+    )
+    with_m = le.join(mins, F.col("u") == F.col("mu"))
+    out = _pairs(with_m, ("v", "m"), ("mu", "m"))
+    return out.filter(F.col("u") != F.col("v")).distinct()
 
 
 def dup_clusters(

@@ -380,12 +380,12 @@ FROM comp GROUP BY component
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTER resolution — the step pairwise dedup stops
     short of: verified MinHash-LSH pairs collapsed into connected
-    components (iterative min-label propagation, operators/graph.py),
-    one row per cluster with the canonical keep id. The DuckDB oracle
+    components (alternating star rounds, operators/graph.py), one row
+    per cluster with the canonical keep id. The DuckDB oracle
     computes the same components via a recursive-CTE transitive
     closure — feasible at oracle scale, quadratic-per-cluster at
-    production scale, which is exactly why the Spark side iterates
-    label propagation instead."""
+    production scale, which is exactly why the Spark side contracts
+    the edge set in O(log^2 n) star rounds instead."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sh = shingle_table(docs, "text", "doc_id", 3).persist()
     sigs = minhash_signatures(sh, NUM_HASHES)

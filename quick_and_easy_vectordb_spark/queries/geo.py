@@ -451,9 +451,9 @@ def geo_dbscan_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     is small; here both sides are the same scan so it shuffles on the
     cell key), one groupBy for neighbor counts, one id-keyed join to
     propagate core flags back through the pair list. Full DBSCAN
-    label propagation = iterate the connected-components
-    pointer-jumping of operators/graph.py over the core-core edges;
-    this query is the per-round classification kernel."""
+    clusters = the alternating-star connected components of
+    operators/graph.py over the core-core edges (geo_dbscan_clusters);
+    this query is the classification step before them."""
     cust = load_table(spark, sf_dir, "customer")
     p = cust.select(
         F.col("c_custkey").alias("id"),
@@ -1468,7 +1468,7 @@ def geo_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL DBSCAN cluster extraction — the step geo_dbscan_classify
     stops short of (it labels core/border/noise; this assigns CLUSTER
     IDS): core-core eps-edges collapse into connected components via
-    the pointer-jumping min-label operator (operators/graph.py — the
+    the alternating-star operator (operators/graph.py — the
     SAME operator that resolves dup-clusters, because grid-blocked
     DBSCAN IS candidate-pair dedup over coordinates), and each border
     point attaches to its minimum-labeled core neighbor (the
@@ -1477,10 +1477,10 @@ def geo_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster: core/border sizes and an id checksum. The oracle
     recomputes components with a recursive-CTE closure — fine at
     oracle scale, quadratic-per-cluster at production scale, which is
-    why the Spark side iterates pointer-jumping instead.
+    why the Spark side runs star rounds instead.
 
     Plan shape at 100 TB: the eps-pair join is the one cell-keyed
-    shuffle (3x3 block replication); CC runs O(log diameter) rounds
+    shuffle (3x3 block replication); CC runs O(log^2 n) star rounds
     on the core-edge table; border attachment is one more join on the
     pair list. Cluster count and per-cluster rollup are tiny."""
     from quick_and_easy_vectordb_spark.operators.graph import (

@@ -90,26 +90,35 @@ def test_cc_isolated_self_loop_vertex(spark):
     assert comp == {1: 1, 2: 1, 7: 7}
 
 
-def test_cc_conf_toggle_is_reentrant_and_restores(spark):
-    """Round-11 (ADVICE r10): the constraint-propagation toggle is
-    reference-counted — concurrent connected_components calls on the
-    same session must leave the conf exactly as it was, never
-    'restore' it to the disabled inner snapshot."""
+def test_cc_leaves_session_conf_alone(spark):
+    """The operator writes no session conf, also when it runs three
+    times at once and on checkpoint-derived input: a localCheckpointed
+    edge list, and a CC output fed back into CC (the incremental-merge
+    shape of dedup_cc_incremental), with constraint propagation left
+    as the session has it."""
     import threading
 
-    from quick_and_easy_vectordb_spark.operators import graph as graph_mod
-
     _CP = "spark.sql.constraintPropagation.enabled"
-    spark.conf.set(_CP, "true")
-    errs = []
+    before = spark.conf.get(_CP, None)
+    got, errs = {}, []
 
     def run(lo):
         try:
             edges = spark.createDataFrame(
-                [(lo + i, lo + i + 1) for i in range(5)],
+                [(lo + i, lo + i + 1) for i in range(5)] + [(lo + 20, lo + 21)],
                 "id_a long, id_b long",
+            ).localCheckpoint()
+            first = connected_components(edges)
+            again = connected_components(
+                first.unionByName(
+                    spark.createDataFrame(
+                        [(lo + 5, lo + 20)], "id long, component long"
+                    )
+                ),
+                "id",
+                "component",
             )
-            connected_components(edges).collect()
+            got[lo] = {r.id: r.component for r in again.collect()}
         except Exception as e:  # pragma: no cover — surfaced below
             errs.append(e)
 
@@ -117,7 +126,47 @@ def test_cc_conf_toggle_is_reentrant_and_restores(spark):
     for t in ts:
         t.start()
     for t in ts:
-        t.join()
-    assert not errs
-    assert spark.conf.get(_CP) == "true"
-    assert graph_mod._CP_DEPTH == 0
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in ts)
+    assert not errs, errs
+    for lo in (0, 100, 200):
+        assert got[lo] == {lo + i: lo for i in [*range(6), 20, 21]}
+    assert spark.conf.get(_CP, None) == before
+
+
+def test_cc_mixed_nullability_endpoints(spark):
+    """A non-nullable and a nullable endpoint column (as when a
+    spark.range id meets a nullable ``id % k``): a self-union of such
+    edges fails Spark 4 analysis with "key not found: <attr>" while
+    constraint propagation is on, so the operator builds its
+    symmetric edges without one."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    schema = StructType([
+        StructField("id_a", LongType(), False),
+        StructField("id_b", LongType(), True),
+    ])
+    edges = spark.createDataFrame([(i % 3, i + 10) for i in range(9)], schema)
+    comp = {r.id: r.component for r in connected_components(edges).collect()}
+    assert comp == {0: 0, 1: 1, 2: 2, **{i + 10: i % 3 for i in range(9)}}
+
+
+def test_cc_job_budget(spark):
+    """Jobs started by one call on the chain-plus-pair graph of
+    test_cc_chain_and_separate_cluster: at most 30, the count since
+    one star-forest test decides convergence (56 before, with a
+    fingerprint job per round and a no-op confirmation round). An extra
+    confirmation round or a second convergence check per round shows
+    up here as a higher count."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
+    )
+    sc = spark.sparkContext
+    group = "test_cc_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 30, len(jobs)

@@ -16,6 +16,7 @@ from quick_and_easy_vectordb_spark.functions.vector import (
     vector_literal,
 )
 from quick_and_easy_vectordb_spark.operators.dedup import exact_dedup
+from quick_and_easy_vectordb_spark.operators.graph import connected_components
 from quick_and_easy_vectordb_spark.operators.search import top_k_by_dot
 
 SETTINGS = settings(
@@ -97,3 +98,43 @@ def test_union_count_additivity(spark, n, m):
     a = spark.range(n).select(F.col("id").alias("doc_id"))
     b = spark.range(m).select(F.col("id").alias("doc_id"))
     assert a.unionByName(b).count() == n + m
+
+
+vertex = st.integers(min_value=0, max_value=24)
+
+
+@st.composite
+def edge_lists(draw):
+    """Random edges over 25 ids (several components), plus self-loops
+    and duplicate or reversed copies of drawn edges."""
+    base = draw(st.lists(st.tuples(vertex, vertex), min_size=1, max_size=20))
+    loops = [(x, x) for x in draw(st.lists(vertex, max_size=3))]
+    again = draw(
+        st.lists(st.tuples(st.sampled_from(base), st.booleans()), max_size=8)
+    )
+    return base + loops + [(b, a) if flip else (a, b) for (a, b), flip in again]
+
+
+def _min_id_union_find(edges):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@given(edge_lists())
+@SETTINGS
+def test_connected_components_is_min_id_union_find(spark, edges):
+    """Every vertex maps to the least id of its component. A stopping
+    rule that ends the star rounds early splits a component."""
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {r.id: r.component for r in connected_components(df).collect()}
+    assert got == _min_id_union_find(edges)
