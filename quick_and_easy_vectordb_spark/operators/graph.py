@@ -23,6 +23,7 @@ exhausted round cap raises rather than return split components.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,7 +53,11 @@ def connected_components(
     Vertices only in ``edges`` appear; isolated vertices (self-loop
     only) map to themselves.
     """
-    edges = edges.persist()  # scanned twice: edge checkpoint, vertex list
+    # scanned twice: edge checkpoint, vertex list. A cache the caller
+    # made is used as it is and left in place.
+    owned = edges.storageLevel == StorageLevel.NONE
+    if owned:
+        edges = edges.persist()
     try:
         sym0 = _pairs(edges, (src, dst), (dst, src))
         verts = sym0.select(F.col("u").alias("vid")).distinct()
@@ -84,7 +89,8 @@ def connected_components(
             F.coalesce("component", F.col("vid")).alias("component"),
         ).localCheckpoint()
     finally:
-        edges.unpersist()
+        if owned:
+            edges.unpersist()
 
 
 def _pairs(df: DataFrame, *cols: tuple[str, str]) -> DataFrame:

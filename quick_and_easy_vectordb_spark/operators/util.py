@@ -9,23 +9,23 @@ from pyspark.sql import DataFrame, SparkSession
 # Treat absurd plan-stat estimates (missing stats degrade to multi-PB
 # placeholders) as unknown rather than requesting millions of partitions.
 _STATS_UNKNOWN_BYTES = 1 << 50
+_MAX_SCALED_PARTITIONS = 4096
 
 
 def scaled_shuffle_partitions(
-    df: DataFrame,
-    target_bytes: int = 16 << 20,
-    max_partitions: int = 4096,
+    df: DataFrame, target_bytes: int = 16 << 20
 ) -> int | None:
     """Partition count proportional to ``df``'s optimizer-estimated
     size: ceil(sizeInBytes / target_bytes), floored at the session's
-    ``spark.sql.shuffle.partitions`` and capped at ``max_partitions``.
+    ``spark.sql.shuffle.partitions`` (the cluster's cores, see
+    session.py) and capped at 4096.
 
     Why: a fixed shuffle-partition count is a spill cliff. A window or
     aggregation over N rows sorts N/partitions rows per task; once that
     outgrows per-task execution memory, wall-clock jumps ~3x from sort
-    spill (measured warm on the as-of shape at 75M union rows: 12.7s at
-    32 partitions vs 10.5s at 64+, flat through 256 — part of the
-    round-4 SCALING.md 30x cliff; the rest was first-big-run JVM
+    spill (measured warm on the as-of shape at 75M union rows: 12.7s
+    with too few partitions vs 10.5s at 64+, flat through 256 — part of
+    the round-4 SCALING.md 30x cliff; the rest was first-big-run JVM
     warmup, see tools/scale_probe.py). AQE only ever COALESCES below
     the static setting, so the static number is a hard cap; this
     derives a data-proportional count from plan statistics instead
@@ -42,7 +42,7 @@ def scaled_shuffle_partitions(
     if size <= 0 or size >= _STATS_UNKNOWN_BYTES:
         return None
     default = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    n = min(max_partitions, math.ceil(size / target_bytes))
+    n = min(_MAX_SCALED_PARTITIONS, math.ceil(size / target_bytes))
     return n if n > default else None
 
 

@@ -275,10 +275,8 @@ def src_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     listing, and snapshot selection costs zero data I/O. File-level
     min/max pruning would hang off the same manifest.
 
-    Round-9: routed through the pluggable TableFormat interface
-    (sources/table_format.py) — ManifestParquetFormat here; the
-    delta-spark adapter drops in behind the same three calls on a
-    cluster that has it."""
+    Round-9: routed through sources/table_format.py's
+    ManifestParquetFormat (commit, read, versions)."""
     from quick_and_easy_vectordb_spark.sources.table_format import (
         ManifestParquetFormat,
     )
@@ -2415,7 +2413,7 @@ def src_avro_binary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     framing is exercised under the driver gate, while wire_bytes pins
     the per-record encoding in closed form). Spark's own Avro reader
     lives in the external spark-avro jar, absent offline — gated like
-    torch/delta; this keeps the format surface real and tested.
+    torch; this keeps the format surface real and tested.
 
     Plan shape at 100 TB: one Arrow mapInPandas pass, zero shuffles
     before the tiny per-type aggregate — the codec-family cost model

@@ -7,11 +7,21 @@ The defaults below are chosen for the 100 TB design point and merely
   and dynamic join-strategy demotion are all load-bearing at cluster
   scale and harmless locally.
 - Arrow on: every pandas UDF / mapInPandas boundary is Arrow-batched.
-- shuffle.partitions is a *default parallelism hint*; AQE coalesces it
-  down for small inputs, so one setting serves sf0.001 smoke tests and
-  a 1000-executor cluster (where the operator code never hard-codes
-  partition counts — it relies on AQE + explicit repartition-by-key
-  only where co-location is semantically required).
+- shuffle.partitions is the cluster's ``defaultParallelism`` (its
+  total cores), read once the context is up. Batch shuffles start there
+  and AQE coalesces them down for small inputs;
+  operators/util.scaled_shuffle_partitions raises the count for a
+  shuffle too big for it. Streams get no AQE: a stateful stream takes
+  this count as its state-store partition count, and its checkpoint
+  freezes it, so a fixed count far above the cores costs every state
+  partition's load and commit in every batch (about 3.5x the time at
+  32 on 4 cores, for the same rows). Deriving the count needs no conf
+  change around a stream start and no knob.
+
+  Under dynamic allocation, executors may not have registered when
+  ``get_spark`` starts the context, and ``defaultParallelism`` then
+  reads low. There, pass the count in ``extra_conf``, or start the
+  session first: ``get_spark`` reuses an active session as it is.
 """
 
 from __future__ import annotations
@@ -23,8 +33,6 @@ from pyspark.sql import SparkSession
 
 from quick_and_easy_vectordb_spark.functions import kernels
 from quick_and_easy_vectordb_spark.sources import scratch
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
 
 def _default_driver_memory() -> str:
@@ -98,7 +106,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -142,5 +149,9 @@ def get_spark(
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in extra_conf:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
     kernels.install(spark)
     return spark

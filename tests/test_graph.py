@@ -170,3 +170,21 @@ def test_cc_job_budget(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= 30, len(jobs)
+
+
+def test_cc_keeps_the_callers_cache(spark):
+    """An edge list the caller persisted is still persisted, at the same
+    level, after a call: the operator caches (and uncaches) only an input
+    that was not cached."""
+    from pyspark import StorageLevel
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        level = edges.storageLevel
+        comp = {r.id: r.component for r in connected_components(edges).collect()}
+        assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+        assert edges.storageLevel == level != StorageLevel.NONE
+    finally:
+        edges.unpersist()

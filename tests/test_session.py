@@ -1,7 +1,8 @@
 """Session start: the engine jar's build and cache, the java.nio
 ``file://`` FileSystem it binds, the readying of a session built
-elsewhere, and confs that are set once at session start rather than
-while a plan is built."""
+elsewhere, the shuffle partition count taken from the cluster, and
+confs that are set once at session start rather than while a plan is
+built."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import os
 import shutil
 import subprocess
 import sys
+import threading
 
 from quick_and_easy_vectordb_spark.functions import kernels
 from quick_and_easy_vectordb_spark.queries import QUERIES
@@ -16,7 +18,11 @@ from quick_and_easy_vectordb_spark.sources.catalog import load_table
 from quick_and_easy_vectordb_spark.streaming.index_maintenance import (
     stream_lsh_index_maintenance,
 )
-from quick_and_easy_vectordb_spark.streaming.windows import read_events_stream
+from quick_and_easy_vectordb_spark.streaming.windows import (
+    drain,
+    read_events_stream,
+    stream_tumbling_counts,
+)
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "quick_and_easy_vectordb_spark"
@@ -72,6 +78,65 @@ def test_plan_build_leaves_session_conf_unchanged(spark, sf_dir, tmp_path):
     os.symlink(sf_dir, own_sf)
     QUERIES["src_copy_on_write_update"].fn(spark, str(own_sf)).collect()
     assert dict(spark.conf.getAll) == before
+
+
+def test_shuffle_partitions_are_the_cluster_cores(spark):
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == (
+        spark.sparkContext.defaultParallelism
+    )
+
+
+def test_extra_conf_shuffle_partitions_win():
+    """A count given in ``extra_conf`` is kept (a fresh JVM, so the
+    session is built here, not reused)."""
+    code = (
+        f"from {PACKAGE}.session import get_spark\n"
+        "s = get_spark(master='local[2]',"
+        " extra_conf={'spark.sql.shuffle.partitions': '3'})\n"
+        "print(s.conf.get('spark.sql.shuffle.partitions'),"
+        " s.sparkContext.defaultParallelism)\n"
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT,
+        env=dict(os.environ, PYTHONPATH=ROOT, SPARK_GRAFT_DRIVER_MEM="512m"),
+        capture_output=True, text=True,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    assert done.stdout.split()[-2:] == ["3", "2"]
+
+
+def test_stream_state_partitions_are_the_cluster_cores(spark, sf_dir, tmp_path):
+    """Streams get no AQE: a stateful stream's state store takes the
+    session's shuffle partition count, which is the cluster's cores."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Listener(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.parts: list[int] = []
+            self.ended = threading.Event()
+
+        def onQueryStarted(self, event) -> None:
+            pass
+
+        def onQueryProgress(self, event) -> None:
+            self.parts += [so.numShufflePartitions for so in event.progress.stateOperators]
+
+        def onQueryTerminated(self, event) -> None:
+            self.ended.set()
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    os.symlink(os.path.join(sf_dir, "events.parquet"), feed / "events.parquet")
+    listener = Listener()
+    spark.streams.addListener(listener)
+    try:
+        counts = stream_tumbling_counts(read_events_stream(spark, str(feed)))
+        assert drain(counts, "state_partitions_probe", "update").count() > 0
+        assert listener.ended.wait(60)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.parts
+    assert set(listener.parts) == {spark.sparkContext.defaultParallelism}
 
 
 def test_file_scheme_is_the_engine_file_system(spark):

@@ -1,6 +1,5 @@
-"""Pluggable table-format interface (sources/table_format.py):
-snapshot isolation, atomic publish, restatement, and the env-gated
-Delta adapter."""
+"""Manifest table format (sources/table_format.py): snapshot
+isolation, atomic publish, restatement, branches and expiry."""
 
 from __future__ import annotations
 
@@ -8,11 +7,7 @@ import os
 
 import pytest
 
-from quick_and_easy_vectordb_spark.sources.table_format import (
-    DeltaTableFormat,
-    ManifestParquetFormat,
-    default_format,
-)
+from quick_and_easy_vectordb_spark.sources.table_format import ManifestParquetFormat
 
 
 @pytest.fixture()
@@ -233,79 +228,6 @@ def test_diff_paths_counts_restatement_as_added(spark, table):
     assert sorted(r.id for r in added.collect()) == [10, 11, 12]
     # v1→v2: plain addition still reported
     assert len(fmt.diff_paths(table, 1, 2)) == 1
-
-
-def test_delta_adapter_snapshot_isolation():
-    """Functional twin of the manifest snapshot-isolation test, runs
-    wherever delta-spark is installed (VERDICT r09 item 5); elsewhere
-    it SKIPS naming the missing package. Uses a dedicated Spark
-    session because Delta needs its catalyst extensions registered at
-    session build time."""
-    pytest.importorskip("delta", reason="delta-spark not installed")
-    import tempfile
-
-    from delta import configure_spark_with_delta_pip
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    if active is not None and "io.delta.sql.DeltaSparkSessionExtension" not in (
-        active.conf.get("spark.sql.extensions", "") or ""
-    ):
-        pytest.skip(
-            "an active SparkSession without Delta extensions exists; "
-            "getOrCreate() would reuse it — run this test in its own "
-            "process (pytest tests/test_table_format.py -k delta)"
-        )
-    builder = (
-        SparkSession.builder.master("local[4]")
-        .appName("delta-adapter-test")
-        .config(
-            "spark.sql.extensions",
-            "io.delta.sql.DeltaSparkSessionExtension",
-        )
-        .config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-    )
-    spark = configure_spark_with_delta_pip(builder).getOrCreate()
-    try:
-        fmt = DeltaTableFormat()
-        with tempfile.TemporaryDirectory() as td:
-            table = os.path.join(td, "t")
-            v1 = fmt.commit(spark.range(10), table, name="orig")
-            before = sorted(
-                r.id for r in fmt.read(spark, table, v1).collect()
-            )
-            assert before == list(range(10))
-            v2 = fmt.commit(
-                spark.range(100, 105), table, replace="id >= 0", name="re"
-            )
-            assert v2 > v1
-            assert fmt.versions(table) == [v1, v2]
-            # pinned snapshot unchanged by the restatement
-            assert sorted(
-                r.id for r in fmt.read(spark, table, v1).collect()
-            ) == before
-            assert sorted(
-                r.id for r in fmt.read(spark, table).collect()
-            ) == [100, 101, 102, 103, 104]
-    finally:
-        spark.stop()
-
-
-def test_delta_adapter_is_import_gated():
-    """No delta-spark in this container: constructing the adapter must
-    raise ImportError (the torch-embedding env-gate discipline), and
-    default_format() must fall back to the manifest implementation."""
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError):
-            DeltaTableFormat()
-        assert isinstance(default_format(), ManifestParquetFormat)
-    else:  # pragma: no cover — containers with delta installed
-        assert isinstance(default_format(), DeltaTableFormat)
 
 
 def test_concurrent_publish_conflict_and_rebase(spark, table):

@@ -1,8 +1,8 @@
-"""Dump the physical plans of the bench headline queries to PLANS.md.
+"""Dump the physical plan of every registered query to PLANS.md.
 
-Run:  python tools/explain.py [--sf DIR]
+Run:  python tools/explain.py [--sf DIR] [query ...]
 
-For each bench query: the formatted physical plan plus a one-line
+For each query: the formatted physical plan plus a one-line
 summary of the scale-relevant properties (shuffle count, broadcast
 joins, pushed filters, top-k planning). This is the reviewable
 artifact behind the plan claims in operator docstrings — regenerate
@@ -36,151 +36,10 @@ def main() -> None:
     spark = get_spark("qev-explain")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Non-bench operators whose plan shape is part of the scale
-    # contract — audited alongside the headline suite.
-    EXTRA = (
-        "text_span_dedup",
-        "text_containment_decontaminate",
-        "udf_count_min_topk",
-        "ev_value_histogram",
-        "ann_pq_adc_search",
-        "rel_ivm_delta_agg",
-        "rel_scd2_intervals",
-        "rel_dq_audit",
-        "vdb_maxsim_late_interaction",
-        "dedup_pagerank",
-        "ev_asof_join_forward",
-        "ev_ewma_hourly",
-        "ev_cumulative_unique_users",
-        "text_bigram_lift",
-        "rel_unpivot_segment_year",
-        # round-6 continuation operator audit set
-        "ev_bitmap_daily_actives",
-        "ev_rolling_wau_bitmap",
-        "ev_max_concurrent_sessions",
-        "ev_cusum_changepoint",
-        "ev_kmv_set_ops",
-        "ev_stratified_sample_alloc",
-        "mm_phash_hamming_pairs",
-        "ann_int4_search",
-        "vdb_reciprocal_knn_pairs",
-        "dedup_soft_weight",
-        "text_zipf_fit",
-        "dedup_band_tuning",
-        "ann_hnsw_substrate",
-        "text_ngram_novelty",
-        "ev_burst_detection",
-        "ev_gapfill_interpolate",
-        "vdb_postfilter_search",
-        "rel_null_safe_join",
-        "udf_cogroup_apply",
-        "ev_funnel_time_to_convert",
-        "vdb_norm_pruned_search",
-        "ev_multi_distinct_profile",
-        # final round-6 additions
-        "text_length_percentiles",
-        "udf_pandas_window_agg",
-        "vdb_random_projection_search",
-        "text_source_divergence_tv",
-        "ev_holt_linear_forecast",
-        # round-7 operator audit set
-        "ev_ks_two_sample",
-        "ev_welch_ab_test",
-        "ev_chisq_type_weekday",
-        "ev_lag_feature_matrix",
-        "vdb_shard_topk_merge",
-        "vdb_retrieval_metrics",
-        "vdb_hybrid_score_blend",
-        "rel_gdpr_cascade_erasure",
-        "rel_ntile_deciles",
-        "udf_sql_scalar_function",
-        "ev_variant_shred",
-        "text_positional_phrase_search",
-        "text_stopword_profile",
-        "dedup_label_propagation",
-        "mm_image_tiles",
-        "mm_color_hist_neardup",
-        # round-7 continuation audit set
-        "rel_zorder_clustering",
-        "src_json_corrupt_records",
-        "rel_column_profile",
-        "geo_grid_knn_join",
-        "geo_tile_pyramid",
-        "geo_point_in_polygon",
-        "rel_data_expectations",
-        "rel_k_anonymity",
-        "rel_join_strategy_equivalence",
-        "dedup_graph_khop_reach",
-        "ev_jackknife_variance",
-        "ev_ols_closed_form",
-        # round-7 continuation 3 audit set
-        "geo_dbscan_classify",
-        "geo_bbox_range_join",
-        "geo_trajectory_stats",
-        "rel_dp_histogram",
-        "rel_fk_discovery",
-        "rel_fd_check",
-        "rel_benford_check",
-        "ev_hll_daily_union",
-        "ev_survival_life_table",
-        "ann_ivf_filtered_search",
-        "ann_ivf_balance_stats",
-        "ann_nprobe_recall_curve",
-        "text_winnowing_overlap",
-        "text_gini_concentration",
-        "src_cdc_log_compaction",
-        "ev_watermark_lag_audit",
-        "rel_join_cardinality_estimate",
-        "src_merge_on_read_deletes",
-        # round-7 continuation 4 audit set
-        "ev_pr_auc_exact",
-        "ev_brier_decomposition",
-        "dedup_graph_source_modularity",
-        "dedup_graph_link_prediction",
-        "ann_vamana_occlusion_prune",
-        "ann_graph_beam_search",
-        "text_bpe_encode_apply",
-        "dedup_edit_distance_blocked",
-        "ev_mann_kendall_trend",
-        "ev_theil_sen_slope",
-        "src_copy_on_write_update",
-        "ev_hampel_filter",
-        "rel_temporal_integrity_audit",
-        "mm_integral_image_rect",
-        "dedup_cross_source_matrix",
-        "src_zone_map_skipping",
-        "text_kneser_ney_bigrams",
-        "ann_residual_pq_search",
-        "ev_cuped_adjustment",
-        "rel_wilson_ci_by_segment",
-        "vdb_batch_knn_ivf",
-        "dedup_minhash_1bit",
-        "ev_diff_in_diff",
-        "geo_douglas_peucker",
-        "vdb_knn_classifier_eval",
-        "src_parquet_footer_stats",
-        "ev_asof_join_tolerance",
-        "text_tfidf_weighted_doc_embedding",
-        "ev_cep_strict_sequence",
-        "ev_shapley_attribution",
-        "ev_snaive_backtest_mase",
-        "text_rake_keyphrases",
-        "ev_ltv_triangle",
-        "rel_join_skew_report",
-        "text_watermark_greenlist_detect",
-        "mm_median_cut_palette",
-        "ev_pinball_loss_eval",
-        "dedup_minhash_prf_eval",
-        "rel_mv_rollup_rewrite",
-        "ev_stream_join_then_agg",
-    )
-
-    # Round 8: PLANS.md covers the ENTIRE registry, not just
-    # bench+EXTRA — every registered query's physical plan is a
-    # reviewable artifact. `--audit-only` restores the old subset;
-    # positional names restrict to those queries (printed, not
-    # written, to avoid a partial PLANS.md).
-    audit_only = "--audit-only" in sys.argv
+    # PLANS.md covers the entire registry: every registered query's
+    # physical plan is a reviewable artifact. Positional names restrict
+    # to those queries (printed, not written, to avoid a partial
+    # PLANS.md).
     only = [a for a in sys.argv[1:]
             if not a.startswith("-") and a != sf_dir]
 
@@ -197,8 +56,6 @@ def main() -> None:
     failed: list[str] = []
     for name, qd in QUERIES.items():
         if only and name not in only:
-            continue
-        if audit_only and not (qd.bench or name in EXTRA):
             continue
         try:
             df = qd.fn(spark, sf_dir)

@@ -13,7 +13,8 @@ wall into:
     addBatch)
   - addBatch: the executed-plan part of that (actual batch compute)
   - batches: micro-batch count
-  - state: max stateOperators numRowsTotal / memory across batches
+  - state: max stateOperators numRowsTotal / memory across batches,
+    and each stateful operator's numShufflePartitions
 
 Progress comes from every stream the run starts.
 
@@ -98,22 +99,20 @@ def profile(spark, name: str, runs: int) -> None:
     trig = sum(p["durationMs"].get("triggerExecution", 0) for p in prog)
     addb = sum(p["durationMs"].get("addBatch", 0) for p in prog)
     rows = sum(p.get("numInputRows", 0) for p in prog)
-    state_rows = max(
-        (so.get("numRowsTotal", 0) for p in prog
-         for so in p.get("stateOperators", [])),
-        default=0,
-    )
-    state_mem = max(
-        (so.get("memoryUsedBytes", 0) for p in prog
-         for so in p.get("stateOperators", [])),
-        default=0,
-    )
+    ops = [so for p in prog for so in p.get("stateOperators", [])]
+    state_rows = max((so.get("numRowsTotal", 0) for so in ops), default=0)
+    state_mem = max((so.get("memoryUsedBytes", 0) for so in ops), default=0)
+    # each stateful operator's state-store partition count: the session's
+    # shuffle partitions when its checkpoint was made
+    parts = sorted({f"{so.get('operatorName')}={so.get('numShufflePartitions')}"
+                    for so in ops})
     print(
         f"=== {name}: walls {[round(w, 2) for w in walls]} s | last run "
         f"{wall:.2f} s = trigger {trig/1000:.2f} s (addBatch "
         f"{addb/1000:.2f} s) + harness {wall - trig/1000:.2f} s | "
         f"{len(prog)} batches, {rows} rows, state_rows={state_rows}, "
-        f"state_mem={state_mem/1048576:.1f} MiB"
+        f"state_mem={state_mem/1048576:.1f} MiB, "
+        f"state_partitions=[{', '.join(parts)}]"
     )
 
 
