@@ -1,6 +1,8 @@
 """Benchmark harness: runs the headline queries (registry entries
 marked bench=True) at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+on local[$SPARK_GRAFT_CPUS], then the scale tier (TIER_QUERIES on
+$SPARK_GRAFT_BENCH_TIER_SCALE key-shifted copies of the same tables,
+default 10), and prints ONE JSON line:
 
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {"<name>": sec, ...}, "sf": <float>}
@@ -68,6 +70,16 @@ TIER_QUERIES = (
 )
 
 _SHIFT = 10_000_000_000  # key shift per copy — far above any base key
+
+# Timing protocol (each constant's reason is at its use in main()).
+REPEATS = 3  # best-of-N per headline query
+LOAD_WAIT_S = 90.0  # longest quiet-host wait before the timed loop
+LOAD_MAX = 3.0  # 1-min loadavg below which the host counts as quiet
+LOAD_BUDGET_S = 300.0  # all quiet-host waits of one run together
+REPEAT_WAIT_S = 20.0  # longest quiet-host wait before one repeat
+ISO_CUT_S = 2.0  # in-suite minimum that earns an isolated re-run
+ISO_INCLUDE = frozenset({"ann_lsh_probe", "ev_tumbling_hour", "vdb_topk_dot"})
+TIER_BUDGET_PER_COPY_S = 42.0  # scale-tier wall budget per staged copy
 
 
 def stage_tier_dir(spark, sf_dir: str, k: int) -> str:
@@ -206,7 +218,6 @@ def main() -> None:
     # The minimum over repeats is the steady-state number — the
     # quantity that actually extrapolates to a long-running cluster,
     # where codegen classes are compiled once and reused for hours.
-    repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
     # Queries whose plans span many fresh codegen classes show the
     # JIT-storm bimodality hardest (r5 dedup_minhash_lsh runs were
     # [2.59, 5.80, 2.43]; r6 local q21 runs still descending at run 3:
@@ -220,12 +231,10 @@ def main() -> None:
     # during a co-tenant load spike and read 1.23x slower on untouched
     # plans — uniform drift across byte-identical plans is the
     # documented signature of host contention on this VM, and the guest
-    # 1-min loadavg visibly carries it. Two defenses: (a) optionally
-    # spin (bounded) until the 1-min load drops below a threshold
+    # 1-min loadavg visibly carries it. Two defenses: (a) spin
+    # (bounded) until the 1-min load drops below LOAD_MAX
     # before the timed loop starts, and (b) record the loadavg at every
     # query's start so the emitted JSON carries its own noise evidence.
-    load_wait_s = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT", "90"))
-    load_thresh = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_MAX", "3.0"))
     # Round-12 (VERDICT r11 item 2): the suite-start gate alone is not
     # enough — r11's run started at load 3.4 and ENDED at 9.0, so a
     # single wait up front guards only the first queries. The gate now
@@ -233,13 +242,12 @@ def main() -> None:
     # budget for the whole suite (bounded: a permanently-loaded host
     # must still produce a JSON line, it just carries the load
     # evidence). Per-query waits are recorded in DETAIL.
-    budget = {"left": float(os.environ.get(
-        "SPARK_GRAFT_BENCH_LOAD_BUDGET", "300"))}
+    budget = {"left": LOAD_BUDGET_S}
 
     def wait_quiet(max_this_wait: float) -> float:
         w = 0.0
         while (
-            os.getloadavg()[0] >= load_thresh
+            os.getloadavg()[0] >= LOAD_MAX
             and w < max_this_wait
             and budget["left"] > 0
         ):
@@ -249,17 +257,17 @@ def main() -> None:
         return w
 
     load_start = round(os.getloadavg()[0], 2)
-    waited = wait_quiet(load_wait_s)
+    waited = wait_quiet(LOAD_WAIT_S)
     load_at_timing = round(os.getloadavg()[0], 2)
 
-    def time_query(qd, n_runs: int, per_run_wait: float, data_dir=None):
+    def time_query(qd, n_runs: int, data_dir=None):
         """n_runs noop-sink executions; returns (runs, run_loads,
         wait_s) or raises the query's error."""
         runs: list[float] = []
         run_loads: list[float] = []
         wait_total = 0.0
         for _ in range(n_runs):
-            wait_total += wait_quiet(per_run_wait)
+            wait_total += wait_quiet(REPEAT_WAIT_S)
             run_loads.append(round(os.getloadavg()[0], 2))
             spark.catalog.clearCache()  # no cross-repeat cache reuse
             t0 = time.perf_counter()
@@ -268,9 +276,6 @@ def main() -> None:
             runs.append(time.perf_counter() - t0)
         return runs, run_loads, wait_total
 
-    per_repeat_wait = float(
-        os.environ.get("SPARK_GRAFT_BENCH_REPEAT_WAIT", "20")
-    )
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
@@ -281,8 +286,7 @@ def main() -> None:
             continue
         try:
             runs, run_loads, w = time_query(
-                qd, repeats + 2 if name in noisy else repeats,
-                per_repeat_wait,
+                qd, REPEATS + 2 if name in noisy else REPEATS
             )
         except Exception as e:  # noqa: BLE001
             errors[name] = f"{type(e).__name__}: {e}"[:500]
@@ -303,30 +307,19 @@ def main() -> None:
     # the in-suite minima within noise; when they don't, the per-run
     # load lists say why. The isolated minimum is the steady-state
     # number for cross-round comparison of heavy movers.
-    iso_cut = float(os.environ.get("SPARK_GRAFT_BENCH_ISO_CUT", "2.0"))
     # Round-14 (VERDICT r13 item 2): the three sub-second queries that
     # drifted in-suite across rounds 12-13 get isolated minima too, so
     # the calibration can arbitrate them (in-suite sub-second numbers
     # are dominated by scheduler jitter on this VM).
-    iso_include = {
-        s
-        for s in os.environ.get(
-            "SPARK_GRAFT_BENCH_ISO_INCLUDE",
-            "ann_lsh_probe,ev_tumbling_hour,vdb_topk_dot",
-        ).split(",")
-        if s
-    }
     isolated: dict[str, float] = {}
     isolated_runs: dict[str, list[float]] = {}
     isolated_loads: dict[str, list[float]] = {}
     isolated_errors: dict[str, str] = {}
     for name in [
-        n for n, t in timings.items() if t >= iso_cut or n in iso_include
+        n for n, t in timings.items() if t >= ISO_CUT_S or n in ISO_INCLUDE
     ]:
         try:
-            runs, run_loads, _ = time_query(
-                bench_queries[name], 4, per_repeat_wait
-            )
+            runs, run_loads, _ = time_query(bench_queries[name], 4)
         except Exception as e:  # noqa: BLE001
             # Already timed in-suite; isolation is best-effort — but a
             # query that crashes only in isolation must leave evidence.
@@ -338,9 +331,7 @@ def main() -> None:
 
     # ---- scale tier (round-15; see header comment) ------------------
     tier_scale = int(os.environ.get("SPARK_GRAFT_BENCH_TIER_SCALE", "10"))
-    tier_budget = float(
-        os.environ.get("SPARK_GRAFT_BENCH_TIER_BUDGET", "420")
-    )
+    tier_budget = TIER_BUDGET_PER_COPY_S * tier_scale
     tier: dict[str, float] = {}
     tier_runs: dict[str, list[float]] = {}
     tier_errors: dict[str, str] = {}
@@ -364,8 +355,7 @@ def main() -> None:
                         continue
                     try:
                         runs, _, _ = time_query(
-                            bench_queries[name], 2, per_repeat_wait,
-                            data_dir=tier_dir,
+                            bench_queries[name], 2, data_dir=tier_dir,
                         )
                     except Exception as e:  # noqa: BLE001
                         tier_errors[name] = f"{type(e).__name__}: {e}"[:500]
@@ -422,13 +412,13 @@ def main() -> None:
         json.dumps(
             {
                 "metric": f"headline-suite wall seconds "
-                f"({len(timings)} queries, best-of-{repeats})",
+                f"({len(timings)} queries, best-of-{REPEATS})",
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
                 "value_median": total_median,
                 "sf": sf,
-                "repeats": repeats,
+                "repeats": REPEATS,
                 "n_errors": len(errors),
                 "isolated": isolated,
                 # round-15 scale tier: same queries on a tier_scale-x
@@ -450,9 +440,7 @@ def main() -> None:
                 "load_1m_end": round(os.getloadavg()[0], 2),
                 "load_wait_s": round(waited, 1),
                 "load_wait_total_s": round(
-                    float(os.environ.get(
-                        "SPARK_GRAFT_BENCH_LOAD_BUDGET", "300"))
-                    - budget["left"], 1),
+                    LOAD_BUDGET_S - budget["left"], 1),
             }
         )
     )

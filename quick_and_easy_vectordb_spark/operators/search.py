@@ -213,11 +213,10 @@ def lsh_batch_knn(
     )
     # Materialize the query signature as a COLUMN before deriving the
     # Hamming flips: each flip takes substrings of it, and building
-    # flips from the raw signature expression embeds ~3 copies of the
-    # whole P·dim-term arithmetic per probe — a plan-size and
-    # eval-cost blowup measured at 15 s of pure overhead at sf0.1.
-    # (CollapseProject keeps multi-referenced non-cheap aliases
-    # materialized, so the signature is computed once per query row.)
+    # flips from the raw signature expression would run the
+    # qev_lsh_bits kernel three times per flip instead of once per
+    # query row. (CollapseProject keeps multi-referenced non-cheap
+    # aliases materialized, so the column is computed once.)
     q2 = queries.withColumn("__qsig", lsh_signature(query_vec, num_planes, dim))
     qsig = F.col("__qsig")
     probes = [qsig]
@@ -250,8 +249,8 @@ def lsh_batch_knn(
         score_expr = scorer(corpus_vec, query_vec)
     # Project to (query_id, corpus_id, score) BEFORE the dedup shuffle:
     # candidate rows otherwise carry both embedding arrays through the
-    # exchange, a ~10× width penalty measured as a spill storm at 30×
-    # in tools/scale_probe.py. Payload columns for the k winners are a
+    # exchange, a ~10× width penalty measured as a spill storm on a
+    # 30× synthetic corpus. Payload columns for the k winners are a
     # cheap re-join for the caller (Q·k rows).
     joined = qp.join(c, "__bucket")
     out_cols = [query_id, corpus_id]

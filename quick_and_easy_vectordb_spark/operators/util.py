@@ -26,10 +26,9 @@ def scaled_shuffle_partitions(
     spill (measured warm on the as-of shape at 75M union rows: 12.7s
     with too few partitions vs 10.5s at 64+, flat through 256 — part of
     the round-4 SCALING.md 30x cliff; the rest was first-big-run JVM
-    warmup, see tools/scale_probe.py). AQE only ever COALESCES below
-    the static setting, so the static number is a hard cap; this
-    derives a data-proportional count from plan statistics instead
-    (free at plan time — no job). ``target_bytes`` is deliberately
+    warmup). AQE only ever COALESCES below the static setting, so the
+    static number is a hard cap; this derives a data-proportional count
+    from plan statistics instead (free at plan time — no job). ``target_bytes`` is deliberately
     small relative to task memory because optimizer row-width estimates
     undercount the in-memory sort footprint ~2-4x. Returns ``None``
     when the estimate is unavailable or degenerate, or when the default
@@ -59,29 +58,42 @@ def _size_conf(v: str) -> int:
     return int(v)
 
 
-def _scan_splits(spark: SparkSession, size: int) -> int:
-    """Scan partition count of a file source of ``size`` bytes — Spark's
-    own split formula (FilePartition.maxSplitBytes), evaluated in pure
-    Python against the session's current conf. Non-decreasing in
-    ``size``."""
+def _scan_splits(spark: SparkSession, lengths: list[int]) -> int:
+    """Scan partition count of a file source whose files have these
+    byte ``lengths`` — Spark's own split and packing
+    (FilePartition.maxSplitBytes and getFilePartitions), evaluated in
+    pure Python against the session's current conf. Every file adds
+    ``openCostInBytes`` to the bytes per core that size a split; each
+    file is cut into split-sized pieces; the pieces, largest first, are
+    packed into partitions, each piece charged its length plus the open
+    cost, and a partition closes when the next piece would overflow it.
+    A whole piece fills a partition by itself, so only the files' tails
+    are packed."""
     max_split = _size_conf(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
     )
     open_cost = _size_conf(
         spark.conf.get("spark.sql.files.openCostInBytes", "4194304b")
     )
-    core_bytes = (size + open_cost) // max(
+    core_bytes = sum(n + open_cost for n in lengths) // max(
         spark.sparkContext.defaultParallelism, 1
     )
     split = min(max_split, max(open_cost, core_bytes))
-    return max(1, -(-size // split))
+    parts = sum(n // split for n in lengths)
+    used = 0
+    for tail in sorted((n % split for n in lengths if n % split), reverse=True):
+        if used and used + tail > split:
+            parts += 1
+            used = 0
+        used += tail + open_cost
+    return max(1, parts + (1 if used else 0))
 
 
 def plan_scan_splits(df: DataFrame) -> int:
     """Scan partition count of ``df``'s widest file-scan leaf: the split
-    formula applied to the largest ``LogicalRelation`` leaf of the
-    optimized plan (the formula is non-decreasing in size, so that leaf
-    is the widest). A plan with no file-scan leaf counts as one split.
+    and packing rules applied to the files of every ``HadoopFsRelation``
+    leaf of the optimized plan, largest count wins. A plan with no
+    file-scan leaf counts as one split.
 
     Plan-time only — no RDD conversion, no job. The leaves survive any
     select/filter/join on top of the scan, so every derived frame gets
@@ -89,12 +101,20 @@ def plan_scan_splits(df: DataFrame) -> int:
     not the sum of its inputs' partitions: a single-split scan unioned
     with a few generated rows is still one split of real work."""
     leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
-    size = 0
+    splits = 1
     while leaves.hasNext():
         leaf = leaves.next()
-        if leaf.getClass().getSimpleName() == "LogicalRelation":
-            size = max(size, int(leaf.stats().sizeInBytes()))
-    return _scan_splits(df.sparkSession, size) if size else 1
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            continue
+        files = rel.location().allFiles().iterator()
+        lengths = []
+        while files.hasNext():
+            lengths.append(int(files.next().getLen()))
+        splits = max(splits, _scan_splits(df.sparkSession, lengths))
+    return splits
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

@@ -598,16 +598,9 @@ def ann_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction. Scan cost per query: |corpus|·nprobe/cells code bytes +
     {IVFPQ_CAND} full vectors — the multiplicative combination of the
     two prunings, vs either alone."""
-    return ivf_pq_search_df(load_table(spark, sf_dir, "embeddings"))
-
-
-def ivf_pq_search_df(emb: DataFrame) -> DataFrame:
-    """The IVF-PQ composite over any (vec_id, label, embedding)
-    relation — split out so tools/scale_probe.py can measure the
-    WHOLE composite's growth on synthetic corpora where the cell
-    count grows with the data (round-14, VERDICT r13 item 3)."""
     from quick_and_easy_vectordb_spark.operators.ann import pq_codebook, pq_encode
 
+    emb = load_table(spark, sf_dir, "embeddings")
     qlit = vector_literal(QUERY_VEC)
 
     # Coarse stage: top-nprobe cells by centroid distance.
@@ -3301,40 +3294,6 @@ def ann_lsh_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def spann_assignments(emb: DataFrame, query_vec: list[float]) -> DataFrame:
-    """The data-sized phase of ann_spann_multi_assign, extracted so
-    tools/scale_probe.py measures the registered plan itself: returns
-    one row per (vector, assigned cell) with the query distance, home
-    label, and the assigned-cell struct ``a``. Zero-shuffle apart from
-    the O(C*D) centroid build."""
-    cent = centroids_by_key(emb, "embedding", "label")
-    cl = cent.agg(
-        F.array_sort(F.collect_list(F.struct("key", "centroid"))).alias("cl")
-    )
-    dists = F.transform(
-        F.col("cl"),
-        lambda c: F.struct(
-            l2_distance(F.col("embedding"), c["centroid"]).alias("d"),
-            c["key"].alias("cell"),
-        ),
-    )
-    return emb.crossJoin(F.broadcast(cl)).select(
-        "vec_id",
-        l2_distance("embedding", query_vec).alias("l2_dist"),
-        F.array_sort(dists).alias("ds"),
-    ).select(
-        "vec_id",
-        "l2_dist",
-        F.col("ds")[0]["cell"].alias("home_label"),
-        F.explode(
-            F.filter(
-                F.col("ds"), lambda x: x["d"] <= F.col("ds")[0]["d"] * F.lit(1.25)
-            )
-        ).alias("a"),
-    )
-
-
-
 _SPANN_EPS = "1.25e0"  # distance-ratio closure bound (1 + eps), exact in binary
 
 
@@ -3409,7 +3368,32 @@ def ann_spann_multi_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     straddle a rounding boundary."""
     emb = load_table(spark, sf_dir, "embeddings")
     cent = centroids_by_key(emb, "embedding", "label")
-    assigned = spann_assignments(emb, QUERY_VEC)
+    # The data-sized phase: one row per (vector, assigned cell) with the
+    # query distance, home label and the assigned-cell struct ``a``.
+    cl = cent.agg(
+        F.array_sort(F.collect_list(F.struct("key", "centroid"))).alias("cl")
+    )
+    dists = F.transform(
+        F.col("cl"),
+        lambda c: F.struct(
+            l2_distance(F.col("embedding"), c["centroid"]).alias("d"),
+            c["key"].alias("cell"),
+        ),
+    )
+    assigned = emb.crossJoin(F.broadcast(cl)).select(
+        "vec_id",
+        l2_distance("embedding", QUERY_VEC).alias("l2_dist"),
+        F.array_sort(dists).alias("ds"),
+    ).select(
+        "vec_id",
+        "l2_dist",
+        F.col("ds")[0]["cell"].alias("home_label"),
+        F.explode(
+            F.filter(
+                F.col("ds"), lambda x: x["d"] <= F.col("ds")[0]["d"] * F.lit(1.25)
+            )
+        ).alias("a"),
+    )
     best = (
         cent.select(
             "key", l2_distance("centroid", QUERY_VEC).alias("qd")

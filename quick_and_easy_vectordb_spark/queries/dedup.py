@@ -1235,18 +1235,10 @@ def dedup_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round10_plans.py (synthetic mega-bucket: divert
     fires, no expansion; plan shows single window exchange)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return band_tuning_table(docs, prefilter=_corpus_is_big(sf_dir))
-
-
-def band_tuning_table(docs: DataFrame, prefilter: bool = True) -> DataFrame:
-    """The whole multi-config tuning table over any (doc_id, text)
-    relation — split out so tools/scale_probe.py can measure the
-    one-shuffle multi-config claim at 30x (round-14, VERDICT r13
-    item 3). ``prefilter`` is the same size-based
-    jaccard_pairs(prefilter=...) choice the sibling queries make via
-    ``_corpus_is_big`` (round-14: the semi-filter only amortizes when
-    the corpus shingle table dwarfs the candidate materialization)."""
-    spark = docs.sparkSession
+    # The same size-based jaccard_pairs(prefilter=...) choice the sibling
+    # queries make (round-14: the semi-filter only amortizes when the
+    # corpus shingle table dwarfs the candidate materialization).
+    prefilter = _corpus_is_big(sf_dir)
     # Fused signature + shingle-array aggregation (round-14): sigs and
     # the verify join's docsets come out of ONE groupBy(id) exchange
     # and ONE persist (the materialization point ahead of the band

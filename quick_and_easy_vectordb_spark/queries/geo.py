@@ -3549,14 +3549,13 @@ def _str_rect_leaves(
     rides the same O(bands)-row offsets table as a broadcast scalar
     attach.
 
-    SIZING RULE (probe-measured, tools/scale_probe.py round 13): the
-    defaults (8 slices, 12500-unit bands) fit the small oracle
-    fixtures; at scale BOTH must follow STR's own rule
-    S = ceil(sqrt(N/B)) with band_width ~ extent/(4S), or the
-    per-slice/per-band rank windows degenerate into a handful of
-    multi-million-row partitions — the first probe run measured 71x
-    wall at 30x data with fixed counts vs at-worst-linear after
-    scaling them."""
+    SIZING RULE (measured in round 13): the defaults (8 slices,
+    12500-unit bands) fit the small oracle fixtures; at scale BOTH
+    must follow STR's own rule S = ceil(sqrt(N/B)) with band_width ~
+    extent/(4S), or the per-slice/per-band rank windows degenerate
+    into a handful of multi-million-row partitions — a 30x synthetic
+    rectangle set measured 71x wall with fixed counts vs
+    at-worst-linear after scaling them."""
     part = load_table(spark, sf_dir, "part")
     k = F.col("p_partkey")
     r = part.select(

@@ -2309,13 +2309,6 @@ def udf_bloom_bitwise_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", F.md5("text").alias("fp")
     )
-    return bloom_pair_audit_df(d, spark)
-
-
-def bloom_pair_audit_df(d: DataFrame, spark: SparkSession) -> DataFrame:
-    """udf_bloom_bitwise_udaf's whole plan over an arbitrary
-    fingerprint table (source, doc_id, fp) — extracted so
-    tools/scale_probe.py measures the registered plan itself."""
     masks = d.select(
         "source",
         "doc_id",

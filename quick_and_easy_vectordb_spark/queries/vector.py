@@ -3206,14 +3206,7 @@ def vdb_topk_gemm_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     but not bitwise-stable; see SURVEY §5's exactness discipline).
     Embedding magnitudes are < 0.53, so |q| <= 4303 < 2^13, products
     < 2^26, and 64-term sums < 2^32 — no overflow headroom concerns."""
-    return gemm_topk_df(load_table(spark, sf_dir, "embeddings"))
-
-
-def gemm_topk_df(emb: DataFrame) -> DataFrame:
-    """vdb_topk_gemm_blocked's whole plan over an arbitrary embeddings
-    DataFrame (vec_id, embedding) — extracted so tools/scale_probe.py
-    measures the registered plan itself."""
-    emb = emb.select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr(
             f"transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"

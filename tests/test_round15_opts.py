@@ -4,8 +4,9 @@ Each test pins an equivalence the round-15 rewrites rely on:
 
 - util.plan_scan_splits (the split count ensure_parallelism derives
   from the plan's file-scan leaves, with no RDD conversion) must agree
-  with Spark's actual scan partitioning for every fixture table and
-  for frames derived from a scan;
+  with Spark's actual scan partitioning for every fixture table, for
+  every table of a staged K-copy tier dir and for frames derived from
+  a scan;
 - ensure_parallelism must fan out a single-split scan and leave an
   already-parallel one alone;
 - text_fingerprint's min-md5 FOLD must equal the round-14
@@ -40,12 +41,28 @@ SF_DIR = "/root/testdata/sf0.01"
 
 def test_plan_scan_splits_matches_actual(spark):
     import os
+    import shutil
+
+    from bench import stage_tier_dir
 
     for name in TABLES:
         if not os.path.isfile(os.path.join(SF_DIR, f"{name}.parquet")):
             continue
         df = load_table(spark, SF_DIR, name)
         assert plan_scan_splits(df) == df.rdd.getNumPartitions(), name
+    # A tier dir's tables are directories of several part files: the
+    # count follows Spark's packing over the files, not the single-file
+    # formula applied to their total size.
+    for k in (2, 10):
+        tier_dir = stage_tier_dir(spark, SF_DIR, k)
+        try:
+            for name in TABLES:
+                df = load_table(spark, tier_dir, name)
+                assert plan_scan_splits(df) == df.rdd.getNumPartitions(), (
+                    k, name
+                )
+        finally:
+            shutil.rmtree(tier_dir, ignore_errors=True)
     li = load_table(spark, SF_DIR, "lineitem")
     part = load_table(spark, SF_DIR, "part")
     derived = {
